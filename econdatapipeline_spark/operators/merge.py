@@ -1,27 +1,40 @@
-"""smart_update: upsert with revision audit, as declarative joins.
+"""smart_update: upsert with revision audit, as one full outer join.
 
 The reference's central operator (reference: core_local/
 azure_data_tracker.py:54-165) streams incoming rows against an
 in-memory hash map of the full existing table:
 
-- key absent                     -> INSERT               (left-anti join)
-- key present, |new-old| > tol   -> UPDATE + revision row (inner join + filter)
+- key absent                     -> INSERT
+- key present, |new-old| > tol   -> UPDATE + one revision row per changed field
 - otherwise                      -> no-op
 - value that fails float()       -> change silently skipped (:128-130)
 
-Here the same contract is two joins over DataFrames. No join strategy
-is forced: Catalyst's 64 MB auto-broadcast threshold (session.py) plus
-AQE pick broadcast-hash for the reference's O(10^2-10^3)-row batches
-and fall back to sort-merge when the incoming side is large — the
-correct 100 TB behavior. Callers that KNOW the batch is tiny can pass
-``broadcast=True`` to pin the hint; an unconditional hint would build
-a 100 GB batch as a hash relation on every executor (OOM), so it is
-opt-in, never the default. The existing side is only ever scanned,
+Here the whole contract is ONE full outer join of incoming and
+existing on the key. The join yields one tagged frame: every row is
+marked ``new`` (no existing side), ``update`` (at least one field
+changed beyond the tolerance) or ``keep`` (everything else, including
+existing keys the batch does not mention), and carries its number of
+changed fields. ``merged``, ``inserts``, ``updates`` and ``revisions``
+are projections or filters of that frame; ``revisions`` unpivots the
+updated rows in one ``stack`` pass. Writing ``merged`` therefore runs
+the join once, and the {new, updated, revisions} aggregates
+(``count_exprs``) ride that same job as an Observation
+(``MergeResult.observed_merged``, used by ``Warehouse.apply_merge``).
+
+No join strategy is forced, and none can be: a full outer join is
+never planned as a broadcast-hash join, so a 100 GB incoming batch is
+never built as a hash relation on every executor. Both sides are
+shuffled once on the key; the existing side is only ever scanned,
 never collected.
 
 Null semantics match the reference's float() guard: a comparison where
 either side is NULL is not "changed" (float(None) raises -> skipped),
-so ``abs(s - t) > tol`` being NULL-falsy is exactly right.
+so the changed flag is ``abs(s - t) > tol`` with NULL read as false.
+
+Duplicate keys within one side are outside the contract (the
+reference's hash map holds one row per key). Every joined pair is
+tagged on its own, so each duplicate is inserted, kept or updated
+independently; ``tests/test_merge.py`` pins that behaviour.
 
 Determinism: one ``run_ts`` literal per batch stamps every revision row
 (the reference takes per-row utcnow() at :119,125, nondeterministic
@@ -33,10 +46,27 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import datetime
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 DEFAULT_TOLERANCE = 0.001  # reference: azure_data_tracker.py:113
+
+TAG = "__tag"  # 'new' | 'update' | 'keep'
+N_CHANGED = "__n_changed"  # fields changed beyond the tolerance
+
+
+def count_exprs() -> list[Column]:
+    """The {new, updated, revisions} aggregates over a tagged frame.
+
+    Mirrors the reference's result dict (azure_data_tracker.py:136-165).
+    Defined once: ``MergeResult.counts`` runs them as an aggregate and
+    ``MergeResult.observed_merged`` hangs them on the table write.
+    """
+    return [
+        F.count_if(F.col(TAG) == "new").alias("new"),
+        F.count_if(F.col(TAG) == "update").alias("updated"),
+        F.coalesce(F.sum(N_CHANGED), F.lit(0)).alias("revisions"),
+    ]
 
 
 @dataclass
@@ -47,22 +77,23 @@ class MergeResult:
     inserts: DataFrame  # incoming rows with unseen keys
     updates: DataFrame  # incoming rows that changed an existing key
     revisions: DataFrame  # one row per changed (key, value_field)
+    tagged: DataFrame  # the joined frame all four are projected from
 
     def counts(self) -> dict[str, int]:
-        """{'new': n, 'updated': m, 'revisions': k} — triggers execution.
+        """{'new': n, 'updated': m, 'revisions': k} — one aggregate query."""
+        row = self.tagged.agg(*count_exprs()).first()
+        return {k: int(v) for k, v in row.asDict().items()}
 
-        Mirrors the reference's result dict (azure_data_tracker.py:136-165).
-        One Spark job, not three: the branches are unioned under a tag
-        and counted in a single aggregate, so the shared scans and the
-        broadcast of the incoming batch execute once.
+    def observed_merged(self) -> tuple[DataFrame, Observation]:
+        """``merged`` plus an Observation of its counts.
+
+        The Observation fills when the returned frame executes (e.g. is
+        written); ``{k: int(v) for k, v in obs.get.items()}`` then
+        equals ``counts()`` without a job of its own.
         """
-        u = (
-            self.inserts.select(F.lit("new").alias("__branch"))
-            .unionAll(self.updates.select(F.lit("updated").alias("__branch")))
-            .unionAll(self.revisions.select(F.lit("revisions").alias("__branch")))
-        )
-        got = {r["__branch"]: r["n"] for r in u.groupBy("__branch").agg(F.count(F.lit(1)).alias("n")).collect()}
-        return {k: int(got.get(k, 0)) for k in ("new", "updated", "revisions")}
+        obs = Observation()
+        merged = self.tagged.observe(obs, *count_exprs()).select(*self.merged.columns)
+        return merged, obs
 
 
 def smart_update(
@@ -74,7 +105,6 @@ def smart_update(
     *,
     run_ts: datetime,
     tolerance: float = DEFAULT_TOLERANCE,
-    broadcast: bool | None = None,
 ) -> MergeResult:
     """MERGE incoming into existing, capturing revisions for changed values.
 
@@ -86,12 +116,6 @@ def smart_update(
 
     plus an INSERT INTO datarevisions SELECT ... per changed value field.
 
-    ``broadcast``: None (default) lets Catalyst/AQE choose the join
-    strategy from size estimates; True pins a broadcast hint on the
-    incoming side (only safe when the caller knows the batch is small);
-    False suppresses any hint from this function (Catalyst may still
-    auto-broadcast under its threshold).
-
     ``run_ts`` is REQUIRED and KEYWORD-ONLY (a legacy positional
     caller passing tolerance sixth would otherwise silently bind a
     float to run_ts — Spark casts it to 1970-era timestamps without
@@ -102,56 +126,76 @@ def smart_update(
     defaulted utcnow() here would quietly re-introduce that (SURVEY §7)
     and datetime.utcnow() is deprecated besides.
     """
-    out_cols = key_cols + value_cols
-    src = incoming.select(*out_cols)
-    if broadcast:
-        src = F.broadcast(src)
-    src = src.alias("s")
-    tgt = existing.select(*out_cols).alias("t")
-
-    inserts = src.join(tgt, on=key_cols, how="left_anti")
-
-    pairs = src.join(tgt, on=key_cols, how="inner").select(
-        *[F.col(f"s.{k}").alias(k) for k in key_cols],
-        *[F.col(f"s.{c}").alias(f"new_{c}") for c in value_cols],
-        *[F.col(f"t.{c}").alias(f"old_{c}") for c in value_cols],
+    new = {c: F.col(f"__new_{c}") for c in value_cols}
+    old = {c: F.col(f"__old_{c}") for c in value_cols}
+    chg = {c: F.col(f"__chg_{c}") for c in value_cols}
+    src = incoming.select(*key_cols, *[F.col(c).alias(f"__new_{c}") for c in value_cols])
+    tgt = existing.select(
+        *key_cols,
+        *[F.col(c).alias(f"__old_{c}") for c in value_cols],
+        F.lit(True).alias("__in_existing"),
     )
-    changed_any = None
-    for c in value_cols:
-        cond = F.abs(F.col(f"new_{c}") - F.col(f"old_{c}")) > F.lit(tolerance)
-        changed_any = cond if changed_any is None else (changed_any | cond)
-    changed = pairs.filter(changed_any)
-
-    updates = changed.select(
-        *key_cols, *[F.col(f"new_{c}").alias(c) for c in value_cols]
-    )
-
-    # One revision row per changed field: unpivot the changed pairs.
-    date_key = key_cols[-1]  # (dataset-implicit, date) — date is the row key
-    rev_parts = []
-    for c in value_cols:
-        rev_parts.append(
-            changed.filter(
-                F.abs(F.col(f"new_{c}") - F.col(f"old_{c}")) > F.lit(tolerance)
-            ).select(
-                F.lit(dataset).alias("dataset"),
-                # String key: ISO 'yyyy-MM-dd' for date keys (matching the
-                # reference's stored format), str(key) otherwise.
-                F.col(date_key).cast("string").alias("data_date"),
-                F.lit(c).alias("value_field"),
-                F.col(f"old_{c}").cast("double").alias("old_value"),
-                F.col(f"new_{c}").cast("double").alias("new_value"),
-                F.lit(run_ts).cast("timestamp").alias("revision_date"),
+    joined = src.join(tgt, on=key_cols, how="full_outer").select(
+        *key_cols,
+        *new.values(),
+        *old.values(),
+        "__in_existing",
+        *[
+            F.coalesce(F.abs(new[c] - old[c]) > F.lit(tolerance), F.lit(False)).alias(
+                f"__chg_{c}"
             )
+            for c in value_cols
+        ],
+    )
+    n_changed = sum((chg[c].cast("int") for c in value_cols), F.lit(0))
+    tagged = joined.withColumn(N_CHANGED, n_changed).withColumn(
+        TAG,
+        F.when(F.col("__in_existing").isNull(), "new")
+        .when(F.col(N_CHANGED) > 0, "update")
+        .otherwise("keep"),
+    )
+    # the post-merge values: existing unless the row is new or updated
+    is_keep = F.col(TAG) == "keep"
+    tagged = tagged.withColumns(
+        {c: F.when(is_keep, old[c]).otherwise(new[c]) for c in value_cols}
+    )
+
+    merged = tagged.select(*key_cols, *value_cols)
+    as_incoming = [*key_cols, *[new[c].alias(c) for c in value_cols]]
+    inserts = tagged.filter(F.col(TAG) == "new").select(*as_incoming)
+    updated = tagged.filter(F.col(TAG) == "update")
+    updates = updated.select(*as_incoming)
+
+    # One revision row per changed field: unpivot the updated rows in
+    # one pass, then keep the changed fields. Old/new are cast before
+    # the stack (its columns need one type per position).
+    date_key = key_cols[-1]  # (dataset-implicit, date) — date is the row key
+    unpivot = F.stack(
+        F.lit(len(value_cols)),
+        *[
+            e
+            for c in value_cols
+            for e in (F.lit(c), chg[c], old[c].cast("double"), new[c].cast("double"))
+        ],
+    ).alias("value_field", "__chg", "old_value", "new_value")
+    revisions = (
+        updated.select(
+            # String key: ISO 'yyyy-MM-dd' for date keys (matching the
+            # reference's stored format), str(key) otherwise.
+            F.col(date_key).cast("string").alias("data_date"),
+            unpivot,
         )
-    revisions = rev_parts[0]
-    for part in rev_parts[1:]:
-        revisions = revisions.unionByName(part)
+        .filter(F.col("__chg"))
+        .select(
+            F.lit(dataset).alias("dataset"),
+            "data_date",
+            "value_field",
+            "old_value",
+            "new_value",
+            F.lit(run_ts).cast("timestamp").alias("revision_date"),
+        )
+    )
 
-    upd_keys = updates.select(*key_cols)
-    if broadcast:
-        upd_keys = F.broadcast(upd_keys)
-    untouched = tgt.join(upd_keys, key_cols, "left_anti")
-    merged = untouched.unionByName(updates).unionByName(inserts)
-
-    return MergeResult(merged=merged, inserts=inserts, updates=updates, revisions=revisions)
+    return MergeResult(
+        merged=merged, inserts=inserts, updates=updates, revisions=revisions, tagged=tagged
+    )

@@ -35,6 +35,9 @@ from econdatapipeline_spark.registry import (
     REVISIONS_TABLE,
 )
 
+# one watermark partition file: scrapermetadata/dataset=<name>/*.parquet
+_WATERMARK_SCHEMA = "last_run timestamp"
+
 
 class Warehouse:
     """Filesystem-backed Parquet catalog (local dir, HDFS, or object store)."""
@@ -100,8 +103,15 @@ class Warehouse:
         return r.parquet(self.path(table))
 
     def read_or_empty(self, table: str, schema) -> DataFrame:
+        """Read a table with the caller's schema, or an empty frame of it.
+
+        The known schema goes to the reader, so no footer-inference job
+        runs. A stored column whose type differs from ``schema`` still
+        fails loudly: the scan raises (Spark refuses the conversion)
+        instead of reading the column back as NULL.
+        """
         if self.exists(table):
-            return self.read(table)
+            return self.spark.read.schema(schema).parquet(self.path(table))
         return self.spark.createDataFrame([], schema)
 
     def point_lookup(self, table: str, date) -> DataFrame:
@@ -131,8 +141,18 @@ class Warehouse:
         data (e.g. a streaming batch-id marker). Names must start with
         ``_`` so Spark's parquet reader ignores them.
         """
-        final = self.path(table)
-        staging = final + "__staging"
+        self._swap_in(self._stage(df, table, partition_cols, extra_files), table)
+
+    def _stage(
+        self,
+        df: DataFrame,
+        table: str,
+        partition_cols: list[str] | None,
+        extra_files: dict[str, bytes] | None,
+    ) -> str:
+        """Write ``df`` (plus ``extra_files``) to the table's staging
+        dir and return its path; the live table is not touched."""
+        staging = self.path(table) + "__staging"
         writer = df.write.mode("overwrite")
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
@@ -151,6 +171,11 @@ class Warehouse:
             # a retry starts clean.
             shutil.rmtree(staging, ignore_errors=True)
             raise
+        return staging
+
+    def _swap_in(self, staging: str, table: str) -> None:
+        """Replace the live table with a staged one (metadata renames)."""
+        final = self.path(table)
         if os.path.isdir(final):
             # exists() and not bare isdir: initialize() pre-creates
             # empty table dirs — an empty placeholder is not a version
@@ -406,18 +431,32 @@ class Warehouse:
     def apply_merge(self, result, table: str,
                     partition_cols: list[str] | None = None,
                     extra_files: dict[str, bytes] | None = None) -> dict[str, int]:
-        """Commit one smart_update batch: revisions, then table swap.
+        """Commit one smart_update batch: stage -> observe -> append -> swap.
 
-        Ordering matters: every DataFrame in ``result`` is a lazy plan
-        over the *current* table files, so counts and the revision
-        append must execute before the directory swap invalidates them
-        (Spark caches the file listing per path; after the swap the old
-        part files are gone). Returns the reference-shaped counts dict.
+        1. Stage: write ``merged`` to the staging dir. An Observation on
+           the tagged frame collects {new, updated, revisions} inside
+           that same write, so counting runs no job of its own.
+        2. Append the revision rows, only if the observed ``revisions``
+           count is above 0. Every DataFrame in ``result`` is a lazy
+           plan over the *current* table files, which are still live
+           here (Spark caches the file listing per path; after the swap
+           the old part files are gone).
+        3. Swap the staging dir in.
+
+        A failure in 1 appends no revisions; a failure in 1 or 2
+        removes the staging dir and leaves the table as it was.
+        Returns the reference-shaped counts dict.
         """
-        counts = result.counts()
-        if counts["revisions"]:
-            self.append_revisions(result.revisions)
-        self.write_dataset(result.merged, table, partition_cols, extra_files)
+        merged, obs = result.observed_merged()
+        staging = self._stage(merged, table, partition_cols, extra_files)
+        try:
+            counts = {k: int(v) for k, v in obs.get.items()}
+            if counts["revisions"]:
+                self.append_revisions(result.revisions)
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
+        self._swap_in(staging, table)
         return counts
 
     # -- raw byte blobs (== upload/download/list/delete_blob, -----------
@@ -550,7 +589,7 @@ class Warehouse:
             self.path(METADATA_TABLE),
             f"_staging-{dataset}-{uuid.uuid4().hex}",
         )
-        df = self.spark.createDataFrame([(ts,)], "last_run timestamp")
+        df = self.spark.createDataFrame([(ts,)], _WATERMARK_SCHEMA)
         try:
             df.coalesce(1).write.mode("overwrite").parquet(staging)
         except BaseException:
@@ -568,7 +607,8 @@ class Warehouse:
         p = self._watermark_path(dataset)
         if not os.path.isdir(p):
             return None
-        row = self.spark.read.parquet(p).select("last_run").limit(1).collect()
+        # the known schema: no footer-inference job
+        row = self.spark.read.schema(_WATERMARK_SCHEMA).parquet(p).limit(1).collect()
         return row[0][0] if row else None
 
     def watermarks(self) -> DataFrame:

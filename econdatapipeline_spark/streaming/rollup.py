@@ -94,11 +94,7 @@ def refresh_rollup(
         ).dropDuplicates(["bucket_key"]),
         "bucket_key",
     )
-    counts = {
-        "new": res.inserts.count(),
-        "updated": res.updates.count(),
-        "revisions": res.revisions.count(),
-    }
+    counts = res.counts()
     if counts["revisions"]:
         wh.append_revisions(res.revisions)
     wh.write_dataset(merged, table, extra_files=extra_files)

@@ -8,10 +8,15 @@ multi-field cases FIXTURES.md A5 calls out.
 from __future__ import annotations
 
 import datetime as dt
+import os
+import random
+from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F  # noqa: F401
 
-from econdatapipeline_spark.operators.merge import smart_update
+from econdatapipeline_spark.operators.merge import DEFAULT_TOLERANCE, smart_update
+from econdatapipeline_spark.sources.warehouse import Warehouse
 
 RUN_TS = dt.datetime(2025, 6, 1, 12, 0, 0)
 
@@ -147,3 +152,283 @@ def test_failed_write_leaves_table_intact_and_no_staging(spark, tmp_path):
 
     assert sorted(r["id"] for r in wh.read("t").collect()) == before
     assert not os.path.isdir(wh.path("t") + "__staging")
+
+
+# -- twin test: smart_update vs a plain-Python model of the contract ------
+
+# deltas around the tolerance: exactly equal, just inside, on the
+# boundary (IEEE decides; the model and Spark use the same doubles),
+# just outside, and far outside
+_DELTAS = (0.0, 0.0009, -0.0009, 0.001, 0.0011, -0.0011, 2.5)
+
+
+def _model(existing, incoming, cols, tol=DEFAULT_TOLERANCE):
+    """The reference contract on a dict: existing keys map to value
+    tuples, incoming rows are applied in order (keys unique per side)."""
+    ex = {r[0]: tuple(r[1:]) for r in existing}
+    merged = dict(ex)
+    inserts, updates, revisions = [], [], []
+    for key, *new in incoming:
+        new = tuple(new)
+        if key not in ex:
+            inserts.append((key, *new))
+            merged[key] = new
+            continue
+        changed = [
+            (c, o, n) for c, o, n in zip(cols, ex[key], new)
+            if o is not None and n is not None and abs(n - o) > tol
+        ]
+        if changed:
+            updates.append((key, *new))
+            merged[key] = new
+            revisions += [("ds", key.isoformat(), c, o, n, RUN_TS) for c, o, n in changed]
+    return {
+        "merged": Counter((k, *v) for k, v in merged.items()),
+        "inserts": Counter(inserts),
+        "updates": Counter(updates),
+        "revisions": Counter(revisions),
+    }
+
+
+def _seeded_batches(seed, n_cols):
+    """Existing rows, incoming rows: inserts, NULLs on either side and
+    deltas just inside / outside the tolerance, from one seed."""
+    rng = random.Random(seed)
+    keys = [dt.date(2020, 1, 1) + dt.timedelta(days=i) for i in range(40)]
+
+    def value():
+        return None if rng.random() < 0.1 else round(rng.uniform(-500, 500), 3)
+
+    existing = [(k, *[value() for _ in range(n_cols)]) for k in keys[:25]]
+    incoming = []
+    for row in rng.sample(existing, 18):
+        new = []
+        for old in row[1:]:
+            if rng.random() < 0.1:
+                new.append(None)
+            else:
+                base = old if old is not None else 1.0
+                new.append(base + rng.choice(_DELTAS))
+        incoming.append((row[0], *new))
+    incoming += [(k, *[value() for _ in range(n_cols)]) for k in keys[25:32]]
+    rng.shuffle(incoming)
+    return existing, incoming
+
+
+def _cols(n_cols):
+    return ("value",) if n_cols == 1 else ("tbond_rate", "erp_t12m", "expected_return")
+
+
+@pytest.mark.parametrize(
+    "seed,n_cols,shape",
+    [(1, 1, "seeded"), (2, 3, "seeded"), (3, 1, "seeded"), (4, 3, "seeded"),
+     (5, 3, "empty_existing"), (6, 1, "empty_incoming")],
+)
+def test_smart_update_matches_dict_model(spark, tmp_path, seed, n_cols, shape):
+    cols = _cols(n_cols)
+    existing, incoming = _seeded_batches(seed, n_cols)
+    if shape == "empty_existing":
+        existing = []
+    elif shape == "empty_incoming":
+        incoming = []
+    want = _model(existing, incoming, cols)
+
+    res = smart_update(
+        _df(spark, existing, cols), _df(spark, incoming, cols), ["date"], list(cols), "ds",
+        run_ts=RUN_TS,
+    )
+    for name, expected in want.items():
+        got = Counter(tuple(r) for r in getattr(res, name).collect())
+        assert got == expected, name
+    counts = res.counts()
+    assert counts == {
+        "new": sum(want["inserts"].values()),
+        "updated": sum(want["updates"].values()),
+        "revisions": sum(want["revisions"].values()),
+    }
+
+    # the committed path: counts observed on the table write == counts()
+    wh = Warehouse(spark, str(tmp_path))
+    if existing:
+        wh.write_dataset(_df(spark, existing, cols), "ds")
+    schema = _df(spark, [], cols).schema
+    committed = smart_update(
+        wh.read_or_empty("ds", schema), _df(spark, incoming, cols), ["date"], list(cols), "ds",
+        run_ts=RUN_TS,
+    )
+    assert committed.counts() == counts
+    assert wh.apply_merge(committed, "ds") == counts
+    assert Counter(tuple(r) for r in wh.read("ds").collect()) == want["merged"]
+    assert Counter(tuple(r) for r in wh.revisions().collect()) == want["revisions"]
+
+
+def test_duplicate_keys_are_tagged_per_pair(spark):
+    """Duplicate keys within one side are OUTSIDE the contract (the
+    reference's hash map holds one row per key). The behaviour is pinned
+    so a change is explicit: every joined pair is tagged on its own."""
+    d1, d2, d3 = dt.date(2025, 1, 1), dt.date(2025, 2, 1), dt.date(2025, 3, 1)
+    existing = _df(spark, [(d1, 1.0), (d3, 5.0), (d3, 6.0)])
+    incoming = _df(spark, [(d1, 2.0), (d1, 1.0), (d2, 7.0), (d2, 8.0), (d3, 5.0)])
+    res = smart_update(existing, incoming, ["date"], ["value"], "ds", run_ts=RUN_TS)
+    # d1: one incoming copy changed (update), the other equal (keep, old
+    # value); d2: both copies insert; d3: 5.0 meets the existing 5.0
+    # (keep) and 6.0 (update to 5.0).
+    assert sorted(tuple(r) for r in res.merged.collect()) == [
+        (d1, 1.0), (d1, 2.0), (d2, 7.0), (d2, 8.0), (d3, 5.0), (d3, 5.0),
+    ]
+    assert res.counts() == {"new": 2, "updated": 2, "revisions": 2}
+    assert sorted((r["data_date"], r["old_value"], r["new_value"])
+                  for r in res.revisions.collect()) == [
+        ("2025-01-01", 1.0, 2.0), ("2025-03-01", 6.0, 5.0),
+    ]
+
+
+# -- the commit path: job budget and fault injection ----------------------
+
+def _refresh(spark, wh, rows, cols=("value",)):
+    schema = _df(spark, [], cols).schema
+    existing = wh.read_or_empty("ds", schema)
+    return smart_update(existing, _df(spark, rows, cols), ["date"], list(cols), "ds", run_ts=RUN_TS)
+
+
+def _executions_scanning(spark, group, table_path):
+    """SQL executions launched under ``group`` whose plan scans ``table_path``."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    job_ids = {str(j) for j in sc.statusTracker().getJobIdsForGroup(group)}
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    hits = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        jobs = set(e.jobs().keys().mkString(",").split(","))
+        if jobs & job_ids and f"[file:{table_path}]" in e.physicalPlanDescription():
+            hits.append(e.executionId())
+    return hits
+
+
+def _revision_files(wh):
+    p = wh.path("datarevisions")
+    return sorted(f for f in os.listdir(p) if f.endswith(".parquet")) if os.path.isdir(p) else []
+
+
+@pytest.mark.parametrize("changed", [True, False])
+def test_commit_scans_existing_at_most_twice(spark, tmp_path, changed):
+    """A 3-column refresh with revisions scans the existing table in at
+    most 2 SQL executions (staged write + revision append); one without
+    revisions in exactly 1 and appends nothing to the revision log."""
+    cols = ("tbond_rate", "erp_t12m", "expected_return")
+    wh = Warehouse(spark, str(tmp_path))
+    base = [(dt.date(2025, m, 1), 0.04, 0.05, 0.09) for m in range(1, 7)]
+    wh.write_dataset(_df(spark, base, cols), "ds")
+    delta = 0.01 if changed else 0.0
+    rows = [(d, a, b + delta, c) for d, a, b, c in base] + [(dt.date(2025, 7, 1), 0.1, 0.2, 0.3)]
+    files_before = _revision_files(wh)
+
+    sc = spark.sparkContext
+    group = f"commit-guard-{changed}"
+    meta = "spark.sql.maxMetadataStringLength"
+    old_meta = spark.conf.get(meta)
+    spark.conf.set(meta, "10000")  # full scan paths in the plan text
+    sc.setJobGroup(group, "commit guard")
+    try:
+        counts = wh.apply_merge(_refresh(spark, wh, rows, cols), "ds")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set(meta, old_meta)
+
+    scans = _executions_scanning(spark, group, wh.path("ds"))
+    if changed:
+        assert counts == {"new": 1, "updated": 6, "revisions": 6}
+        assert 1 <= len(scans) <= 2, scans
+        assert len(_revision_files(wh)) > len(files_before)
+    else:
+        assert counts == {"new": 1, "updated": 0, "revisions": 0}
+        assert len(scans) == 1, scans
+        assert _revision_files(wh) == files_before
+
+
+def _table_state(wh):
+    return sorted(tuple(r) for r in wh.read("ds").collect())
+
+
+def _revision_rows(wh):
+    return sorted(tuple(r) for r in wh.revisions().collect())
+
+
+def test_failed_revision_append_leaves_table_and_log(spark, tmp_path, monkeypatch):
+    wh = Warehouse(spark, str(tmp_path))
+    wh.write_dataset(_df(spark, [(dt.date(2025, 1, 1), 1.0)]), "ds")
+    wh.apply_merge(_refresh(spark, wh, [(dt.date(2025, 1, 1), 2.0)]), "ds")
+    table, log = _table_state(wh), _revision_rows(wh)
+
+    def boom(df, table):
+        raise OSError("injected: revision log unwritable")
+
+    monkeypatch.setattr(wh, "append", boom)
+    res = _refresh(spark, wh, [(dt.date(2025, 1, 1), 3.0), (dt.date(2025, 2, 1), 4.0)])
+    with pytest.raises(OSError, match="injected"):
+        wh.apply_merge(res, "ds")
+    monkeypatch.undo()
+
+    assert _table_state(wh) == table
+    assert _revision_rows(wh) == log
+    assert not os.path.isdir(wh.path("ds") + "__staging")
+
+
+def test_failed_staging_write_appends_no_revisions(spark, tmp_path, monkeypatch):
+    from pyspark.sql import DataFrameWriter
+
+    wh = Warehouse(spark, str(tmp_path))
+    wh.write_dataset(_df(spark, [(dt.date(2025, 1, 1), 1.0)]), "ds")
+    wh.apply_merge(_refresh(spark, wh, [(dt.date(2025, 1, 1), 2.0)]), "ds")
+    table, log = _table_state(wh), _revision_rows(wh)
+    real_parquet = DataFrameWriter.parquet
+
+    def failing_parquet(self, path, *args, **kwargs):
+        if path.endswith("__staging"):
+            os.makedirs(path, exist_ok=True)  # a half-written staging dir
+            raise OSError("injected: staging write failed")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    res = _refresh(spark, wh, [(dt.date(2025, 1, 1), 3.0)])
+    with pytest.raises(OSError, match="injected"):
+        wh.apply_merge(res, "ds")
+    monkeypatch.undo()
+
+    assert _table_state(wh) == table
+    assert _revision_rows(wh) == log
+    assert not os.path.isdir(wh.path("ds") + "__staging")
+
+
+# -- reads with the caller's schema --------------------------------------
+
+def test_known_schema_reads_launch_no_inference_job(spark, tmp_path):
+    wh = Warehouse(spark, str(tmp_path))
+    wh.write_dataset(_df(spark, [(dt.date(2025, 1, 1), 1.0)]), "ds")
+    wh.update_last_run("ds", RUN_TS)
+    sc = spark.sparkContext
+
+    def jobs_in(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    df, n_jobs = jobs_in("read-or-empty", lambda: wh.read_or_empty("ds", _df(spark, []).schema))
+    assert n_jobs == 0
+    assert [tuple(r) for r in df.collect()] == [(dt.date(2025, 1, 1), 1.0)]
+    last, n_jobs = jobs_in("get-last-run", lambda: wh.get_last_run("ds"))
+    assert last == RUN_TS and n_jobs == 1  # the point read itself, no inference
+
+
+def test_read_or_empty_type_mismatch_fails_loudly(spark, tmp_path):
+    """A stored column whose type differs from the spec must raise, not
+    read back as NULL."""
+    wh = Warehouse(spark, str(tmp_path))
+    wh.write_dataset(spark.createDataFrame([(dt.date(2025, 1, 1), "1.5")], "date date, value string"), "ds")
+    with pytest.raises(Exception, match="(?i)parquet|convert|mismatch"):
+        wh.read_or_empty("ds", _df(spark, []).schema).collect()
