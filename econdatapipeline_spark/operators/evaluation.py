@@ -307,10 +307,10 @@ def decile_lift(
     (cum_gain), and at what multiple of random (lift)?"
 
     Scale shape: the roc_auc discipline end-to-end — one hash
-    aggregate reduces facts to DISTINCT scores, the distributed
-    two-pass ordered_cumsum assigns COUNT-based deciles
+    aggregate reduces facts to DISTINCT scores, the size-gated
+    ordered_cumsum assigns COUNT-based deciles
     (ceil(B * cum_n / N) on the descending ECDF — integer-exact, no
-    quantile interpolation, no unpartitioned data-sized window), and
+    quantile interpolation, no unpartitioned window past the gate), and
     the final cumulation runs on the B-row bucket relation (window
     bounded by the literal bucket count, the rbo k-row pattern).
     Everything is integer until the two final ratios per bucket row.
@@ -1306,17 +1306,16 @@ def msprt_monitor(
     Lambda (which overflows a double once evidence is overwhelming).
 
     Relational shape: one (period) hash collapse of the fact table
-    carrying decimal-exact per-arm (n, sum, sum-of-squares), the
-    size-gated ascending decimal cumsum (survival._asc_cumsum_dec) for
-    the running sums, then fixed-order double closed forms — all
-    oracle-replayable. The running-min window rides the periods-sized
-    relation (calendar-bounded by construction: sequential monitoring
-    is per-day/week/month, not per-row). Periods with n_t < 2,
+    carrying decimal-exact per-arm (n, sum, sum-of-squares), one
+    ascending window for the running sums and the running-min, then
+    fixed-order double closed forms — all oracle-replayable. The
+    windows ride the periods-sized relation, calendar-bounded by
+    construction (sequential monitoring is per-day/week/month — even
+    30 years of daily looks is ~11k rows), so the whole query is ONE
+    lazy job chain with no size gate. Periods with n_t < 2,
     n_c < 2, or zero pooled variance emit NULL ln_lam/p
     (never-fabricate); p_running skips NULL looks.
     """
-    from .survival import _asc_cumsum_dec  # noqa: PLC0415
-
     if tau <= 0:
         raise ValueError(f"tau must be > 0, got {tau}")
     vexpr = F.col(variant_col)
@@ -1357,16 +1356,15 @@ def msprt_monitor(
             )
         ).alias("qc"),
     )
-    cum = _asc_cumsum_dec(
-        per_t,
-        ["nt", "nc", "st", "sc", "qt", "qc"],
-        operand_type="decimal(31,12)",
-        offset_type="decimal(38,12)",
-        # the period collapse is calendar-bounded by construction
-        # (sequential monitoring is per-day/week/month — even 30 years
-        # of daily looks is ~11k rows), so skip the size-gate's eager
-        # checkpoint + count: the whole query is ONE lazy job chain
-        assume_small=True,
+    w_run = Window.orderBy(F.col("t").asc()).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    cum = per_t.select(
+        "*",
+        *[
+            F.sum(c).over(w_run).alias(f"s_{c}")
+            for c in ["nt", "nc", "st", "sc", "qt", "qc"]
+        ],
     )
     cnt = F.col("s_nt").cast("double")
     cnc = F.col("s_nc").cast("double")
@@ -1401,9 +1399,6 @@ def msprt_monitor(
         F.when(ok, F.round(ln_lam, 6) + F.lit(0.0)).alias("ln_lam"),
         F.when(ok, F.round(p, 6)).alias("p_always_valid"),
         F.when(ok, p).alias("__p_raw"),
-    )
-    w_run = Window.orderBy(F.col("t").asc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
     )
     return staged.withColumn(
         "p_running", F.round(F.min("__p_raw").over(w_run), 6)
@@ -2018,8 +2013,8 @@ def roc_auc_ci(
     both variance components reduce to sums over the distinct-score
     relation — the roc_auc posture exactly: a 100 TB corpus with a
     6-decimal score reduces to <= 2e6 rows before any window, and the
-    distributed two-pass ordered_cumsum (no single-partition window)
-    does the ranking. Each (V − AUC)² group term is
+    size-gated ordered_cumsum (distributed past its gate) does the
+    ranking. Each (V − AUC)² group term is
     decimal(28,12)-quantized before its order-free sum; the z
     quantile is the stdlib literal (the mde_report rule). NULL
     se/CI when either class has < 2 members (never-fabricate).

@@ -608,7 +608,7 @@ def waterfill_budget(
 
     Scale shape: one fact-sized hash aggregate collapses to the
     groups-sized relation; the ordered pass is ordered_cumsum's
-    distributed two-pass prefix sum (no unpartitioned window); the
+    size-gated prefix sum (distributed past its gate); the
     funded-side totals are a second groups-sized aggregate broadcast
     back. Products are decimal(38,0) — supply * n overflows a long at
     corpus scale.

@@ -650,8 +650,8 @@ def quantile_normalize(
     percent_rank).
 
     Shape: the per-group rank window is partitioned (distributed); the
-    corpus-wide rank uses ``ordered_cumsum``'s two-pass distributed
-    prefix count instead of a single-partition window, then a
+    corpus-wide rank uses ``ordered_cumsum``'s size-gated prefix count
+    (distributed past the gate), then a
     bins-sized broadcast join. Ranks are exact rationals, products of
     identical doubles, so bucket edges agree across engines (the
     percent_rank caveat in ORACLE_PARITY.md applies to hashing raw
@@ -666,9 +666,9 @@ def quantile_normalize(
     bucket = lambda pr: F.least(  # noqa: E731
         F.floor(pr * bins).cast("long"), F.lit(bins - 1)
     )
-    # corpus-wide percent_rank WITHOUT a single-partition window:
-    # rows keyed by the (value, id) sort struct get an exclusive
-    # distributed prefix count; pr = preceding / (n - 1) is exactly
+    # corpus-wide percent_rank as a size-gated prefix count (row count
+    # already known): rows keyed by the (value, id) sort struct get an
+    # exclusive prefix count; pr = preceding / (n - 1) is exactly
     # percent_rank's arithmetic since (value, id) is unique per row
     base = df.select(
         v.alias("__v"),
@@ -681,7 +681,9 @@ def quantile_normalize(
         if n_tot > 1
         else F.lit(0.0)
     )
-    corpus = ordered_cumsum(base, "__ord", ["__c"], exclusive=True).select(
+    corpus = ordered_cumsum(
+        base, "__ord", ["__c"], exclusive=True, n_rows=n_tot
+    ).select(
         "__v", bucket(pr).alias("bin")
     )
     ref = corpus.groupBy("bin").agg(
@@ -847,41 +849,75 @@ def ks_test(
     )
 
 
+# ordered_cumsum's size gate: at or below this many rows the prefix
+# sum is one lazy Window.orderBy select, above it the distributed
+# two-pass form. survival.cox_ph_multi's one-SQL Newton round reads it
+# too. Tests set it to -1 to force the distributed path.
+CUMSUM_GATE_ROWS = 100_000
+
+
 def ordered_cumsum(
     df: DataFrame,
     order_col: str,
     sum_cols: list[str],
     descending: bool = False,
     exclusive: bool = False,
-    num_partitions: int | None = None,
+    n_rows: int | None = None,
 ) -> DataFrame:
-    """Exact cumulative sums in global order WITHOUT a single-partition
-    window -> input columns + ``cum_<col>`` per requested column.
+    """Exact cumulative sums in global order -> input columns +
+    ``cum_<col>`` per requested column.
 
-    The scale-correct prefix-sum: Window.orderBy() with no partition
-    key funnels the whole relation through ONE task — harmless for a
-    dozen rows, a cluster-wide serialization point for millions. This
-    is the classic two-pass form instead:
+    Window.orderBy() with no partition key funnels the whole relation
+    through ONE task — harmless for a few hundred rows, a cluster-wide
+    serialization point for millions. So the function is size-gated:
 
-    1. ``repartitionByRange(order_col)`` + in-partition sort — equal
-       keys land in one partition, partitions tile the key order;
-    2. per-partition running sums via a window PARTITIONED BY the
-       physical partition id (parallel);
-    3. per-partition totals (|partitions| rows) collect to the driver,
-       turn into exclusive offsets, and broadcast-join back.
+    - at or below ``CUMSUM_GATE_ROWS`` rows: one lazy
+      ``select("*", sum(c) over Window.orderBy(...))`` — on a small
+      relation the two-pass machinery's fixed cost (shuffle, eager
+      checkpoint, offsets pass) is larger than the data work;
+    - above it, the classic two-pass form: ``repartitionByRange`` +
+      in-partition sort (equal keys land in one partition, partitions
+      tile the key order), per-partition running sums via a window
+      PARTITIONED BY the physical partition id, then per-partition
+      totals (|partitions| rows) turn into exclusive offsets that
+      broadcast-join back.
 
-    Sums must be exactly representable under addition (integer counts,
-    decimals) — the intended inputs are the count columns of ECDF/rank
-    machinery (roc_auc, ks_test, spearman_corr, gini_coefficient), for
-    which the result is bit-identical to the single-window form.
+    ``n_rows``: the relation's row count when the caller already knows
+    it; otherwise the function checkpoints ``df`` and counts it (two
+    driver actions) to decide the path.
+
+    Sum columns must be integer or decimal, exact under addition; then
+    both paths are bit-identical, including the result type: each
+    ``cum_<col>`` has the type of ``sum(col)`` (long for integers,
+    decimal(min(38, p+10), s) for decimal(p, s)). Offsets are sums of
+    the partition totals at the type Spark gives them (long, or
+    decimal(38, s) for the wide decimals) and are added to the
+    in-partition prefix at precision 37, so the distributed path never
+    loses scale; its domain is |prefix| < 10^(37-s).
     ``exclusive=True`` yields the sum over STRICTLY-preceding rows.
-    Ties: rows with equal keys are cumulated in partition-local sort
-    order, so pass a RELATION ALREADY REDUCED to distinct keys (as all
-    the rank/ECDF callers do) whenever per-row tie order would matter.
+    Ties: rows with equal keys are cumulated in an unspecified order,
+    so pass a RELATION ALREADY REDUCED to distinct keys (as all the
+    rank/ECDF/survival callers do) whenever per-row tie order would
+    matter.
     """
-    spark = df.sparkSession
-    n_parts = num_partitions or spark.sparkContext.defaultParallelism
+    from pyspark.sql import Window  # noqa: PLC0415
+    from pyspark.sql.types import DecimalType  # noqa: PLC0415
+
+    def running(w, prefix):
+        return [
+            F.coalesce(F.sum(c).over(w), F.lit(0)).alias(prefix + c)
+            for c in sum_cols
+        ]
+
     key = F.col(order_col).desc() if descending else F.col(order_col).asc()
+    upper = -1 if exclusive else Window.currentRow
+    if n_rows is None:
+        df = df.localCheckpoint(eager=True)
+        n_rows = df.count()
+    if n_rows <= CUMSUM_GATE_ROWS:
+        w = Window.orderBy(key).rowsBetween(Window.unboundedPreceding, upper)
+        return df.select("*", *running(w, "cum_"))
+    n_parts = df.sparkSession.sparkContext.defaultParallelism
     # localCheckpoint pins the range layout AND the partition ids: the
     # totals pass and the final pass must see the IDENTICAL physical
     # partitioning (AQE may re-coalesce a re-executed range shuffle
@@ -892,43 +928,38 @@ def ordered_cumsum(
         .withColumn("__pid", F.spark_partition_id())
         .localCheckpoint(eager=True)
     )
-    from pyspark.sql import Window  # noqa: PLC0415
+    # per-partition totals -> exclusive running offsets, summed by
+    # Spark at decimal precision (|partitions| rows, so the unkeyed
+    # window is tiny)
+    totals = part.groupBy("__pid").agg(*[F.sum(c).alias(c) for c in sum_cols])
+    types = {c: totals.schema[c].dataType for c in sum_cols}
+    before = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
+    offsets = totals.select("__pid", *running(before, "__off_"))
+
+    def plus(a, b, t):
+        # precision-37 operands keep the sum at precision 38: a wider
+        # pair would make Spark drop scale digits to fit
+        if isinstance(t, DecimalType):
+            op = DecimalType(37, t.scale)
+            return (a.cast(op) + b.cast(op)).cast(t)
+        return a + b
 
     w = Window.partitionBy("__pid").orderBy(key).rowsBetween(
-        Window.unboundedPreceding, -1 if exclusive else 0
+        Window.unboundedPreceding, upper
     )
-    local = part
-    for c in sum_cols:
-        local = local.withColumn(
-            f"cum_{c}", F.coalesce(F.sum(c).over(w), F.lit(0))
+    return (
+        part.select("*", *running(w, "cum_"))
+        .join(F.broadcast(offsets), "__pid")
+        .withColumns(
+            {
+                f"cum_{c}": plus(
+                    F.col(f"cum_{c}"), F.col(f"__off_{c}"), types[c]
+                )
+                for c in sum_cols
+            }
         )
-    totals = (
-        local.groupBy("__pid")
-        .agg(*[F.sum(c).alias(c) for c in sum_cols])
-        .collect()
+        .drop("__pid", *[f"__off_{c}" for c in sum_cols])
     )
-    offsets = {}
-    running = {c: 0 for c in sum_cols}
-    for row in sorted(totals, key=lambda r: r["__pid"]):
-        offsets[row["__pid"]] = dict(running)
-        for c in sum_cols:
-            running[c] += row[c] or 0
-    if offsets:
-        off_rows = [
-            tuple([pid] + [offsets[pid][c] for c in sum_cols])
-            for pid in offsets
-        ]
-        schema = ", ".join(
-            ["__pid int"] + [f"__off_{c} long" for c in sum_cols]
-        )
-        off_df = spark.createDataFrame(off_rows, schema)
-        local = local.join(F.broadcast(off_df), "__pid", "left")
-        for c in sum_cols:
-            local = local.withColumn(
-                f"cum_{c}",
-                F.col(f"cum_{c}") + F.coalesce(F.col(f"__off_{c}"), F.lit(0)),
-            ).drop(f"__off_{c}")
-    return local.drop("__pid")
 
 
 # Poisson(1) inverse-CDF thresholds: P(X <= k) for k = 0..6. Literal
@@ -1176,8 +1207,8 @@ def mann_whitney(
     quantized metric column bounds distinct values regardless of fact
     count). Grouped, the cumulative window is PARTITIONED by group —
     parallel across groups; ungrouped, the cumulation is the
-    distributed two-pass ``ordered_cumsum`` (never an unpartitioned
-    Window.orderBy). Determinism: U is accumulated in HALF-UNITS
+    size-gated ``ordered_cumsum`` (distributed past its gate).
+    Determinism: U is accumulated in HALF-UNITS
     (2U = 2*n_a*cum_b + n_a*n_b) so every per-row contribution is an
     exact integer; tie corrections are integer sums; floats appear only
     in the final one-row-per-group z/auc arithmetic.
@@ -1393,8 +1424,7 @@ def wilcoxon_signed(
     2^63 at corpus scale). z uses the normal approximation with the
     standard tie correction Σ(t³−t)/48, a deterministic double of
     exact integers. Relational shape: one groupBy(|d|) collapse, then
-    ``ordered_cumsum``'s two-pass prefix count — no unpartitioned
-    window on either path.
+    ``ordered_cumsum``'s size-gated prefix count.
     """
     # decimal(28,6): a (18,6) difference overflows (-> null -> silently
     # dropped pair) at |d| >= 1e12, well inside money-magnitude sums at
@@ -1910,8 +1940,8 @@ def kruskal_wallis(
     ranks are carried in HALF-UNITS (2·r̄ = 2·cum_before + t + 1 is an
     exact integer), so each group's doubled rank sum 2R_g is an exact
     decimal(38,0); floats appear only in the final one-row formula.
-    The cumulation over distinct values is the distributed two-pass
-    ordered_cumsum — never an unpartitioned window.
+    The cumulation over distinct values is the size-gated
+    ordered_cumsum (distributed past its gate).
     """
     v = F.col(value_col).cast("double")
     per_vg = df.groupBy(
@@ -1975,7 +2005,7 @@ def lorenz_curve(
     exactly linear across the group — no approximation).
 
     Scale shape: collapse to DISTINCT values with (count, value·count)
-    per group, the distributed two-pass ordered_cumsum, then a
+    per group, the size-gated ordered_cumsum, then a
     points-sized broadcast range-join picks each quantile's containing
     tie group. Nothing after the first aggregate exceeds
     distinct-values size; the output is points-sized.

@@ -28,119 +28,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import stats
+from .stats import ordered_cumsum
 
-def _risk_forward_cumsum(per_t, tot_col, stage2, small_threshold=100_000):
-    """One range shuffle serving BOTH survival cumulations ->
+
+def _risk_cumsums(per_t, tot_col, stage2):
+    """Both survival cumulations over the distinct-time relation ->
     stage2's frame + n_risk + exact cum_<c> longs.
 
-    The fused form of two ordered_cumsum calls (measured: each call is
-    ~0.9 s of fixed overhead at sf0.1 — shuffle + eager checkpoint +
-    offsets collect — on a times-sized relation where execution is
-    microseconds). The reverse at-risk count never needs a descending
-    pass: n_risk(t) = grand_total − ascending_inclusive_cum + tot(t).
-    So: range-partition ASCENDING once, checkpoint once (pins layout
-    AND partition ids, as in ordered_cumsum), derive n_risk from the
-    first in-partition prefix + offsets collect, let ``stage2`` build
-    the columns that DEPEND on n_risk, then run the second prefix on
-    the SAME pinned layout with a second (cheap, checkpointed-input)
-    offsets collect. Sums must be exact longs — callers pass
-    1e9-scaled decimal terms (the kaplan_meier rule).
-
-    SIZE GATE (VERDICT r6 #6): the two-pass machinery exists for the
-    second-resolution-duration regime where distinct times approach
-    subject count; a daily-resolution curve is a few hundred rows, and
-    the two-pass overhead tripled its local latency (0.54 -> 1.79 s at
-    sf0.1). The relation is checkpointed and counted ONCE: at or below
-    ``small_threshold`` distinct times both cumulations run as plain
-    single-partition windows — exact long sums, therefore
-    BIT-IDENTICAL values to the two-pass path (twin-path pytest) — and
-    above it the distributed path engages.
+    n_risk(t) is the descending inclusive cumsum of ``tot_col``;
+    ``stage2`` builds the columns that DEPEND on n_risk and names
+    them, and those cumulate ascending. Both are ordered_cumsum calls
+    sharing ONE checkpoint + count of ``per_t`` through ``n_rows``.
+    Sums must be exact longs — callers pass 1e9-scaled decimal terms
+    (the kaplan_meier rule).
     """
-    spark = per_t.sparkSession
     per_t = per_t.localCheckpoint(eager=True)
     n_times = per_t.count()
-    if n_times <= small_threshold:
-        w_desc = Window.orderBy(F.col("t").desc()).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        risk = per_t.withColumn("n_risk", F.sum(tot_col).over(w_desc))
-        df2, cum_cols = stage2(risk)
-        w_asc = Window.orderBy(F.col("t").asc()).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        out = df2
-        for c in cum_cols:
-            out = out.withColumn(
-                f"cum_{c}", F.coalesce(F.sum(c).over(w_asc), F.lit(0))
-            )
-        return out
-    n_parts = spark.sparkContext.defaultParallelism
-    part = (
-        per_t.repartitionByRange(n_parts, F.col("t").asc())
-        .sortWithinPartitions(F.col("t").asc())
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    w = Window.partitionBy("__pid").orderBy(F.col("t").asc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    local = part.withColumn(
-        "__ct", F.coalesce(F.sum(tot_col).over(w), F.lit(0))
-    )
-    totals = (
-        part.groupBy("__pid").agg(F.sum(tot_col).alias("s")).collect()
-    )
-    offs, run = {}, 0
-    for row in sorted(totals, key=lambda r: r["__pid"]):
-        offs[row["__pid"]] = run
-        run += row["s"] or 0
-    grand = run
-    if offs:
-        off_df = spark.createDataFrame(
-            [(p, o) for p, o in offs.items()], "__pid int, __off long"
-        )
-        local = (
-            local.join(F.broadcast(off_df), "__pid", "left")
-            .withColumn(
-                "__ct", F.col("__ct") + F.coalesce(F.col("__off"), F.lit(0))
-            )
-            .drop("__off")
-        )
-    risk = local.withColumn(
-        "n_risk", F.lit(grand) - F.col("__ct") + F.col(tot_col)
-    ).drop("__ct")
+    risk = ordered_cumsum(
+        per_t, "t", [tot_col], descending=True, n_rows=n_times
+    ).withColumnRenamed(f"cum_{tot_col}", "n_risk")
     df2, cum_cols = stage2(risk)
-    local2 = df2
-    for c in cum_cols:
-        local2 = local2.withColumn(
-            f"cum_{c}", F.coalesce(F.sum(c).over(w), F.lit(0))
-        )
-    totals2 = (
-        df2.groupBy("__pid").agg(*[F.sum(c).alias(c) for c in cum_cols])
-        .collect()
-    )
-    offs2 = {}
-    run2 = {c: 0 for c in cum_cols}
-    for row in sorted(totals2, key=lambda r: r["__pid"]):
-        offs2[row["__pid"]] = dict(run2)
-        for c in cum_cols:
-            run2[c] += row[c] or 0
-    if offs2:
-        off_rows = [
-            tuple([pid] + [offs2[pid][c] for c in cum_cols])
-            for pid in offs2
-        ]
-        schema = ", ".join(
-            ["__pid int"] + [f"__o_{c} long" for c in cum_cols]
-        )
-        off2_df = spark.createDataFrame(off_rows, schema)
-        local2 = local2.join(F.broadcast(off2_df), "__pid", "left")
-        for c in cum_cols:
-            local2 = local2.withColumn(
-                f"cum_{c}",
-                F.col(f"cum_{c}") + F.coalesce(F.col(f"__o_{c}"), F.lit(0)),
-            ).drop(f"__o_{c}")
-    return local2.drop("__pid")
+    return ordered_cumsum(df2, "t", cum_cols, n_rows=n_times)
 
 
 def kaplan_meier(
@@ -168,18 +77,15 @@ def kaplan_meier(
             F.sum(F.lit(1) - F.col("e")).cast("long").alias("n_censored"),
         )
     )
-    # at risk at t = everyone whose duration >= t. Both cumulations
-    # ride ONE distributed range layout (no unpartitioned
-    # Window.orderBy — the mann_whitney discipline applied here): the
-    # curve relation is times-sized by contract, but a
-    # second-resolution duration column makes distinct times ~subject
-    # count, and the prefix sum must not funnel that through one task.
-    # The fused _risk_forward_cumsum derives the reverse at-risk count
-    # from the grand total minus the ascending prefix, then cumulates
-    # the decimal(18,9) ln(1 - d/n) terms as 1e9-scaled exact longs on
-    # the same pinned layout — the decimal value (and therefore the
-    # double handed to exp, and the rounded survival) is bit-identical
-    # to a windowed decimal sum.
+    # at risk at t = everyone whose duration >= t: a descending
+    # cumsum. Both cumulations are size-gated ordered_cumsum calls
+    # (_risk_cumsums): the curve relation is times-sized by contract,
+    # but a second-resolution duration column makes distinct times
+    # ~subject count, and past the gate the prefix sum must not funnel
+    # that through one task. The decimal(18,9) ln(1 - d/n) terms
+    # cumulate as 1e9-scaled exact longs — the decimal value (and
+    # therefore the double handed to exp, and the rounded survival) is
+    # bit-identical to a windowed decimal sum on either path.
     staged = per_t.withColumn(
         "tot", (F.col("n_events") + F.col("n_censored")).cast("long")
     )
@@ -203,7 +109,7 @@ def kaplan_meier(
             ["lnq", "dead"],
         )
 
-    cum = _risk_forward_cumsum(staged, "tot", stage2)
+    cum = _risk_cumsums(staged, "tot", stage2)
     # cum_lnq / 1e9 in double: exact for |cum_lnq| < 2^53, i.e. for
     # every |ln S| < ~9e6 — far past where exp underflows to 0.0, so
     # the rounded survival is identical in all regimes.
@@ -239,11 +145,10 @@ def nelson_aalen(
     interest (exp(-H) is also a serviceable survival estimate with
     better small-risk-set behavior than the product form). Shares
     kaplan_meier's relational shape verbatim: ONE groupBy(duration)
-    collapse, then both cumulations on the fused single-shuffle
-    _risk_forward_cumsum — the reverse at-risk count from the grand
-    total minus the ascending prefix, the forward hazard sum as
-    1e9-scaled decimal(18,9) increments carried as exact longs, so
-    the rounded output is engine-portable.
+    collapse, then both cumulations on _risk_cumsums — the reverse
+    at-risk count, the forward hazard sum as 1e9-scaled decimal(18,9)
+    increments carried as exact longs, so the rounded output is
+    engine-portable.
     """
     per_t = (
         df.select(
@@ -268,7 +173,7 @@ def nelson_aalen(
         ).cast("long")
         return risk.withColumn("hz", inc), ["hz"]
 
-    cum = _risk_forward_cumsum(per_t, "n_total", stage2)
+    cum = _risk_cumsums(per_t, "n_total", stage2)
     return cum.select(
         "t",
         "n_risk",
@@ -655,7 +560,7 @@ def cox_ph(
     S1(t) = eb*R1(t), where R0/R1 are the STATIC reverse cumulative
     at-risk counts per group — so the whole iteration runs on a
     times-sized relation computed ONCE (per-time counts + the
-    distributed ordered_cumsum), and each Newton round is ONE hash
+    size-gated ordered_cumsum), and each Newton round is ONE hash
     aggregate with eb entering as a plan literal plus a 1-row collect:
 
         U(b) = Σ_t [sx_t − d_t·p_t],   I(b) = Σ_t d_t·p_t·(1−p_t),
@@ -702,10 +607,6 @@ def cox_ph(
         F.sum(F.lit(1) - F.col("x")).cast("long").alias("c0"),
         F.sum("x").cast("long").alias("c1"),
     ).localCheckpoint(eager=True)
-    from econdatapipeline_spark.operators.stats import (  # noqa: PLC0415
-        ordered_cumsum,
-    )
-
     risk = (
         ordered_cumsum(per_t, "t", ["c0", "c1"], descending=True)
         .select(
@@ -788,178 +689,6 @@ def cox_ph(
     )
 
 
-# cox_ph_multi's one-SQL Newton round covers the single-window small
-# path only; past this many distinct event times it falls back to the
-# DataFrame chain whose _desc_cumsum_dec goes distributed (same gate
-# value as _dir_cumsum_dec's small_threshold). Module-level so the
-# twin-path test can force either branch.
-_COX_SQL_GATE = 100_000
-
-
-def _desc_cumsum_dec(per_t, cols, small_threshold=100_000, n_times=None):
-    """Descending-inclusive cumulative sums of DECIMAL columns — see
-    _dir_cumsum_dec."""
-    return _dir_cumsum_dec(
-        per_t, cols, descending=True, small_threshold=small_threshold,
-        n_times=n_times,
-    )
-
-
-def _asc_cumsum_dec(
-    per_t,
-    cols,
-    small_threshold=100_000,
-    operand_type="decimal(31,12)",
-    offset_type="decimal(38,12)",
-    assume_small=False,
-):
-    """Ascending-inclusive cumulative sums of DECIMAL columns — see
-    _dir_cumsum_dec."""
-    return _dir_cumsum_dec(
-        per_t,
-        cols,
-        descending=False,
-        small_threshold=small_threshold,
-        operand_type=operand_type,
-        offset_type=offset_type,
-        assume_small=assume_small,
-    )
-
-
-def _dir_cumsum_dec(
-    per_t,
-    cols,
-    descending,
-    small_threshold=100_000,
-    operand_type="decimal(31,12)",
-    offset_type="decimal(38,12)",
-    n_times=None,
-    assume_small=False,
-):
-    """Directional inclusive cumulative sums of DECIMAL columns over a
-    times-sized relation -> input + ``s_<col>`` per column.
-
-    The decimal sibling of _risk_forward_cumsum's at-risk derivation,
-    needed where the cumulated quantities are weighted decimal(28,12)
-    sums (cox_ph_multi risk sums; cumulative_incidence CIF terms) —
-    not integer counts, so the 1e9-scaled-long trick would
-    reintroduce the overflow ADVICE r7 flagged in kmeans.
-    Exactness: decimal addition is order-free; the distributed path
-    runs ONE ascending range layout in both directions — ascending
-    reads the prefix directly, descending derives grand_total −
-    ascending prefix + self — with partition offsets carried
-    driver-side as exact Python Decimals; therefore BIT-IDENTICAL to
-    the single-window small path (twin-path pytest).
-    Size gate: the kaplan_meier rule — at or below ``small_threshold``
-    distinct times a plain single-partition window (daily-resolution
-    curves are hundreds of rows; the two-pass overhead tripled local
-    latency there), above it the distributed form.
-
-    ``n_times``: a caller that already knows the relation's row count
-    (cox_ph_multi's Newton loop calls this once PER ROUND over the
-    same static time set) passes it to skip the per-call eager
-    checkpoint + count — two driver actions per round otherwise. The
-    small path is then fully lazy (the window consumes ``per_t``
-    exactly once, so there is no fan-out to pin), and the whole round
-    collapses into one job chain.
-
-    ``assume_small``: a caller whose relation is CALENDAR-BOUNDED by
-    construction (msprt_monitor's per-period collapse: sequential
-    monitoring is per-day/week/month, so even 30 years of daily looks
-    is ~11k rows — far under the gate) passes True to take the
-    single-window small path with NO checkpoint and NO count: the
-    whole query stays one lazy job chain.
-    """
-    spark = per_t.sparkSession
-    if assume_small and n_times is None:
-        n_times = 0
-    if n_times is None:
-        per_t = per_t.localCheckpoint(eager=True)
-        n_times = per_t.count()
-    if n_times <= small_threshold:
-        key = F.col("t").desc() if descending else F.col("t").asc()
-        w_dir = Window.orderBy(key).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        # ONE select, not a withColumn loop: every withColumn call
-        # re-analyzes the whole growing plan eagerly (sum-of-prefixes
-        # Catalyst work per caller round — cox_ph_multi3 stacks ten
-        # cumsum columns here every Newton round). Same window spec,
-        # same column order (appended after the inputs), identical
-        # values.
-        return per_t.select(
-            "*", *[F.sum(c).over(w_dir).alias(f"s_{c}") for c in cols]
-        )
-    n_parts = spark.sparkContext.defaultParallelism
-    part = (
-        per_t.repartitionByRange(n_parts, F.col("t").asc())
-        .sortWithinPartitions(F.col("t").asc())
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    w = Window.partitionBy("__pid").orderBy(F.col("t").asc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    local = part
-    for c in cols:
-        local = local.withColumn(f"__asc_{c}", F.sum(c).over(w))
-    totals = (
-        part.groupBy("__pid").agg(*[F.sum(c).alias(c) for c in cols])
-        .collect()
-    )
-    from decimal import Decimal  # noqa: PLC0415
-
-    offs, run = {}, {c: Decimal(0) for c in cols}
-    for row in sorted(totals, key=lambda r: r["__pid"]):
-        offs[row["__pid"]] = dict(run)
-        for c in cols:
-            run[c] += row[c] or Decimal(0)
-    grand = run
-    if offs:
-        off_rows = [
-            tuple([pid] + [offs[pid][c] for c in cols]) for pid in offs
-        ]
-        # offsets are CROSS-PARTITION running totals, so they can
-        # exceed the input columns' decimal(28,12) capacity (~1e16)
-        # well inside the documented |values| < 1e19 domain — type
-        # them decimal(38,12) (the same width the small path's window
-        # sum carries) so createDataFrame never rejects a value the
-        # small-path twin would have summed fine (r9 ADVICE fix); the
-        # d31 cast below then narrows them inside the domain bound.
-        schema = ", ".join(
-            ["__pid int"] + [f"__off_{c} {offset_type}" for c in cols]
-        )
-        off_df = spark.createDataFrame(off_rows, schema)
-        local = local.join(F.broadcast(off_df), "__pid", "left")
-    for c in cols:
-        # every operand is cast to decimal(31,12) FIRST so each binary
-        # op's result type stays under precision 38 — a naive
-        # lit(Decimal) chain promotes past 38 and Spark's
-        # allowPrecisionLoss silently REDUCES THE SCALE (measured:
-        # scale 12 -> 9), breaking the bit-identity contract with the
-        # small path. |values| < 1e19 is the documented domain
-        # (weighted risk sums at w <= 1e9).
-        # operand_type defaults to the scale-12 channel; the Greenwood
-        # CI passes a scale-18 pair (its terms are ~1e-15 at 20M
-        # subjects — below the scale-12 grain — with cum < 1e8, so the
-        # 38-cap arithmetic still never loses scale)
-        d31 = lambda e: e.cast(operand_type)  # noqa: E731
-        asc_incl = d31(F.col(f"__asc_{c}")) + F.coalesce(
-            d31(F.col(f"__off_{c}")), d31(F.lit(0))
-        )
-        if descending:
-            # desc-inclusive = grand − asc-inclusive + self
-            val = d31(F.lit(grand[c])) - asc_incl + d31(F.col(c))
-        else:
-            val = asc_incl
-        local = (
-            local.withColumn(f"s_{c}", val)
-            .drop(f"__asc_{c}")
-            .drop(f"__off_{c}")
-        )
-    return local.drop("__pid")
-
-
 def cox_ph_multi(
     df: DataFrame,
     duration_col: str = "duration",
@@ -986,7 +715,8 @@ def cox_ph_multi(
     the (bounded) ``rounds`` re-aggregates the checkpointed subject
     relation ONCE: subjects → per-time arrival sums (one hash
     aggregate), descending cumsum on the times-sized relation
-    (_desc_cumsum_dec, size-gated distributed), one times-sized U/I
+    (one SQL window at or below stats.CUMSUM_GATE_ROWS distinct
+    times, else the distributed ordered_cumsum), one times-sized U/I
     aggregate, one 1-row collect. The p×p solve is driver-side O(1)
     (p ≤ 8 by contract): p ≤ 2 uses the EXPLICIT Cramer formulas an
     SQL oracle replays operation-for-operation; p ≥ 3 replays the
@@ -1062,9 +792,9 @@ def cox_ph_multi(
         F.sum("e").cast("long").alias("n_events"),
     ).first()
     # The Newton rounds all cumsum over the SAME static time set —
-    # count it once here so each round's _desc_cumsum_dec skips its
-    # per-call eager checkpoint + count (two driver actions per round)
-    # and the round runs as one lazy job chain.
+    # count it once here: it picks the round's path, and the
+    # distributed fallback passes it as ordered_cumsum's n_rows, which
+    # skips the per-call eager checkpoint + count.
     n_times = subj.select("t").distinct().count()
 
     q9 = Decimal("0.000000001")
@@ -1148,7 +878,7 @@ def cox_ph_multi(
         )
 
     def ui_at(betas):
-        if n_times <= _COX_SQL_GATE:
+        if n_times <= stats.CUMSUM_GATE_ROWS:
             row = spark.sql(_round_sql(betas), subj=subj, ev=ev).first()
         else:
             # distributed fallback for times-counts past the window
@@ -1173,13 +903,15 @@ def cox_ph_multi(
             pt = subj.select("t", *terms).groupBy("t").agg(
                 *[F.sum(c).alias(c) for c in cols]
             )
-            risk = _desc_cumsum_dec(pt, cols, n_times=n_times)
+            risk = ordered_cumsum(
+                pt, "t", cols, descending=True, n_rows=n_times
+            )
             # broadcast: ev is times-sized; the checkpointed
             # ExistingRDD has no size stats, so Spark would SMJ
             joined = risk.join(F.broadcast(ev), "t")
-            s0 = F.col("s_aw").cast("double")
+            s0 = F.col("cum_aw").cast("double")
             mu = {
-                j: F.col(f"s_awx{j}").cast("double") / s0
+                j: F.col(f"cum_awx{j}").cast("double") / s0
                 for j in range(1, p + 1)
             }
             dd = F.col("d").cast("double")
@@ -1198,7 +930,7 @@ def cox_ph_multi(
                         (
                             dd
                             * (
-                                F.col(f"s_aww{j}{k}").cast("double") / s0
+                                F.col(f"cum_aww{j}{k}").cast("double") / s0
                                 - mu[j] * mu[k]
                             )
                         ).cast("decimal(28,12)")
@@ -1327,11 +1059,11 @@ def cumulative_incidence(
 
     Relational shape: the kaplan_meier machinery verbatim — ONE
     groupBy(duration) collapse carrying per-cause event counts, the
-    fused _risk_forward_cumsum for n_risk + the all-cause ln-survival
+    _risk_cumsums pair for n_risk + the all-cause ln-survival
     prefix — then S(t−) derives from the PER-ROW cumulative state
     (cum_lnq − lnq, dead-aware: the rmst identity, no adjacent-row
     window), per-cause increments quantize to decimal(28,12), and one
-    ascending size-gated decimal cumsum (_asc_cumsum_dec) carries all
+    ascending ordered_cumsum over the decimal increments carries all
     k CIF columns in a single pass. Output is long-form via a k-ary
     explode — no per-cause re-scan.
 
@@ -1400,7 +1132,7 @@ def cumulative_incidence(
             ["lnq", "dead"],
         )
 
-    cum = _risk_forward_cumsum(staged, "tot", stage2)
+    cum = _risk_cumsums(staged, "tot", stage2)
     s_before = F.when(
         (F.col("cum_dead") - F.col("dead")) >= 1, F.lit(0.0)
     ).otherwise(
@@ -1421,14 +1153,14 @@ def cumulative_incidence(
             ).cast("decimal(28,12)"),
         )
         inc_cols.append(f"inc{i}")
-    cifs = _asc_cumsum_dec(terms, inc_cols)
+    cifs = ordered_cumsum(terms, "t", inc_cols)
     pairs = F.array(
         *[
             F.struct(
                 F.lit(str(cv)).alias("cause"),
                 F.col(f"dc{i}").alias("d_cause"),
                 F.round(
-                    F.col(f"s_inc{i}").cast("double"), 6
+                    F.col(f"cum_inc{i}").cast("double"), 6
                 ).alias("cif"),
             )
             for i, cv in enumerate(causes, 1)
@@ -1585,10 +1317,10 @@ def rmst(
     Every drop ΔS_i derives from the PER-ROW cumulative state the
     survival machinery already carries (S_{i-1} = exp((cum_lnq −
     lnq)/1e9), dead-flag aware), so the whole statistic is the shared
-    distributed cumsum + ONE hash aggregate + one max_by — the same
+    size-gated cumsum + ONE hash aggregate + one max_by — the same
     scale posture as kaplan_meier itself (a lead()-based interval sum
-    would reintroduce the adjacent-row window the two-pass machinery
-    exists to avoid). Per-drop terms are decimal(28,12)-quantized
+    would need an adjacent-row window that the distributed cumsum
+    path avoids). Per-drop terms are decimal(28,12)-quantized
     before the order-free sum; the exp chain shares kaplan_meier's
     ln-class caveat.
     """
@@ -1629,7 +1361,7 @@ def rmst(
             ["lnq", "dead"],
         )
 
-    cum = _risk_forward_cumsum(staged, "tot", stage2)
+    cum = _risk_cumsums(staged, "tot", stage2)
     s_at = F.when(F.col("cum_dead") >= 1, F.lit(0.0)).otherwise(
         F.exp(F.col("cum_lnq").cast("double") / F.lit(1000000000.0))
     )
@@ -2348,14 +2080,13 @@ def kaplan_meier_ci(
     ``z`` is the normal quantile (default 1.959964, the 95% band).
 
     Relational shape: the kaplan_meier machinery verbatim (ONE
-    collapse, the fused size-gated _risk_forward_cumsum for n_risk +
-    the scaled-long ln-survival prefix), plus one ascending size-gated
-    decimal cumsum for the Greenwood terms. Those terms ride a
-    SCALE-18 decimal channel (decimal(26,18) operands): at 20M
-    subjects a term is d/(n(n−d)) ~ 1e-15 — below the engine's
-    standard scale-12 grain — while the cumulative sum stays < 1e8 by
-    domain, so precision 38 still never loses scale. ln/exp are the
-    documented ln-class channel. Rows where the curve has died
+    collapse, _risk_cumsums for n_risk + the scaled-long ln-survival
+    prefix), plus one ascending ordered_cumsum for the Greenwood
+    terms. Those terms ride a SCALE-18 decimal channel
+    (decimal(26,18)): at 20M subjects a term is d/(n(n−d)) ~ 1e-15 —
+    below the engine's standard scale-12 grain — while the cumulative
+    sum stays < 1e8 by domain, far inside the decimal(36,18) sum.
+    ln/exp are the documented ln-class channel. Rows where the curve has died
     (Ŝ = 0) emit NULL se/lo/hi (the variance is undefined there —
     never-fabricate); rows before the first event emit se = 0 and
     lo = hi = 1 (zero accumulated variance).
@@ -2395,7 +2126,7 @@ def kaplan_meier_ci(
             ["lnq", "dead"],
         )
 
-    cum = _risk_forward_cumsum(staged, "tot", stage2)
+    cum = _risk_cumsums(staged, "tot", stage2)
     g = F.when(
         (F.col("n_events") > 0) & (F.col("n_events") < F.col("n_risk")),
         (
@@ -2407,16 +2138,11 @@ def kaplan_meier_ci(
         ).cast("decimal(26,18)"),
     ).otherwise(F.lit(0).cast("decimal(26,18)"))
     terms = cum.withColumn("g", g)
-    cg = _asc_cumsum_dec(
-        terms,
-        ["g"],
-        operand_type="decimal(26,18)",
-        offset_type="decimal(38,18)",
-    )
+    cg = ordered_cumsum(terms, "t", ["g"])
     ln_s = F.col("cum_lnq").cast("double") / F.lit(1000000000.0)
     died = F.col("cum_dead") >= 1
     s_raw = F.exp(ln_s)
-    cumg = F.col("s_g").cast("double")
+    cumg = F.col("cum_g").cast("double")
     sig = F.sqrt(cumg) / -ln_s
     dnull = F.lit(None).cast("double")
     return cg.select(
@@ -2728,7 +2454,7 @@ def fleming_harrington(
     subject scan to the times-per-group relation, scaffold, reverse
     at-risk cumsum), plus the kaplan_meier ln-space discipline for
     the weight: ln(1 − d/n) quantized decimal(18,9), EXCLUSIVE
-    ascending cumsum via _asc_cumsum_dec (inclusive minus own term —
+    ascending cumsum via ordered_cumsum (inclusive minus own term —
     exact decimal subtraction), weight = exp(rho·lnS) requantized
     decimal(18,9) (the one libm channel), a dead flag zeroing weights
     after the pooled curve hits 0 (except rho = 0, where the
@@ -2784,9 +2510,9 @@ def fleming_harrington(
         .otherwise(F.lit(0))
         .cast("decimal(18,9)"),
     )
-    cum = _asc_cumsum_dec(staged, ["lnq", "dead"])
-    ln_excl = (F.col("s_lnq") - F.col("lnq")).cast("double")
-    dead_excl = (F.col("s_dead") - F.col("dead")).cast("double")
+    cum = ordered_cumsum(staged, "t", ["lnq", "dead"])
+    ln_excl = (F.col("cum_lnq") - F.col("lnq")).cast("double")
+    dead_excl = (F.col("cum_dead") - F.col("dead")).cast("double")
     rho_f = float(rho)
     w_expr = F.when(
         dead_excl >= 1.0, F.lit(1.0 if rho_f == 0.0 else 0.0)
@@ -2867,7 +2593,7 @@ def cox_ph_check(
     stratified or time-interacted effects instead of one hr.
 
     Architecture: the cox_ph skeleton verbatim — one subject scan to
-    the pinned times-sized relation, the distributed ordered_cumsum
+    the pinned times-sized relation, the size-gated ordered_cumsum
     at-risk derivation, the identical driver-side Newton for beta
     (decimal(18,9)-quantized rounds) — plus ONE further times-sized
     aggregate of decimal(28,12)-quantized score terms with eb as a
@@ -2893,10 +2619,6 @@ def cox_ph_check(
         F.sum(F.lit(1) - F.col("x")).cast("long").alias("c0"),
         F.sum("x").cast("long").alias("c1"),
     ).localCheckpoint(eager=True)
-    from econdatapipeline_spark.operators.stats import (  # noqa: PLC0415
-        ordered_cumsum,
-    )
-
     risk = (
         ordered_cumsum(per_t, "t", ["c0", "c1"], descending=True)
         .select(

@@ -345,9 +345,10 @@ def test_spearman_rank_relations_not_force_broadcast(spark):
     size-decided (AQE picks broadcast only when genuinely small)."""
     with _no_auto_broadcast(spark):
         plan = plan_of(E.queries()["spearman"](spark, SF_DIR))
-    # The rank joins (Inner, on the value key) must fall back to SMJ;
-    # the only broadcasts left are ordered_cumsum's |partitions|-sized
-    # offset tables (LeftOuter on __pid), which are bounded by design.
+    # The rank joins (Inner, on the value key) must fall back to SMJ.
+    # At sf0.001 ordered_cumsum takes its small window path (no join);
+    # past its gate its only broadcast is the |partitions|-row offset
+    # table, bounded by design.
     assert "SortMergeJoin Inner" in plan
     assert "BroadcastHashJoin Inner" not in plan
 

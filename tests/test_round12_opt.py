@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest  # noqa: F401
 
 import econdatapipeline_spark.operators.survival as sv
+from econdatapipeline_spark.operators import stats
 
 
 def _cox_rows(n=300):
@@ -26,7 +27,7 @@ def _cox_rows(n=300):
     return rows
 
 
-def test_cox_ph_multi_one_sql_round_is_bit_identical(spark):
+def test_cox_ph_multi_one_sql_round_is_bit_identical(spark, monkeypatch):
     """cox_ph_multi's one-SQL Newton round (r12, guide §1.3) vs the
     DataFrame fallback chain it mirrors: forcing the gate both ways on
     the same input must produce repr-identical rows for p=2 and p=3
@@ -35,44 +36,21 @@ def test_cox_ph_multi_one_sql_round_is_bit_identical(spark):
         _cox_rows(), "duration long, event int, x1 double, x2 double,"
         " x3 double"
     )
-    gate = sv._COX_SQL_GATE
-    try:
-        for covs in (["x1", "x2"], ["x1", "x2", "x3"]):
-            sv._COX_SQL_GATE = 100_000  # SQL path (times << gate)
-            via_sql = sorted(
-                tuple(map(repr, r))
-                for r in sv.cox_ph_multi(
-                    df, "duration", "event", covs, rounds=4
-                ).collect()
-            )
-            sv._COX_SQL_GATE = -1  # force the DataFrame fallback
-            via_df = sorted(
-                tuple(map(repr, r))
-                for r in sv.cox_ph_multi(
-                    df, "duration", "event", covs, rounds=4
-                ).collect()
-            )
-            assert via_sql == via_df, covs
-    finally:
-        sv._COX_SQL_GATE = gate
-
-
-def test_dir_cumsum_small_path_single_select(spark):
-    """_dir_cumsum_dec's small path emits all cumsum columns in ONE
-    select (r12: the withColumn loop re-analyzed the growing plan per
-    column); values and column order must match the documented
-    contract: input columns then s_<col> per col, descending-inclusive."""
-    from decimal import Decimal
-
-    df = spark.createDataFrame(
-        [(1, Decimal("1.5"), Decimal("10")),
-         (2, Decimal("2.5"), Decimal("20")),
-         (3, Decimal("4.0"), Decimal("30"))],
-        "t long, a decimal(31,12), b decimal(31,12)",
-    )
-    out = sv._desc_cumsum_dec(df, ["a", "b"], n_times=3)
-    assert out.columns == ["t", "a", "b", "s_a", "s_b"]
-    got = {r["t"]: (r["s_a"], r["s_b"]) for r in out.collect()}
-    assert got[3] == (Decimal("4.0"), Decimal("30"))
-    assert got[2] == (Decimal("6.5"), Decimal("50"))
-    assert got[1] == (Decimal("8.0"), Decimal("60"))
+    for covs in (["x1", "x2"], ["x1", "x2", "x3"]):
+        # SQL path (times << the gate)
+        monkeypatch.setattr(stats, "CUMSUM_GATE_ROWS", 100_000)
+        via_sql = sorted(
+            tuple(map(repr, r))
+            for r in sv.cox_ph_multi(
+                df, "duration", "event", covs, rounds=4
+            ).collect()
+        )
+        # the DataFrame fallback over the distributed ordered_cumsum
+        monkeypatch.setattr(stats, "CUMSUM_GATE_ROWS", -1)
+        via_df = sorted(
+            tuple(map(repr, r))
+            for r in sv.cox_ph_multi(
+                df, "duration", "event", covs, rounds=4
+            ).collect()
+        )
+        assert via_sql == via_df, covs

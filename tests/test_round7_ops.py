@@ -397,10 +397,11 @@ def test_markov_stationary_paths_identical(spark):
     assert fast == slow
 
 
-def test_survival_size_gate_paths_identical(spark):
+def test_survival_size_gate_paths_identical(spark, monkeypatch):
     """The small-relation window path and the distributed two-pass
-    path of _risk_forward_cumsum produce BIT-IDENTICAL curves
+    path of ordered_cumsum produce BIT-IDENTICAL kaplan_meier curves
     (VERDICT r6 #6: take the local win back only if hashes hold)."""
+    from econdatapipeline_spark.operators import stats
     from econdatapipeline_spark.operators.survival import kaplan_meier
 
     rng = random.Random(5)
@@ -408,19 +409,9 @@ def test_survival_size_gate_paths_identical(spark):
         (rng.randint(1, 40), rng.randint(0, 1)) for _ in range(500)
     ]
     df = spark.createDataFrame(rows, "duration long, event int")
-    import econdatapipeline_spark.operators.survival as surv
-
     small = sorted(map(tuple, kaplan_meier(df).collect()))
-    orig = surv._risk_forward_cumsum
-
-    def forced_large(per_t, tot_col, stage2, small_threshold=100_000):
-        return orig(per_t, tot_col, stage2, small_threshold=0)
-
-    surv._risk_forward_cumsum = forced_large
-    try:
-        large = sorted(map(tuple, kaplan_meier(df).collect()))
-    finally:
-        surv._risk_forward_cumsum = orig
+    monkeypatch.setattr(stats, "CUMSUM_GATE_ROWS", -1)
+    large = sorted(map(tuple, kaplan_meier(df).collect()))
     assert small == large
 
 

@@ -839,29 +839,3 @@ def test_pca_power_wide_shape_is_bit_identical(spark):
     narrow = pca_power(df, dims=6, rounds=4).collect()
     wide = pca_power(df, dims=6, rounds=4, wide_threshold=0).collect()
     assert [tuple(r) for r in narrow] == [tuple(r) for r in wide]
-
-
-def test_desc_cumsum_dec_twin_paths_identical(spark):
-    """The distributed descending decimal cumsum is bit-identical to
-    the single-window small path (the _risk_forward_cumsum twin-path
-    contract, now for decimal columns)."""
-    from decimal import Decimal
-
-    from econdatapipeline_spark.operators.survival import _desc_cumsum_dec
-    from pyspark.sql import functions as F
-
-    rows = [
-        (t, Decimal(f"{(t * 37 % 100) / 7:.12f}"))
-        for t in range(1, 501)
-    ]
-    df = spark.createDataFrame(rows, "t long, v decimal(28,12)")
-    small = {
-        r["t"]: r["s_v"]
-        for r in _desc_cumsum_dec(df, ["v"], small_threshold=100_000)
-        .collect()
-    }
-    big = {
-        r["t"]: r["s_v"]
-        for r in _desc_cumsum_dec(df, ["v"], small_threshold=1).collect()
-    }
-    assert small == big

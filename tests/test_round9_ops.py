@@ -891,37 +891,6 @@ def test_km_ci_curve_matches_kaplan_meier(spark):
     assert km == ci
 
 
-def test_dir_cumsum_dec_scale18_twin_paths(spark):
-    """The parameterized scale-18 channel: small-path window sum and
-    the distributed two-pass path produce bit-identical cumulative
-    sums on terms far below the scale-12 grain."""
-    from decimal import Decimal
-
-    from econdatapipeline_spark.operators.survival import _asc_cumsum_dec
-
-    rows = [
-        (i, Decimal(f"0.0000000000000{(i % 9) + 1}1"))  # ~1e-14 terms
-        for i in range(1, 501)
-    ]
-    df = spark.createDataFrame(rows, "t long, g decimal(26,18)")
-    small = {
-        r["t"]: r["s_g"]
-        for r in _asc_cumsum_dec(
-            df, ["g"], operand_type="decimal(26,18)",
-            offset_type="decimal(38,18)",
-        ).collect()
-    }
-    big = {
-        r["t"]: r["s_g"]
-        for r in _asc_cumsum_dec(
-            df, ["g"], small_threshold=10,
-            operand_type="decimal(26,18)", offset_type="decimal(38,18)",
-        ).collect()
-    }
-    assert small == big
-    assert small[500] == sum(g for _, g in rows)
-
-
 # ---------------------------------------------------------------------------
 # poisson_glm
 # ---------------------------------------------------------------------------

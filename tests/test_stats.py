@@ -3,6 +3,9 @@
 from __future__ import annotations
 
 import datetime as dt
+from decimal import Decimal, localcontext
+
+import pytest
 
 from econdatapipeline_spark.operators.stats import corr_pairs, histogram, vif
 from econdatapipeline_spark.operators.timeseries import rolling_zscore
@@ -404,48 +407,93 @@ def test_ks_partial_shift(spark):
     assert abs(d - 0.5) < 0.02
 
 
-def test_ordered_cumsum_matches_naive_window(spark):
+# value generators per sum-column type: the decimal(28,12) values reach
+# ~1e15, so cross-partition offsets pass the column's own capacity;
+# the decimal(26,18) values go down to the 1e-18 grain
+_CUMSUM_VALUES = {
+    "int": lambda rng: rng.randint(1, 5),
+    "long": lambda rng: rng.randint(-(10**12), 10**12),
+    "decimal(28,12)": lambda rng: Decimal(
+        rng.randint(-9 * 10**26, 9 * 10**26)
+    ).scaleb(-12),
+    "decimal(26,18)": lambda rng: Decimal(
+        rng.randint(1, 10**25)
+    ).scaleb(-18),
+}
+
+
+@pytest.mark.parametrize("path", ["gated", "forced_large"])
+@pytest.mark.parametrize("dtype", list(_CUMSUM_VALUES))
+def test_ordered_cumsum_matches_window(spark, monkeypatch, dtype, path):
+    """ordered_cumsum equals a plain Window.orderBy sum — same values
+    (repr-level) and same result type — ascending and descending,
+    inclusive and exclusive, on 500 distinct keys, an empty and a
+    single-row input, through the size gate and with the gate forced
+    to the distributed path; output columns are the inputs, then
+    cum_<c>."""
     import random
-    from econdatapipeline_spark.operators.stats import ordered_cumsum
+
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from econdatapipeline_spark.operators import stats
+
+    if path == "forced_large":
+        monkeypatch.setattr(stats, "CUMSUM_GATE_ROWS", -1)
     rng = random.Random(31)
-    rows = [(round(rng.random() * 1000, 1), rng.randint(1, 5)) for _ in range(500)]
-    # distinct keys (the contract): reduce first
-    df = spark.createDataFrame(rows, "k double, c int").groupBy("k").agg(
-        F.sum("c").alias("c")
+    value = _CUMSUM_VALUES[dtype]
+    main = [(k / 10.0, value(rng)) for k in rng.sample(range(100_000), 500)]
+    cases = [(main, d, e) for d in (False, True) for e in (False, True)]
+    cases += [([], True, True), ([(5.0, value(rng))], False, False)]
+    for rows, desc, excl in cases:
+        df = spark.createDataFrame(rows, f"k double, c {dtype}")
+        out = stats.ordered_cumsum(
+            df, "k", ["c"], descending=desc, exclusive=excl,
+            # descending cases pass the known row count, so both ways
+            # of reaching the gate are covered
+            n_rows=len(rows) if desc else None,
+        )
+        case = (len(rows), desc, excl)
+        assert out.columns == ["k", "c", "cum_c"], case
+        key = F.col("k").desc() if desc else F.col("k").asc()
+        w = Window.orderBy(key).rowsBetween(
+            Window.unboundedPreceding, -1 if excl else 0
+        )
+        check = out.select(
+            "cum_c", F.coalesce(F.sum("c").over(w), F.lit(0)).alias("want")
+        )
+        assert check.schema["cum_c"].dataType == check.schema["want"].dataType
+        got = check.collect()
+        assert len(got) == len(rows), case
+        assert [r for r in got if repr(r["cum_c"]) != repr(r["want"])] == []
+
+
+def test_ordered_cumsum_decimal_past_the_gate(spark):
+    """A decimal column just past the size gate takes the distributed
+    path, whose offsets span several partitions: they must carry the
+    column's decimal type (a long-typed offset table rejects Decimal
+    values) and sum to the exact inclusive prefix."""
+    from pyspark.sql import functions as F
+
+    from econdatapipeline_spark.operators import stats
+
+    n = 100_001
+    df = spark.range(n).select(
+        F.col("id").alias("t"),
+        (F.lit(Decimal("100000000000000")) + F.col("id") / F.lit(7))
+        .cast("decimal(28,12)")
+        .alias("v"),
     )
-    for desc in (False, True):
-        for excl in (False, True):
-            got = {
-                r["k"]: r["cum_c"]
-                for r in ordered_cumsum(
-                    df, "k", ["c"], descending=desc, exclusive=excl,
-                    num_partitions=7,
-                ).collect()
-            }
-            key = F.col("k").desc() if desc else F.col("k").asc()
-            w = Window.orderBy(key).rowsBetween(
-                Window.unboundedPreceding, -1 if excl else 0
-            )
-            want = {
-                r["k"]: r["cum"]
-                for r in df.select(
-                    "k", F.coalesce(F.sum("c").over(w), F.lit(0)).alias("cum")
-                ).collect()
-            }
-            assert got == want, (desc, excl)
-
-
-def test_ordered_cumsum_empty_and_single(spark):
-    from econdatapipeline_spark.operators.stats import ordered_cumsum
-
-    empty = spark.createDataFrame([], "k int, c int")
-    assert ordered_cumsum(empty, "k", ["c"]).count() == 0
-    one = spark.createDataFrame([(5, 3)], "k int, c int")
-    r = ordered_cumsum(one, "k", ["c"], num_partitions=4).collect()[0]
-    assert r["cum_c"] == 3
+    out = stats.ordered_cumsum(df, "t", ["v"])
+    assert out.schema["cum_v"].dataType.simpleString() == "decimal(38,12)"
+    rows = sorted(out.collect())
+    run = Decimal(0)
+    with localcontext(prec=50):  # prefixes pass the default 28 digits
+        for r in rows:
+            run += r["v"]
+            assert r["cum_v"] == run, r["t"]
+    assert len(rows) == n
+    assert n > stats.CUMSUM_GATE_ROWS  # the distributed path ran
 
 
 def test_bootstrap_ci_covers_true_mean(spark):
