@@ -6158,7 +6158,11 @@ def q_cumulative_incidence(spark, sf_dir):
     from pyspark.sql import Window as W
 
     o = _t(spark, sf_dir, "orders")
-    w = W.partitionBy("o_custkey").orderBy(F.col("o_orderdate").asc())
+    # o_orderkey breaks order-date ties: without it the first order
+    # and the next one are engine-dependent for same-day orders
+    w = W.partitionBy("o_custkey").orderBy(
+        F.col("o_orderdate").asc(), F.col("o_orderkey").asc()
+    )
     horizon = o.agg(F.max("o_orderdate").alias("h"))
     ranked = o.select(
         "o_custkey",
@@ -6379,7 +6383,10 @@ def q_grays_test(spark, sf_dir):
     c = _t(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    w = W.partitionBy("o_custkey").orderBy(F.col("o_orderdate").asc())
+    # o_orderkey breaks order-date ties (see q_cumulative_incidence)
+    w = W.partitionBy("o_custkey").orderBy(
+        F.col("o_orderdate").asc(), F.col("o_orderkey").asc()
+    )
     horizon = o.agg(F.max("o_orderdate").alias("h"))
     ranked = o.select(
         "o_custkey",
@@ -19738,11 +19745,14 @@ def oracle_sql() -> dict[str, str]:
         WITH ranked AS (
           SELECT o_custkey, o_orderdate,
                  ROW_NUMBER() OVER (PARTITION BY o_custkey
-                                    ORDER BY o_orderdate ASC) AS rk,
+                                    ORDER BY o_orderdate ASC,
+                                             o_orderkey ASC) AS rk,
                  LEAD(o_orderdate) OVER (PARTITION BY o_custkey
-                                         ORDER BY o_orderdate ASC) AS nxt,
+                                         ORDER BY o_orderdate ASC,
+                                                  o_orderkey ASC) AS nxt,
                  LEAD(o_orderpriority) OVER (PARTITION BY o_custkey
-                                         ORDER BY o_orderdate ASC)
+                                         ORDER BY o_orderdate ASC,
+                                                  o_orderkey ASC)
                    AS nxt_prio
           FROM orders),
         h AS (SELECT MAX(o_orderdate) AS h FROM orders),
@@ -20253,11 +20263,14 @@ def oracle_sql() -> dict[str, str]:
         WITH ranked AS (
           SELECT o_custkey, o_orderdate,
                  ROW_NUMBER() OVER (PARTITION BY o_custkey
-                                    ORDER BY o_orderdate ASC) AS rk,
+                                    ORDER BY o_orderdate ASC,
+                                             o_orderkey ASC) AS rk,
                  LEAD(o_orderdate) OVER (PARTITION BY o_custkey
-                                         ORDER BY o_orderdate ASC) AS nxt,
+                                         ORDER BY o_orderdate ASC,
+                                                  o_orderkey ASC) AS nxt,
                  LEAD(o_orderpriority) OVER (PARTITION BY o_custkey
-                                         ORDER BY o_orderdate ASC)
+                                         ORDER BY o_orderdate ASC,
+                                                  o_orderkey ASC)
                    AS nxt_prio
           FROM orders),
         h AS (SELECT MAX(o_orderdate) AS h FROM orders),

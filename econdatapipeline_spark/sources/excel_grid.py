@@ -9,10 +9,11 @@ calendar dates row-by-row, coerces, drops nulls, sorts and projects
 
 Here the grid arrives as rows (driver-side ``pandas.read_excel`` on
 KB-sized cached bytes — distributing a 13-row read would be overhead,
-not parallelism) and everything after ``createDataFrame`` is a lazy,
-codegen'd column program: unpivot -> make_date -> try_cast -> filter ->
-sort. The same program applied to a billion-row grid would still be a
-narrow map + one sort.
+not parallelism). The cells enter Spark as an Arrow-backed local
+relation of strings (``sources.payload.string_frame``), and everything
+after that is a lazy, codegen'd column program: unpivot -> make_date ->
+try_cast -> filter -> sort. The same program applied to a billion-row
+grid would still be a narrow map + one sort.
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from econdatapipeline_spark.functions.dates import (
     fiscal_monthly_date,
@@ -29,15 +31,13 @@ from econdatapipeline_spark.functions.dates import (
 from econdatapipeline_spark.functions.parsing import coerce_numeric
 from econdatapipeline_spark.operators.unpivot import melt
 from econdatapipeline_spark.registry import DatasetSpec
+from econdatapipeline_spark.sources.payload import string_frame
 
 
 def grid_to_dataframe(spark: SparkSession, grid: Sequence[Sequence]) -> DataFrame:
     """Raw untyped grid rows -> DataFrame of strings (spreadsheet cells)."""
-    str_rows = [[None if c is None else str(c) for c in row] for row in grid]
-    ncols = max(len(r) for r in str_rows)
-    cols = [f"_c{i}" for i in range(ncols)]
-    padded = [list(r) + [None] * (ncols - len(r)) for r in str_rows]
-    return spark.createDataFrame(padded, schema=", ".join(f"{c} string" for c in cols))
+    ncols = max(len(r) for r in grid)
+    return string_frame(spark, grid, [f"_c{i}" for i in range(ncols)])
 
 
 def normalize_edb_grid(
@@ -60,7 +60,8 @@ def normalize_edb_grid(
     # a Spark collect job (operators.unpivot.promote_header — kept for
     # distributed inputs) would cost a job per ingested dataset.
     if len(grid) < 2:
-        return spark.createDataFrame([], spec.spark_schema())
+        # an empty Arrow table, not an empty list: a local relation too
+        return spark.createDataFrame(to_arrow_schema(spec.spark_schema()).empty_table())
     header, body = grid[0], grid[1:]
     headed = grid_to_dataframe(spark, body).toDF(
         id_col, *[str(v) for v in header[1:]]

@@ -26,6 +26,7 @@ from econdatapipeline_spark.functions.parsing import (
     replace_missing_sentinel,
 )
 from econdatapipeline_spark.registry import DatasetSpec
+from econdatapipeline_spark.sources.payload import string_frame
 
 
 def observations_to_dataframe(spark: SparkSession, payload: dict | str) -> DataFrame:
@@ -34,7 +35,7 @@ def observations_to_dataframe(spark: SparkSession, payload: dict | str) -> DataF
         payload = json.loads(payload)
     obs = payload.get("observations", [])
     rows = [(o.get("date"), o.get("value")) for o in obs]
-    return spark.createDataFrame(rows, "date string, value string")
+    return string_frame(spark, rows, ["date", "value"])
 
 
 def normalize_fred_observations(

@@ -7,9 +7,10 @@ slices workbooks; an HTML page is the other common shape of the same
 feed). Pages are KB-sized documents fetched by the cached HTTP layer
 (sources/http_fetch.py), so parsing is driver-side stdlib
 ``html.parser`` — the distributed-read form would be wrong here, just
-as SURVEY §2 S1 concluded for Excel — and the result enters Spark as a
-createDataFrame of strings for the normalizer pipeline (header
-promotion, try_cast coercion) to treat exactly like an Excel grid.
+as SURVEY §2 S1 concluded for Excel — and the result enters Spark as an
+Arrow-backed local relation of strings (``sources.payload``) for the
+normalizer pipeline (header promotion, try_cast coercion) to treat
+exactly like an Excel grid.
 
 Handles: nested tables (each extracted separately, outermost first),
 th/td cells, rowspan/colspan expansion (cells repeat into the spanned
@@ -23,6 +24,8 @@ import re
 from html.parser import HTMLParser
 
 from pyspark.sql import DataFrame, SparkSession
+
+from econdatapipeline_spark.sources.payload import string_frame
 
 
 class _TableParser(HTMLParser):
@@ -138,5 +141,4 @@ def read_html_table(
     else:
         names = [f"c{i}" for i in range(width)]
         body = norm
-    schema = ", ".join(f"{n} string" for n in names)
-    return spark.createDataFrame(body or [], schema)
+    return string_frame(spark, body, names)

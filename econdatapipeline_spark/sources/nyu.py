@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from econdatapipeline_spark.functions.parsing import parse_percent
+from econdatapipeline_spark.sources.payload import string_frame
 
 # Expected header -> schema name (azure_nyu_scraper.py:93,114-120).
 EXPECTED_HEADERS: dict[str, str] = {
@@ -62,12 +63,8 @@ def normalize_nyu_sheet(spark: SparkSession, rows: Sequence[dict]) -> DataFrame:
         raise ValueError("empty NYU ERP sheet")
     headers = list(rows[0].keys())
     mapping = resolve_headers(headers)
-    str_rows = [
-        tuple(None if r.get(c) is None else str(r.get(c)) for c in mapping)
-        for r in rows
-    ]
-    raw = spark.createDataFrame(
-        str_rows, ", ".join(f"`{c}` string" for c in mapping)
+    raw = string_frame(
+        spark, [[r.get(c) for c in mapping] for r in rows], [str(c) for c in mapping]
     )
     renamed = raw.select(
         *[F.col(f"`{c}`").alias(name) for c, name in mapping.items()]

@@ -25,6 +25,8 @@ import threading
 import uuid
 from datetime import datetime, timezone, timedelta
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,8 +37,8 @@ from econdatapipeline_spark.registry import (
     REVISIONS_TABLE,
 )
 
-# one watermark partition file: scrapermetadata/dataset=<name>/*.parquet
-_WATERMARK_SCHEMA = "last_run timestamp"
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+_MICROSECOND = timedelta(microseconds=1)
 
 
 class Warehouse:
@@ -571,6 +573,18 @@ class Warehouse:
     # lock. A 10^5-dataset registry updates watermarks embarrassingly
     # in parallel; the previous whole-KV rewrite under a lock
     # serialized every concurrent runner through one table swap.
+    #
+    # A watermark is one timestamp that is already on the driver, so
+    # update_last_run / get_last_run write and read its one-row file
+    # with pyarrow.parquet: no Spark job and no SQL execution per
+    # refresh. The file is the one Spark would write — a single
+    # ``last_run`` column holding the UTC instant, stored as
+    # TIMESTAMP(MICROS, UTC-adjusted) — so watermarks() still reads
+    # the whole registry through Spark's partition discovery, and
+    # partitions Spark wrote earlier (INT96) still read here. Values
+    # convert as PySpark's createDataFrame / collect convert a
+    # ``timestamp`` column: a naive datetime is process-local time on
+    # the way in and comes back as one.
     def _watermark_path(self, dataset: str) -> str:
         return os.path.join(self.path(METADATA_TABLE), f"dataset={dataset}")
 
@@ -589,9 +603,15 @@ class Warehouse:
             self.path(METADATA_TABLE),
             f"_staging-{dataset}-{uuid.uuid4().hex}",
         )
-        df = self.spark.createDataFrame([(ts,)], _WATERMARK_SCHEMA)
+        # astimezone reads a naive value as local time (time.mktime,
+        # as PySpark's TimestampType.toInternal); integer microseconds
+        micros = (ts.astimezone(timezone.utc) - _EPOCH) // _MICROSECOND
+        table = pa.table(
+            {"last_run": pa.array([micros], pa.timestamp("us", tz="UTC"))}
+        )
         try:
-            df.coalesce(1).write.mode("overwrite").parquet(staging)
+            os.makedirs(staging)
+            pq.write_table(table, os.path.join(staging, "part-00000.parquet"))
         except BaseException:
             shutil.rmtree(staging, ignore_errors=True)
             raise
@@ -603,13 +623,32 @@ class Warehouse:
     def get_last_run(self, dataset: str) -> datetime | None:
         """Point read of one partition directory — never lists the
         whole registry (the reference's get_entity point lookup,
-        azure_connector.py:580-596)."""
+        azure_connector.py:580-596). Returns the naive local datetime
+        PySpark's ``collect`` would; raises TypeError if the stored
+        ``last_run`` is not a timestamp."""
         p = self._watermark_path(dataset)
         if not os.path.isdir(p):
             return None
-        # the known schema: no footer-inference job
-        row = self.spark.read.schema(_WATERMARK_SCHEMA).parquet(p).limit(1).collect()
-        return row[0][0] if row else None
+        for name in sorted(os.listdir(p)):
+            if name.startswith(("_", ".")) or not name.endswith(".parquet"):
+                continue
+            col = pq.read_table(
+                os.path.join(p, name),
+                columns=["last_run"],
+                coerce_int96_timestamp_unit="us",
+            ).column(0)
+            if not pa.types.is_timestamp(col.type):
+                raise TypeError(
+                    f"watermark {dataset!r}: last_run is stored as {col.type}, "
+                    "not a timestamp"
+                )
+            if len(col):
+                micros = col.cast(pa.timestamp("us", col.type.tz)).cast(pa.int64())[0].as_py()
+                # integer arithmetic, as PySpark's TimestampType.fromInternal
+                return datetime.fromtimestamp(micros // 1_000_000).replace(
+                    microsecond=micros % 1_000_000
+                )
+        return None
 
     def watermarks(self) -> DataFrame:
         """Full registry view (dataset, last_run) via partition discovery."""

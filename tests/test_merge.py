@@ -403,26 +403,55 @@ def test_failed_staging_write_appends_no_revisions(spark, tmp_path, monkeypatch)
 
 # -- reads with the caller's schema --------------------------------------
 
+def _jobs_in(spark, group, fn):
+    """Run ``fn`` under job group ``group`` -> (its result, jobs launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_known_schema_reads_launch_no_inference_job(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path))
     wh.write_dataset(_df(spark, [(dt.date(2025, 1, 1), 1.0)]), "ds")
     wh.update_last_run("ds", RUN_TS)
-    sc = spark.sparkContext
 
-    def jobs_in(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-    df, n_jobs = jobs_in("read-or-empty", lambda: wh.read_or_empty("ds", _df(spark, []).schema))
+    df, n_jobs = _jobs_in(spark, "read-or-empty", lambda: wh.read_or_empty("ds", _df(spark, []).schema))
     assert n_jobs == 0
     assert [tuple(r) for r in df.collect()] == [(dt.date(2025, 1, 1), 1.0)]
-    last, n_jobs = jobs_in("get-last-run", lambda: wh.get_last_run("ds"))
-    assert last == RUN_TS and n_jobs == 1  # the point read itself, no inference
+    # the watermark is read with pyarrow: no Spark job at all
+    last, n_jobs = _jobs_in(spark, "get-last-run", lambda: wh.get_last_run("ds"))
+    assert last == RUN_TS and n_jobs == 0
+
+
+def test_refresh_job_budget(spark, tmp_path):
+    """The watermark write launches no Spark job, and a whole
+    ``run_dataset`` refresh of the 3-column NYU sheet with revisions
+    (gate, normalize, merge commit, revision append, watermark)
+    launches at most 6."""
+    from econdatapipeline_spark.pipeline import UPDATED, run_dataset
+    from econdatapipeline_spark.registry import NYU_SPEC
+
+    wh = Warehouse(spark, str(tmp_path))
+    _, n_jobs = _jobs_in(spark, "update-last-run", lambda: wh.update_last_run("ds", RUN_TS))
+    assert n_jobs == 0 and wh.get_last_run("ds") == RUN_TS
+
+    def sheet(erp, months):
+        return [{"Start of month": f"2025-{m:02d}-01", "T.Bond Rate": "4.0%",
+                 "ERP (T12m)": erp, "Expected Return": "9.0%"} for m in months]
+
+    first = run_dataset(spark, wh, NYU_SPEC, lambda spec: sheet("5.0%", range(1, 7)), run_ts=RUN_TS)
+    assert first["status"] == UPDATED
+    res, n_jobs = _jobs_in(spark, "refresh", lambda: run_dataset(
+        spark, wh, NYU_SPEC, lambda spec: sheet("5.5%", range(1, 8)),
+        run_ts=RUN_TS + dt.timedelta(days=1)))
+    assert res == {"dataset": NYU_SPEC.name, "status": UPDATED,
+                   "new": 1, "updated": 6, "revisions": 6}, res
+    assert n_jobs <= 6, n_jobs
 
 
 def test_read_or_empty_type_mismatch_fails_loudly(spark, tmp_path):

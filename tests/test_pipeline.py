@@ -412,6 +412,81 @@ def test_watermark_staging_is_invisible_and_swept(spark, wh):
     assert not os.path.isdir(stale)
 
 
+@pytest.fixture()
+def non_utc_tz(monkeypatch):
+    """Process-local time zone with DST, 5 hours behind UTC in winter."""
+    import time
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def _watermark_file(wh, dataset):
+    d = wh._watermark_path(dataset)
+    (name,) = [f for f in os.listdir(d) if f.endswith(".parquet") and not f.startswith((".", "_"))]
+    return os.path.join(d, name)
+
+
+@pytest.mark.parametrize("ts", [
+    dt.datetime(2025, 1, 15, 23, 30, 0, 123456),  # winter, crosses midnight UTC
+    dt.datetime(2025, 7, 1, 2, 0, 0, 999999),     # summer time
+    dt.datetime(2025, 7, 1, 2, 0, 0, 1, tzinfo=dt.timezone.utc),  # aware value
+])
+def test_watermark_round_trip_matches_spark_in_local_tz(spark, wh, non_utc_tz, ts):
+    """The watermark stores the instant PySpark's createDataFrame stores
+    for ``ts`` (a naive value is process-local time) and reads back what
+    a createDataFrame -> collect round trip returns."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import TimestampType
+
+    via_spark = spark.createDataFrame([(ts,)], "last_run timestamp").collect()[0][0]
+    wh.update_last_run("ds", ts)
+    assert wh.get_last_run("ds") == via_spark
+    col = pq.read_table(_watermark_file(wh, "ds")).column("last_run")
+    assert str(col.type) == "timestamp[us, tz=UTC]"
+    assert col.cast("int64")[0].as_py() == TimestampType().toInternal(ts)
+    if ts.tzinfo is None:  # the time zone is really in effect
+        assert via_spark == ts
+        assert col[0].as_py().replace(tzinfo=None) != ts
+    # Spark reads the same instant off the file
+    assert spark.read.parquet(wh._watermark_path("ds")).collect()[0][0] == via_spark
+
+
+def test_spark_written_watermarks_still_read(spark, wh):
+    """Watermark partitions that Spark wrote (INT96) are read by
+    get_last_run, should_update and watermarks(), next to new ones."""
+    import pyarrow.parquet as pq
+
+    old_ts = dt.datetime(2025, 6, 1, 8, 15, 0, 250000)
+    new_ts = dt.datetime(2025, 6, 2, 9, 0, 0)
+    (spark.createDataFrame([(old_ts,)], "last_run timestamp")
+     .coalesce(1).write.parquet(wh._watermark_path("legacy")))
+    wh.update_last_run("fresh", new_ts)
+    physical = pq.ParquetFile(_watermark_file(wh, "legacy")).schema.column(0).physical_type
+    assert physical == "INT96"
+
+    assert wh.get_last_run("legacy") == old_ts
+    assert wh.get_last_run("fresh") == new_ts
+    assert not wh.should_update("legacy", 24.0, now=old_ts + dt.timedelta(hours=23))
+    assert wh.should_update("legacy", 24.0, now=old_ts + dt.timedelta(hours=24))
+    rows = {(r["dataset"], r["last_run"]) for r in wh.watermarks().collect()}
+    assert rows == {("legacy", old_ts), ("fresh", new_ts)}
+
+
+def test_watermark_of_another_type_raises(spark, wh):
+    """A stored last_run that is not a timestamp fails loudly instead
+    of reading as "never run" (which would re-run the dataset)."""
+    (spark.createDataFrame([("2025-06-01 00:00:00",)], "last_run string")
+     .coalesce(1).write.parquet(wh._watermark_path("bad")))
+    with pytest.raises(TypeError, match="last_run is stored as string"):
+        wh.get_last_run("bad")
+    with pytest.raises(TypeError, match="not a timestamp"):
+        wh.should_update("bad", 24.0, now=RUN3)
+
+
 def test_compact_and_delete_preserve_evolved_schema(spark, tmp_path):
     """Regression: compact()/delete_rows() on a schema-evolved table
     must keep the appended column (previously could drop it)."""

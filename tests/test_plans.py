@@ -217,6 +217,56 @@ def test_smart_update_large_incoming_sort_merges(spark):
         spark.conf.set(bcast, old)
 
 
+def _payload_frames(spark):
+    """(name, frame) for the raw frame of every source normalizer, plus
+    its normalized output, on a payload and on an empty one."""
+    from econdatapipeline_spark.registry import EDB_SPECS, FRED_SPECS
+    from econdatapipeline_spark.sources.excel_grid import (
+        grid_to_dataframe,
+        normalize_edb_grid,
+    )
+    from econdatapipeline_spark.sources.fred import (
+        normalize_fred_observations,
+        observations_to_dataframe,
+    )
+    from econdatapipeline_spark.sources.html_table import read_html_table
+    from econdatapipeline_spark.sources.nyu import normalize_nyu_sheet
+
+    grid = [["", 2024, 2025], ["July", "1", None], ["August", "2"]]
+    observations = {"observations": [{"date": "2025-01-01", "value": "1"},
+                                     {"date": "2025-02-01", "value": "."}]}
+    sheet = [{"Start of month": "2025-01-01", "T.Bond Rate": "4.0%",
+              "ERP (T12m)": "5.0%", "Expected Return": "9.0%"}]
+    junk_sheet = [dict(sheet[0], **{"ERP (T12m)": "n/a"})]
+    html = "<table><tr><th>Date</th><th>Value</th></tr><tr><td>2025-01-01</td><td>1</td></tr></table>"
+    header_only = "<table><tr><th>Date</th><th>Value</th></tr></table>"
+    edb, fred = EDB_SPECS[0], FRED_SPECS[0]
+    return [
+        ("grid_to_dataframe", grid_to_dataframe(spark, grid)),
+        ("normalize_edb_grid", normalize_edb_grid(spark, grid, edb)),
+        ("normalize_edb_grid/header-only", normalize_edb_grid(spark, grid[:1], edb)),
+        ("observations_to_dataframe", observations_to_dataframe(spark, observations)),
+        ("observations_to_dataframe/empty", observations_to_dataframe(spark, {"observations": []})),
+        ("normalize_fred_observations/empty", normalize_fred_observations(spark, {}, fred)),
+        ("normalize_nyu_sheet", normalize_nyu_sheet(spark, sheet)),
+        ("normalize_nyu_sheet/all-junk", normalize_nyu_sheet(spark, junk_sheet)),
+        ("read_html_table", read_html_table(spark, html)),
+        ("read_html_table/header-only", read_html_table(spark, header_only)),
+    ]
+
+
+def test_payload_frames_are_local_relations(spark):
+    """Every source hands its driver-side cells to Spark as a local
+    relation: a LocalTableScan with an exact size, never a pickled
+    Python RDD (``Scan ExistingRDD``, sizeInBytes = Long.MaxValue)."""
+    for name, df in _payload_frames(spark):
+        qe = df._jdf.queryExecution()
+        plan = qe.executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, (name, plan)
+        size = int(qe.optimizedPlan().stats().sizeInBytes())
+        assert size < 2**20, (name, size)
+
+
 def test_q13_left_join_preserves_zero_groups(spark):
     plan = plan_of(E.q_cust_order_distribution(spark, SF_DIR))
     # the outer join must survive optimization (no inner-join rewrite)
