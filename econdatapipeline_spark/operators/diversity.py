@@ -34,6 +34,10 @@ from pyspark.sql import functions as F
 
 from econdatapipeline_spark.functions.vectors import dot, norm
 
+# mmr_select's size gate: at or below this many candidates the greedy
+# loop replays on the driver, above it each round is a TakeOrdered job.
+DRIVER_SHORTLIST_GATE = 100_000
+
 
 def _r6(x):
     """Replay Spark's Round(col, 6) on a double: BigDecimal.valueOf
@@ -166,8 +170,6 @@ def mmr_select(
     id_col: str = "vec_id",
     rel_col: str = "rel",
     vec_col: str = "embedding",
-    driver_shortlist: bool | None = None,
-    driver_shortlist_threshold: int = 100_000,
 ) -> DataFrame:
     """Greedy MMR top-k -> (rank, <id_col>, rel, mmr_score).
 
@@ -177,17 +179,16 @@ def mmr_select(
     rounded MMR score (ties by id). ``mmr_score`` for rank 1 is
     lam * rel (no redundancy term yet) — the standard convention.
 
-    ``driver_shortlist=True`` collects the shortlist ONCE and replays
-    the identical greedy trajectory in Python — same left-fold dot /
-    norm order, same HALF_UP rounding via the shortest-repr decimal
-    (the bradley_terry driver-replay discipline) — removing the k
-    per-round TakeOrdered jobs whose fixed cost dominates a
-    thousands-row shortlist. Default ``None`` auto-selects the driver
-    path iff the candidate count <= ``driver_shortlist_threshold``
-    (candidates are a retrieval SHORTLIST by contract, so this is the
-    common case); pass False to force the distributed rounds for
-    oversized inputs. Both paths produce IDENTICAL rows (twin-path
-    pytest).
+    A shortlist of at most ``DRIVER_SHORTLIST_GATE`` candidates (the
+    common case: candidates are a retrieval SHORTLIST by contract) is
+    collected ONCE and the identical greedy trajectory replays in
+    Python — same left-fold dot / norm order, same HALF_UP rounding
+    via the shortest-repr decimal (the bradley_terry driver-replay
+    discipline) — removing the k per-round TakeOrdered jobs whose
+    fixed cost dominates a thousands-row shortlist. Larger inputs run
+    the distributed rounds. The twins are hash-identical
+    (tests/test_gates.py, and the contract's mmr_select with the gate
+    forced).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -204,9 +205,7 @@ def mmr_select(
     # retrieval shortlists) — derived from the input schema, never
     # assumed long; the output column keeps the caller's name too.
     id_type = dict(cand.dtypes)["id"]
-    if driver_shortlist is None:
-        driver_shortlist = cand.count() <= driver_shortlist_threshold
-    if driver_shortlist:
+    if cand.count() <= DRIVER_SHORTLIST_GATE:
         picked = _mmr_greedy_driver(cand.collect(), k, lam)
         return spark.createDataFrame(
             picked,

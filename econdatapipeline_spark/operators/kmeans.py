@@ -30,6 +30,10 @@ from pyspark.sql import functions as F
 
 from econdatapipeline_spark.sources.tables import fan_out
 
+# kmeans_lloyd's size gate for exact=None: at or below this many
+# vectors the certified decimal arithmetic runs, above it doubles.
+EXACT_GATE_ROWS = 1_000_000
+
 
 def _md5_uniform(prefix: str, id_col):
     """The engine's deterministic-randomness idiom (bootstrap_ci /
@@ -289,8 +293,6 @@ def _fit(
     rounds: int,
     seed_ids: list[int] | None,
     exact: bool | None,
-    use_arrow: bool,
-    exact_threshold: int = 1_000_000,
     init: str = "fixed",
 ):
     """Shared Lloyd loop -> (final assignment carrying its vector,
@@ -305,8 +307,6 @@ def _fit(
             f"init must be fixed|kmeanspp_md5|kmeanspar_md5,"
             f" got {init!r}"
         )
-    if use_arrow:
-        exact = False  # the numpy kernel is double arithmetic
     # fan_out BEFORE the checkpoint: the embeddings table often scans
     # as ONE parquet split, and localCheckpoint pins that layout — so
     # every per-round assignment fold (the n·d·k flops) would run as a
@@ -346,8 +346,8 @@ def _fit(
         # certification-sized inputs; above the gate the double path
         # produces the same clustering on any non-adversarial input
         # (an assignment flip needs a distance tie within one double
-        # ulp — twin-path pytest).
-        exact = vecs.count() <= exact_threshold
+        # ulp — tests/test_gates.py) but not the same hashes.
+        exact = vecs.count() <= EXACT_GATE_ROWS
     pts = (
         vecs.select("id", F.posexplode(F.col("v")))
         .select(
@@ -383,39 +383,7 @@ def _fit(
             c: [m[p] for p in sorted(m)] for c, m in sorted(by.items())
         }
 
-    def assign_arrow(c_by):
-        import numpy as np  # noqa: PLC0415
-        import pandas as pd  # noqa: PLC0415
-
-        clusters = sorted(c_by)
-        cmat = np.array([c_by[c] for c in clusters], dtype=np.float64)
-        c2 = (cmat * cmat).sum(axis=1)
-
-        def kernel(batches):
-            for pdf in batches:
-                x = np.array(pdf["v"].tolist(), dtype=np.float64)
-                d = (
-                    (x * x).sum(axis=1)[:, None]
-                    - 2.0 * (x @ cmat.T)
-                    + c2[None, :]
-                )
-                idx = d.argmin(axis=1)
-                yield pd.DataFrame(
-                    {
-                        "id": pdf["id"],
-                        "cluster": [clusters[i] for i in idx],
-                        "dl": d[np.arange(len(idx)), idx],
-                        "v": pdf["v"],
-                    }
-                )
-
-        return vecs.mapInPandas(
-            kernel, "id long, cluster int, dl double, v array<double>"
-        )
-
     def assign_fast(c_by):
-        if use_arrow:
-            return assign_arrow(c_by)
         # Exact-path accumulator is decimal(28,12), NOT a 1e12-scaled
         # long (ADVICE r7 medium): a long per-term overflows silently
         # once a squared deviation reaches ~9.2e6 (decimal->long cast
@@ -502,7 +470,6 @@ def kmeans_lloyd(
     rounds: int = 2,
     seed_ids: list[int] | None = None,
     exact: bool | None = None,
-    use_arrow: bool = False,
     init: str = "fixed",
 ) -> DataFrame:
     """Lloyd iterations -> one row per non-empty cluster
@@ -531,23 +498,14 @@ def kmeans_lloyd(
     means (measured 51 s on the same input) — same clustering on any
     non-adversarial input (assignment flips need a distance tie
     within one double ulp), but not hash-certified. The DEFAULT
-    ``exact=None`` AUTO-SELECTS (the bradley_terry/markov pattern):
-    certified mode at or below 1M vectors (certification inputs),
-    double mode above — an oracle-replayed call should pin
-    ``exact=True`` explicitly, a production corpus run gets the fast
-    arithmetic without opting in. ``use_arrow``
-    (implies inexact) swaps the fold for a vectorized numpy/Arrow
-    ``mapInPandas`` kernel; MEASURED SLOWER than the JVM fold on this
-    shape (109 s vs 51 s: the matmul wins but Arrow pays per-row
-    array<double> serialization both ways) — kept as the documented
-    escape for very large k·d where the fold expression would bloat
-    the plan; argmin's first-minimum rule preserves the
-    lowest-cluster tie-break.
+    ``exact=None`` AUTO-SELECTS on the size gate ``EXACT_GATE_ROWS``
+    (the bradley_terry/markov pattern): certified mode at or below 1M
+    vectors (certification inputs), double mode above. The two sides
+    of this gate are NOT hash-identical, so an oracle-replayed call
+    pins ``exact=True`` explicitly, and a production corpus run gets
+    the fast arithmetic without opting in.
     """
-    final, cents = _fit(
-        df, vec_col, id_col, k, rounds, seed_ids, exact, use_arrow,
-        init=init,
-    )
+    final, cents = _fit(df, vec_col, id_col, k, rounds, seed_ids, exact, init=init)
     dist = (
         final.select("cluster", F.posexplode("v"))
         .select(
@@ -608,9 +566,7 @@ def kmeans_silhouette(
     to the SQL oracle, which extends the kmeans CTE chain with the
     same stage.
     """
-    final, cents = _fit(
-        df, vec_col, id_col, k, rounds, seed_ids, True, False, init=init
-    )
+    final, cents = _fit(df, vec_col, id_col, k, rounds, seed_ids, True, init=init)
     d = (
         final.select("id", F.col("cluster").alias("own"), F.posexplode("v"))
         .select(

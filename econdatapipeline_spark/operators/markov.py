@@ -20,8 +20,14 @@ to decimal(18,9), so an oracle replays every round bit-for-bit.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# markov_stationary's size gate: at or below this many states the
+# power iteration runs on the driver, above it as distributed rounds.
+# The two paths are hash-identical. Tests monkeypatch it to force a side.
+DRIVER_STATES_GATE = 256
 
 
 def markov_transitions(
@@ -67,8 +73,6 @@ def markov_transitions(
 def markov_stationary(
     transitions: DataFrame,
     rounds: int = 12,
-    driver_states: bool | None = None,
-    driver_states_threshold: int = 256,
 ) -> DataFrame:
     """Stationary distribution of a transition relation
     (from_state, to_state, n) -> one row per state (state, pi).
@@ -84,14 +88,15 @@ def markov_stationary(
     states-sized aggregate; ``rounds`` bounds the loop (the
     bpe_train/pagerank driver-loop discipline). For SMALL chains the
     per-round scheduling overhead dominates (measured ~3 s for 12
-    rounds on a 5-state chain at sf0.1 — all fixed cost), so the
-    default auto-selects a driver loop when the state count is at most
-    ``driver_states_threshold`` (the bradley_terry discipline): the
-    k²-bounded P collects once and Python replays the engine's EXACT
-    quantization chain (double product -> decimal(28,12) HALF_UP of
-    the shortest double repr -> exact sum -> correctly-rounded double
-    -> decimal(18,9) HALF_UP), so both paths are value-identical
-    (twin-path pytest). Measured 2.97 s -> ~0.4 s.
+    rounds on a 5-state chain at sf0.1 — all fixed cost), so a chain
+    of at most ``DRIVER_STATES_GATE`` states runs a driver loop (the
+    bradley_terry discipline): the k²-bounded P collects once and
+    Python replays the engine's EXACT quantization chain (double
+    product -> decimal(28,12) HALF_UP of the shortest double repr ->
+    exact sum -> correctly-rounded double -> decimal(18,9) HALF_UP).
+    The twins are hash-identical (tests/test_gates.py, and the
+    contract's markov_stationary with the gate forced). Measured
+    2.97 s -> ~0.4 s.
     """
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
@@ -118,7 +123,10 @@ def markov_stationary(
     )
     k = states.count()
     if k == 0:
-        return spark.createDataFrame([], "state string, pi double")
+        # an empty Arrow table plans as a local relation, not an RDD scan
+        return spark.createDataFrame(
+            pa.schema([("state", pa.string()), ("pi", pa.double())]).empty_table()
+        )
     # absorbing states (no outgoing row) self-loop with p = 1
     sinks = (
         states.join(
@@ -131,9 +139,7 @@ def markov_stationary(
         )
     )
     p_full = p_rel.unionByName(sinks).localCheckpoint(eager=True)
-    if driver_states is None:
-        driver_states = k <= driver_states_threshold
-    if driver_states:
+    if k <= DRIVER_STATES_GATE:
         from decimal import ROUND_HALF_UP, Decimal  # noqa: PLC0415
 
         q12 = Decimal("0.000000000001")

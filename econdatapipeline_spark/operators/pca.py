@@ -32,6 +32,12 @@ from pyspark.sql import functions as F
 from ..sources.tables import fan_out as _fan_out_capped
 
 
+# pca_power's size gate: above this many vectors the moment and
+# per-round sums use the wide d-column aggregate, at or below it the
+# narrow posexplode form.
+WIDE_GATE_ROWS = 100_000
+
+
 def _q9(x: float) -> float:
     return math.floor(x * 1e9 + 0.5) / 1e9
 
@@ -41,7 +47,6 @@ def pca_power(
     vec_col: str = "embedding",
     dims: int = 64,
     rounds: int = 8,
-    wide_threshold: int = 100_000,
 ) -> DataFrame:
     """Top principal component -> one row per dimension:
     (dim, loading, eigenvalue, explained).
@@ -52,8 +57,9 @@ def pca_power(
 
     The per-round / moment aggregates have TWO plan shapes carrying
     the IDENTICAL decimal-quantized per-term values (order-free sums,
-    so the totals — and therefore every output — are bit-identical;
-    twin-path pytest): at or below ``wide_threshold`` vectors the
+    so the totals — and therefore every output — are hash-identical;
+    tests/test_gates.py, and the contract's pca_power with the gate
+    forced): at or below ``WIDE_GATE_ROWS`` vectors the
     narrow (pos, term) posexplode form (one ~3-node aggregate;
     Catalyst codegen for the d-column form costs ~1-2.5 s/round,
     dominating small inputs), above it the WIDE d-column aggregate —
@@ -93,7 +99,7 @@ def pca_power(
         _fan_out_capped
     ).localCheckpoint(eager=True)
     n = x.count()
-    use_wide = n > wide_threshold
+    use_wide = n > WIDE_GATE_ROWS
     # moment sums: narrow (pos, e) explode below the gate (one ~3-node
     # hash aggregate; the 2d-column wide form spent ~2.5 s in codegen
     # alone at d=64), WIDE d-column aggregate above it (the explode

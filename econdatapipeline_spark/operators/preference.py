@@ -32,14 +32,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# bradley_terry's size gate: at or below this many distinct items the
+# MM rounds keep theta on the driver, above it they run as joins.
+DRIVER_ITEMS_GATE = 100_000
+
 
 def bradley_terry(
     df: DataFrame,
     winner_col: str = "winner",
     loser_col: str = "loser",
     rounds: int = 8,
-    driver_items: bool | None = None,
-    driver_items_threshold: int = 100_000,
 ) -> DataFrame:
     """Fit Bradley-Terry strengths -> (item, wins, games, theta).
 
@@ -47,25 +49,18 @@ def bradley_terry(
     only as losers get theta -> 0 (the boundary MLE); ties are not a
     BT concept — pre-filter or split them upstream.
 
-    ``driver_items=True`` keeps the items-sized theta vector ON THE
-    DRIVER between rounds: the edge relation is pre-grouped once into
-    an items-sized adjacency with dense theta indices, each round is
-    ONE shuffle-free fold over it with theta shipped as a 1-row
-    broadcast array, then a Python update replaying the engine's
-    exact quantization (floor half-up to 9 decimals; exact-integer
-    sums). Measured 18.7 s -> ~5 s at sf0.1 for the driver loop vs
-    the per-round broadcast-join + checkpoint form (and the adjacency
-    fold removes the remaining per-round join+shuffle), which
-    ``driver_items=False`` keeps for item universes too large for
-    driver state (per-document preference graphs) — both paths
-    produce IDENTICAL thetas (twin-path pytest).
-
-    Default ``driver_items=None`` AUTO-SELECTS on the already-computed
-    distinct item count: driver path iff ``n_items <=
-    driver_items_threshold``. A default that materializes driver state
-    sized by a data-dependent distinct count is a footgun at corpus
-    scale — model-ranking duel tables stay on the fast path, a
-    per-document graph silently gets the distributed one.
+    At or below ``DRIVER_ITEMS_GATE`` distinct items the items-sized
+    theta vector stays ON THE DRIVER between rounds: the edge relation
+    is pre-grouped once into an items-sized adjacency with dense theta
+    indices, each round is ONE shuffle-free fold over it with theta
+    shipped as a 1-row broadcast array, then a Python update replaying
+    the engine's exact quantization (floor half-up to 9 decimals;
+    exact-integer sums). Measured 18.7 s -> ~5 s at sf0.1 against the
+    per-round broadcast-join + checkpoint form, which runs above the
+    gate, where driver state sized by a data-dependent distinct count
+    (a per-document preference graph) would not fit. The twins are
+    hash-identical (tests/test_gates.py, and the contract's
+    bradley_terry with the gate forced).
     """
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
@@ -103,9 +98,7 @@ def bradley_terry(
         .localCheckpoint(eager=True)
     )
     n_items = items.count()
-    if driver_items is None:
-        driver_items = n_items <= driver_items_threshold
-    if driver_items:
+    if n_items <= DRIVER_ITEMS_GATE:
         import math  # noqa: PLC0415
 
         item_rows = items.collect()

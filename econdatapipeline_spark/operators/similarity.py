@@ -24,6 +24,10 @@ from pyspark.sql import functions as F
 from econdatapipeline_spark.functions.vectors import dot, norm, sign_bucket
 from econdatapipeline_spark.sources.tables import fan_out
 
+# brute_force_topk's size gate: above this many query rows the cosine
+# runs in the Arrow/BLAS kernel instead of JVM column expressions.
+EXPR_QUERIES_GATE = 256
+
 
 def brute_force_topk(
     corpus: DataFrame,
@@ -31,7 +35,6 @@ def brute_force_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_expr_queries: int = 256,
 ) -> DataFrame:
     """Exact cosine top-k for every query vector.
 
@@ -44,18 +47,20 @@ def brute_force_topk(
     ~(n_queries x dims x 8) bytes; thousands of queries is fine,
     a fact-table-sized query side is not (bucket with lsh_topk /
     operators/ivf instead). Within the contract, a size gate (the
-    yuen_ttest/bradley_terry pattern) picks the kernel: up to
-    ``max_expr_queries`` query rows, the pure column-expression
+    bradley_terry pattern) picks the kernel: up to
+    ``EXPR_QUERIES_GATE`` query rows, the pure column-expression
     cosine (JVM-side, zero Python); above it, the Arrow/BLAS twin
     (``brute_force_topk_arrow``), whose per-pair cost is vectorized —
     the expression path evaluates the fold interpreted per element
     and loses badly once n_queries x corpus pairs dominate. Both
-    paths share one output contract (ties broken by neighbor id);
-    cos agrees to the 6-dp rounding. The gate costs one count() of
-    the (small) query side; pass max_expr_queries explicitly to pin
-    a kernel for hash-certified use.
+    share one output contract (ties broken by neighbor id), but the
+    twins are not guaranteed hash-identical: the Arrow kernel sums in
+    another order, so a cos can round to the other 6-dp neighbour (the
+    five contract queries that reach the gate still hash-match with it
+    forced, PARITY_gates.json). The gate costs one count() of the
+    (small) query side.
     """
-    if max_expr_queries >= 0 and queries.count() > max_expr_queries:
+    if queries.count() > EXPR_QUERIES_GATE:
         return brute_force_topk_arrow(
             corpus, queries, k=k, id_col=id_col, vec_col=vec_col
         )

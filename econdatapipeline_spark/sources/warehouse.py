@@ -29,6 +29,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from econdatapipeline_spark.registry import (
     METADATA_SCHEMA,
@@ -114,7 +115,13 @@ class Warehouse:
         """
         if self.exists(table):
             return self.spark.read.schema(schema).parquet(self.path(table))
-        return self.spark.createDataFrame([], schema)
+        return self._empty(schema)
+
+    def _empty(self, schema) -> DataFrame:
+        """An empty frame of ``schema`` as a local relation: an empty
+        Arrow table, not an empty list, which would plan as a pickled
+        RDD scan of unknown size."""
+        return self.spark.createDataFrame(to_arrow_schema(schema).empty_table())
 
     def point_lookup(self, table: str, date) -> DataFrame:
         """Single-row fetch by key (== get_entity, azure_connector.py:219-242).
@@ -656,7 +663,7 @@ class Warehouse:
         if not os.path.isdir(p) or not any(
             e.startswith("dataset=") for e in os.listdir(p)
         ):
-            return self.spark.createDataFrame([], METADATA_SCHEMA)
+            return self._empty(METADATA_SCHEMA)
         return self.spark.read.parquet(p).select(
             F.col("dataset").cast("string"), "last_run"
         )

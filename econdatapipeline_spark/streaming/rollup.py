@@ -20,6 +20,7 @@ merge's existing side prunes to touched buckets via the key join.
 
 from __future__ import annotations
 
+from dataclasses import replace
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
@@ -60,7 +61,9 @@ def refresh_rollup(
 
     Recomputes the touched buckets from (existing rollup + new batch
     deltas) and merges: unseen buckets insert; restated buckets update
-    and emit revision rows keyed by the bucket.
+    and emit revision rows keyed by the bucket. Commits through
+    ``Warehouse.apply_merge``, so a failed table write appends no
+    revision rows.
     """
     # ONE pinned timestamp per refresh (smart_update requires run_ts).
     run_ts = run_ts or datetime.now(timezone.utc).replace(tzinfo=None)
@@ -87,18 +90,20 @@ def refresh_rollup(
         dataset=table,
         run_ts=run_ts,
     )
-    # Re-attach the descriptive columns for the stored table.
-    merged = res.merged.join(
-        combined.select("bucket_key", "bucket", "event_type").unionByName(
-            existing.select("bucket_key", "bucket", "event_type")
-        ).dropDuplicates(["bucket_key"]),
-        "bucket_key",
+    # Re-attach the descriptive columns for the stored table. The merge
+    # stays keyed on bucket_key alone: concat_ws skips a null
+    # event_type, so its bucket still matches itself on the next
+    # refresh, where an equi-join on event_type would re-insert it.
+    # combined carries every key of existing, so no row is lost.
+    tagged = res.tagged.join(
+        combined.select("bucket_key", "bucket", "event_type"), "bucket_key"
     )
-    counts = res.counts()
-    if counts["revisions"]:
-        wh.append_revisions(res.revisions)
-    wh.write_dataset(merged, table, extra_files=extra_files)
-    return counts
+    res = replace(
+        res,
+        tagged=tagged,
+        merged=tagged.select("bucket_key", *value_cols, "bucket", "event_type"),
+    )
+    return wh.apply_merge(res, table, extra_files=extra_files)
 
 
 def refresh_rollup_once(

@@ -65,42 +65,3 @@ def test_k_larger_than_pool_and_validation(spark):
         mmr_select(_cand(spark), k=0)
     with pytest.raises(ValueError):
         mmr_select(_cand(spark), lam=1.5)
-
-
-def test_mmr_driver_and_distributed_paths_agree(spark):
-    """Twin-path contract: the collected driver replay (the default
-    for shortlist-sized inputs) and the distributed per-round
-    TakeOrdered produce IDENTICAL rows — same picks, same rounded
-    scores — including on rel ties broken by ascending id."""
-    rows = [
-        (1, 0.90, [1.0, 0.0, 0.0]),
-        (2, 0.90, [1.0, 0.0, 0.0]),   # exact tie with id 1 -> id wins
-        (3, 0.88, [0.998, 0.02, 0.0]),
-        (4, 0.60, [0.0, 1.0, 0.0]),
-        (5, 0.55, [0.0, 0.8, 0.6]),
-    ]
-    cand = spark.createDataFrame(
-        rows, "vec_id long, rel double, embedding array<float>"
-    )
-    a = mmr_select(cand, k=5, lam=0.6, driver_shortlist=True).collect()
-    b = mmr_select(cand, k=5, lam=0.6, driver_shortlist=False).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    assert [r["vec_id"] for r in a][0] == 1  # tie broken by id asc
-
-
-def test_mmr_auto_selects_distributed_past_threshold(spark):
-    """driver_shortlist=None must auto-route oversized candidate sets
-    to the distributed rounds (driver state sized by a data-dependent
-    count is never a default) and still agree with the driver path."""
-    rows = [
-        (i, 1.0 - i * 0.01, [float(i % 3), float((i + 1) % 3), 1.0])
-        for i in range(12)
-    ]
-    cand = spark.createDataFrame(
-        rows, "vec_id long, rel double, embedding array<float>"
-    )
-    auto = mmr_select(
-        cand, k=3, lam=0.7, driver_shortlist_threshold=5
-    ).collect()
-    drv = mmr_select(cand, k=3, lam=0.7, driver_shortlist=True).collect()
-    assert [tuple(r) for r in auto] == [tuple(r) for r in drv]

@@ -217,9 +217,11 @@ def test_smart_update_large_incoming_sort_merges(spark):
         spark.conf.set(bcast, old)
 
 
-def _payload_frames(spark):
+def _payload_frames(spark, root):
     """(name, frame) for the raw frame of every source normalizer, plus
-    its normalized output, on a payload and on an empty one."""
+    its normalized output, on a payload and on an empty one, and the
+    empty frames a warehouse under ``root`` hands out before its first
+    write."""
     from econdatapipeline_spark.registry import EDB_SPECS, FRED_SPECS
     from econdatapipeline_spark.sources.excel_grid import (
         grid_to_dataframe,
@@ -231,6 +233,7 @@ def _payload_frames(spark):
     )
     from econdatapipeline_spark.sources.html_table import read_html_table
     from econdatapipeline_spark.sources.nyu import normalize_nyu_sheet
+    from econdatapipeline_spark.sources.warehouse import Warehouse
 
     grid = [["", 2024, 2025], ["July", "1", None], ["August", "2"]]
     observations = {"observations": [{"date": "2025-01-01", "value": "1"},
@@ -241,6 +244,7 @@ def _payload_frames(spark):
     html = "<table><tr><th>Date</th><th>Value</th></tr><tr><td>2025-01-01</td><td>1</td></tr></table>"
     header_only = "<table><tr><th>Date</th><th>Value</th></tr></table>"
     edb, fred = EDB_SPECS[0], FRED_SPECS[0]
+    wh = Warehouse(spark, str(root))
     return [
         ("grid_to_dataframe", grid_to_dataframe(spark, grid)),
         ("normalize_edb_grid", normalize_edb_grid(spark, grid, edb)),
@@ -252,14 +256,16 @@ def _payload_frames(spark):
         ("normalize_nyu_sheet/all-junk", normalize_nyu_sheet(spark, junk_sheet)),
         ("read_html_table", read_html_table(spark, html)),
         ("read_html_table/header-only", read_html_table(spark, header_only)),
+        ("Warehouse.read_or_empty/missing", wh.read_or_empty(edb.name, edb.spark_schema())),
+        ("Warehouse.watermarks/empty", wh.watermarks()),
     ]
 
 
-def test_payload_frames_are_local_relations(spark):
+def test_payload_frames_are_local_relations(spark, tmp_path):
     """Every source hands its driver-side cells to Spark as a local
     relation: a LocalTableScan with an exact size, never a pickled
     Python RDD (``Scan ExistingRDD``, sizeInBytes = Long.MaxValue)."""
-    for name, df in _payload_frames(spark):
+    for name, df in _payload_frames(spark, tmp_path):
         qe = df._jdf.queryExecution()
         plan = qe.executedPlan().toString()
         assert "LocalTableScan" in plan and "ExistingRDD" not in plan, (name, plan)

@@ -47,41 +47,3 @@ def test_bt_never_winner_goes_to_zero_and_validation(spark):
     assert out["A"]["theta"] > 0
     with pytest.raises(ValueError):
         bradley_terry(df, rounds=0)
-
-
-def test_bt_auto_selects_distributed_path_past_threshold(spark):
-    """The default (driver_items=None) auto-selects on the distinct
-    item count: a per-document-scale preference graph takes the
-    distributed path WITHOUT the caller opting in (VERDICT r6 #5 —
-    driver state sized by a data-dependent count must not be a
-    default), and both autos agree with the explicit paths."""
-    rows = [(f"d{i}", f"d{i+1}") for i in range(30)]
-    df = spark.createDataFrame(rows, SCHEMA)
-    # 31 items, threshold 10 -> auto goes distributed
-    auto = {
-        r["item"]: r
-        for r in bradley_terry(
-            df, rounds=3, driver_items_threshold=10
-        ).collect()
-    }
-    explicit = {
-        r["item"]: r
-        for r in bradley_terry(df, rounds=3, driver_items=False).collect()
-    }
-    fast = {
-        r["item"]: r
-        for r in bradley_terry(df, rounds=3, driver_items=True).collect()
-    }
-    assert set(auto) == set(explicit) == set(fast)
-    for it in auto:
-        assert auto[it]["theta"] == explicit[it]["theta"] == fast[it]["theta"]
-    # threshold at/above the item count -> auto stays on the driver path
-    auto_fast = {
-        r["item"]: r
-        for r in bradley_terry(
-            df, rounds=3, driver_items_threshold=31
-        ).collect()
-    }
-    assert {k: v["theta"] for k, v in auto_fast.items()} == {
-        k: v["theta"] for k, v in fast.items()
-    }

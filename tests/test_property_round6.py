@@ -186,36 +186,6 @@ def test_hhi_matches_python_and_orders_by_concentration(spark):
     assert got2["hhi"] > got["hhi"]
 
 
-def test_bradley_terry_paths_agree(spark):
-    """driver_items=True (literal replay) and False (relational
-    rounds) produce IDENTICAL thetas — the twin-path contract."""
-    from econdatapipeline_spark.operators.preference import bradley_terry
-
-    rng = random.Random(13)
-    items = [f"p{i}" for i in range(6)]
-    strength = {it: rng.uniform(0.5, 3.0) for it in items}
-    rows = []
-    for _ in range(300):
-        a, b = rng.sample(items, 2)
-        pa = strength[a] / (strength[a] + strength[b])
-        rows.append((a, b) if rng.random() < pa else (b, a))
-    df = spark.createDataFrame(rows, "winner string, loser string")
-    fast = {r["item"]: r for r in bradley_terry(df, rounds=5).collect()}
-    slow = {
-        r["item"]: r
-        for r in bradley_terry(df, rounds=5, driver_items=False).collect()
-    }
-    assert set(fast) == set(slow)
-    for it in fast:
-        assert fast[it]["theta"] == slow[it]["theta"], it
-        assert fast[it]["wins"] == slow[it]["wins"]
-        assert fast[it]["games"] == slow[it]["games"]
-    # fitted order tracks true strength for the extremes
-    best = max(items, key=lambda i: strength[i])
-    worst = min(items, key=lambda i: strength[i])
-    assert fast[best]["theta"] > fast[worst]["theta"]
-
-
 def test_pca_power_matches_numpy_eigh(spark):
     """Top component from numpy's exact eigendecomposition on random
     low-rank-ish data: |cos(angle)| near 1, eigenvalue close."""

@@ -110,3 +110,40 @@ def test_refresh_rollup_once_run_id_scopes_the_marker(spark):
     )
     assert fresh["new"] == 1
     assert wh.read("events_rollup_1h").count() == 2
+
+
+def test_failed_stage_appends_no_revisions(spark, tmp_path, monkeypatch):
+    """A refresh commits like Warehouse.apply_merge: when the staged
+    table write fails, no revision row reaches the log and the table is
+    untouched. The retry then restates the bucket once; a null
+    event_type folds into its one bucket instead of re-inserting it."""
+    import os
+
+    import pytest
+    from pyspark.sql import DataFrameWriter
+
+    t = dt.datetime(2024, 1, 1, 10, 15)
+    wh = Warehouse(spark, str(tmp_path))
+    refresh_rollup(wh, _events(spark, [(1, t, None, 2.0)]), run_ts=RUN_TS)
+    table = sorted(map(tuple, wh.read("events_rollup_1h").collect()))
+    real_parquet = DataFrameWriter.parquet
+
+    def failing_parquet(self, path, *args, **kwargs):
+        if path.endswith("__staging"):
+            raise OSError("injected: staging write failed")
+        return real_parquet(self, path, *args, **kwargs)
+
+    late = _events(spark, [(2, t, None, 3.0)])
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    with pytest.raises(OSError, match="injected"):
+        refresh_rollup(wh, late, run_ts=RUN_TS)
+    monkeypatch.undo()
+
+    assert wh.revisions().count() == 0
+    assert sorted(map(tuple, wh.read("events_rollup_1h").collect())) == table
+    assert not os.path.isdir(wh.path("events_rollup_1h") + "__staging")
+
+    assert refresh_rollup(wh, late, run_ts=RUN_TS) == {"new": 0, "updated": 1, "revisions": 2}
+    rows = wh.read("events_rollup_1h").collect()
+    assert [(r["event_type"], r["n_events"], r["sum_value"]) for r in rows] == [(None, 2.0, 5.0)]
+    assert wh.revisions().count() == 2

@@ -373,30 +373,6 @@ def test_editdist_dedup_block_cap_drops_hot_blocks(spark):
     assert out == []  # whole block over the cap -> dropped, not O(n²)
 
 
-def test_markov_stationary_paths_identical(spark):
-    """Driver replay (auto at small k) and the distributed relational
-    path produce IDENTICAL pi — the bradley_terry twin-path contract,
-    here proving the Python quantization replay is exact."""
-    from econdatapipeline_spark.operators.markov import markov_stationary
-
-    rng = random.Random(23)
-    states = [f"s{i}" for i in range(7)]
-    rows = []
-    for a in states:
-        for b in states:
-            if rng.random() < 0.6:
-                rows.append((a, b, rng.randint(1, 9)))
-    t = spark.createDataFrame(
-        rows, "from_state string, to_state string, n long"
-    )
-    fast = {r["state"]: r["pi"]
-            for r in markov_stationary(t, rounds=9).collect()}
-    slow = {r["state"]: r["pi"]
-            for r in markov_stationary(
-                t, rounds=9, driver_states=False).collect()}
-    assert fast == slow
-
-
 def test_survival_size_gate_paths_identical(spark, monkeypatch):
     """The small-relation window path and the distributed two-pass
     path of ordered_cumsum produce BIT-IDENTICAL kaplan_meier curves
@@ -679,25 +655,6 @@ def test_kmeans_fast_mode_agrees_on_separated_data(spark):
           for r in kmeans_lloyd(df, k=2, rounds=3, seed_ids=[0, 1],
                                 exact=False).collect()}
     assert ex == fa == {1: 41, 2: 41}
-
-
-def test_kmeans_arrow_mode_agrees(spark):
-    from econdatapipeline_spark.operators.kmeans import kmeans_lloyd
-
-    rng = random.Random(43)
-    rows = [(0, [0.0, 0.0, 0.0]), (1, [9.0, 9.0, 9.0])]
-    vid = 2
-    for i in range(60):
-        c = [(0.0, 0.0, 0.0), (9.0, 9.0, 9.0)][i % 2]
-        rows.append((vid, [a + rng.gauss(0, 0.3) for a in c]))
-        vid += 1
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    ex = {r["cluster"]: r["n_vecs"]
-          for r in kmeans_lloyd(df, k=2, rounds=2, seed_ids=[0, 1]).collect()}
-    ar = {r["cluster"]: r["n_vecs"]
-          for r in kmeans_lloyd(df, k=2, rounds=2, seed_ids=[0, 1],
-                                use_arrow=True).collect()}
-    assert ex == ar == {1: 31, 2: 31}
 
 
 def test_sessionize_without_value_col(spark):

@@ -35,27 +35,6 @@ def test_kmeans_auto_select_small_input_is_exact(spark):
     assert [tuple(r) for r in auto] == [tuple(r) for r in exact]
 
 
-def test_kmeans_auto_select_gate_picks_double_above_threshold(spark):
-    """Above the gate the double path engages and yields the same
-    clustering on separated data (twin-path identity, VERDICT r7 #3)."""
-    from econdatapipeline_spark.operators import kmeans as km
-
-    df = _blob_df(spark, [[0.0] * 4, [5.0] * 4])
-    fin_fast, _ = km._fit(
-        df, "embedding", "vec_id", 2, 2, [0, 20], None, False,
-        exact_threshold=1,
-    )
-    fin_exact, _ = km._fit(
-        df, "embedding", "vec_id", 2, 2, [0, 20], True, False
-    )
-    fast = {r["id"]: r["cluster"] for r in fin_fast.collect()}
-    ex = {r["id"]: r["cluster"] for r in fin_exact.collect()}
-    assert fast == ex
-    # the gate actually selected the double path: dl is a double there
-    assert dict(fin_fast.dtypes)["dl"] == "double"
-    assert dict(fin_exact.dtypes)["dl"].startswith("decimal")
-
-
 def test_kmeans_exact_fold_survives_large_magnitudes(spark):
     """Squared deviations past ~9.2e6 overflowed the old 1e12-scaled
     long fold to NULL (silently corrupting assignments via array_min's
@@ -823,19 +802,3 @@ def test_editdist_suffix_pass_recovers_early_edits(spark):
     assert len(keys) == len(set(keys))
     with pytest.raises(ValueError):
         editdist_dedup(df, blocks=("middle",))
-
-
-# ---------------------------------------------------------------------------
-# pca_power wide-aggregate shape gate
-# ---------------------------------------------------------------------------
-
-def test_pca_power_wide_shape_is_bit_identical(spark):
-    """The corpus-scale WIDE d-column aggregate carries the identical
-    decimal-quantized terms as the narrow posexplode form — order-free
-    sums, so every output row is bit-identical across the gate."""
-    from econdatapipeline_spark.operators.pca import pca_power
-
-    df = _blob_df(spark, [[0.0] * 6, [3.0] * 6], n_per=25, dim=6)
-    narrow = pca_power(df, dims=6, rounds=4).collect()
-    wide = pca_power(df, dims=6, rounds=4, wide_threshold=0).collect()
-    assert [tuple(r) for r in narrow] == [tuple(r) for r in wide]

@@ -78,34 +78,6 @@ def test_arrow_bruteforce_matches_expression_form(spark):
     assert sorted(map(tuple, expr)) == sorted(map(tuple, arrow))
 
 
-def test_bruteforce_size_gate_routes_large_query_side_to_arrow(spark):
-    """Adversarial query side: above max_expr_queries the gate must
-    route to the Arrow/BLAS twin and still produce the exact result.
-
-    The gate is observable in the plan: the expression path has no
-    Python stage, the Arrow path carries one (MapInPandas /
-    ArrowEvalPython). A 40-query side with max_expr_queries=8 must
-    take the Arrow kernel; the same call with the gate disabled
-    (max_expr_queries large) must not.
-    """
-    from econdatapipeline_spark.operators.similarity import brute_force_topk
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = e.filter(F.col("vec_id") < 40)  # > the pinned gate below
-
-    gated = brute_force_topk(e, queries, k=3, max_expr_queries=8)
-    ungated = brute_force_topk(e, queries, k=3, max_expr_queries=1_000_000)
-    gated_plan = gated._jdf.queryExecution().executedPlan().toString()
-    ungated_plan = ungated._jdf.queryExecution().executedPlan().toString()
-    assert "InPandas" in gated_plan or "ArrowEval" in gated_plan
-    assert "InPandas" not in ungated_plan and "ArrowEval" not in ungated_plan
-
-    # Same answer either side of the gate (ranks identical; cos to 6dp).
-    g = sorted((r["query_id"], r["rank"], r["neighbor_id"]) for r in gated.collect())
-    u = sorted((r["query_id"], r["rank"], r["neighbor_id"]) for r in ungated.collect())
-    assert g == u
-
-
 def test_embedding_centroids_exact_means(spark):
     from econdatapipeline_spark.operators.similarity import embedding_centroids
 
