@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pytest
 
+from econdatapipeline_spark.operators import diversity
 from econdatapipeline_spark.operators.diversity import mmr_select
 
 
@@ -65,3 +66,58 @@ def test_k_larger_than_pool_and_validation(spark):
         mmr_select(_cand(spark), k=0)
     with pytest.raises(ValueError):
         mmr_select(_cand(spark), lam=1.5)
+
+
+def test_mmr_driver_and_distributed_paths_agree(spark, monkeypatch):
+    """Twin paths, forced through DRIVER_SHORTLIST_GATE on 6 candidates
+    with k=5: at 6 the greedy loop replays on the driver, at 5 every
+    later pick is its own TakeOrdered job (at least k-1 more jobs).
+    The rows are IDENTICAL — same picks, same rounded scores —
+    including on a rel tie broken by ascending id."""
+    from tests.test_gates import _run
+
+    rows = [
+        (1, 0.90, [1.0, 0.0, 0.0]),
+        (2, 0.90, [1.0, 0.0, 0.0]),   # exact tie with id 1 -> id wins
+        (3, 0.88, [0.998, 0.02, 0.0]),
+        (4, 0.60, [0.0, 1.0, 0.0]),
+        (5, 0.55, [0.0, 0.8, 0.6]),
+        (6, 0.50, [0.5, 0.5, 0.5]),
+    ]
+    cand = spark.createDataFrame(
+        rows, "vec_id long, rel double, embedding array<float>"
+    )
+    got, jobs = {}, {}
+    for gate in (6, 5):
+        monkeypatch.setattr(diversity, "DRIVER_SHORTLIST_GATE", gate)
+        got[gate], jobs[gate], _ = _run(
+            spark, f"mmr-paths-{gate}",
+            lambda: [tuple(r) for r in mmr_select(cand, k=5, lam=0.6).collect()],
+        )
+    assert jobs[5] >= jobs[6] + 4, jobs
+    assert got[6] == got[5]
+    assert got[6][0][1] == 1  # tie broken by id asc
+
+
+def test_mmr_auto_selects_distributed_past_threshold(spark, monkeypatch):
+    """A candidate set well past DRIVER_SHORTLIST_GATE (12 against 5)
+    routes to the distributed rounds (k-1 more jobs than the driver
+    replay) and still agrees with the driver path."""
+    from tests.test_gates import _run
+
+    rows = [
+        (i, 1.0 - i * 0.01, [float(i % 3), float((i + 1) % 3), 1.0])
+        for i in range(12)
+    ]
+    cand = spark.createDataFrame(
+        rows, "vec_id long, rel double, embedding array<float>"
+    )
+    got, jobs = {}, {}
+    for gate in (5, 12):
+        monkeypatch.setattr(diversity, "DRIVER_SHORTLIST_GATE", gate)
+        got[gate], jobs[gate], _ = _run(
+            spark, f"mmr-auto-{gate}",
+            lambda: [tuple(r) for r in mmr_select(cand, k=3, lam=0.7).collect()],
+        )
+    assert jobs[5] >= jobs[12] + 2, jobs
+    assert got[5] == got[12]

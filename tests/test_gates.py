@@ -3,7 +3,9 @@ input size with one module constant. One test per gate forces each side
 by setting the constant just below and at the measured size, checks
 which side ran (plan, job count or dtype), and compares the results.
 A test that did not check the side would pass twice over one path once
-the code stopped reading its constant."""
+the code stopped reading its constant. The bradley_terry and mmr_select
+gates are tested the same way in test_preference.py,
+test_property_round6.py and test_diversity.py."""
 
 from __future__ import annotations
 
@@ -11,7 +13,7 @@ import random
 
 from pyspark.sql import functions as F
 
-from econdatapipeline_spark.operators import diversity, kmeans, markov, pca, preference, similarity
+from econdatapipeline_spark.operators import kmeans, markov, pca, similarity
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -62,59 +64,6 @@ def test_markov_stationary_gate(spark, monkeypatch):
     assert "Join" not in _plan(out[7])
     assert "Join" in _plan(out[6])
     assert sorted(map(tuple, out[7].collect())) == sorted(map(tuple, out[6].collect()))
-
-
-def test_bradley_terry_gate(spark, monkeypatch):
-    """7 items, one of which never wins: at DRIVER_ITEMS_GATE = 7 the
-    driver loop runs, at 6 the relational rounds (the output joins
-    theta back to the items); every row is identical."""
-    rng = random.Random(13)
-    items = [f"p{i}" for i in range(6)]
-    strength = {it: rng.uniform(0.5, 3.0) for it in items}
-    rows = [("p0", "z")] * 3
-    for _ in range(300):
-        a, b = rng.sample(items, 2)
-        pa = strength[a] / (strength[a] + strength[b])
-        rows.append((a, b) if rng.random() < pa else (b, a))
-    df = spark.createDataFrame(rows, "winner string, loser string")
-    out = {}
-    for gate in (7, 6):
-        monkeypatch.setattr(preference, "DRIVER_ITEMS_GATE", gate)
-        out[gate] = preference.bradley_terry(df, rounds=5)
-    assert "Join" not in _plan(out[7])
-    assert "Join" in _plan(out[6])
-    driver = {r["item"]: tuple(r) for r in out[7].collect()}
-    assert driver == {r["item"]: tuple(r) for r in out[6].collect()}
-    assert driver["z"][1:] == (0, 3, 0.0)  # never won: theta 0
-    best = max(items, key=lambda i: strength[i])
-    worst = min(items, key=lambda i: strength[i])
-    assert driver[best][3] > driver[worst][3]
-
-
-def test_mmr_select_gate(spark, monkeypatch):
-    """6 candidates, k=5: at DRIVER_SHORTLIST_GATE = 6 the greedy loop
-    replays on the driver, at 5 every later pick is its own TakeOrdered
-    job (at least k-1 more jobs); the picks, including a rel tie broken
-    by ascending id, are identical."""
-    rows = [
-        (1, 0.90, [1.0, 0.0, 0.0]),
-        (2, 0.90, [1.0, 0.0, 0.0]),  # exact tie with id 1 -> id wins
-        (3, 0.88, [0.998, 0.02, 0.0]),
-        (4, 0.60, [0.0, 1.0, 0.0]),
-        (5, 0.55, [0.0, 0.8, 0.6]),
-        (6, 0.50, [0.5, 0.5, 0.5]),
-    ]
-    cand = spark.createDataFrame(rows, "vec_id long, rel double, embedding array<float>")
-    got, jobs = {}, {}
-    for gate in (6, 5):
-        monkeypatch.setattr(diversity, "DRIVER_SHORTLIST_GATE", gate)
-        got[gate], jobs[gate], _ = _run(
-            spark, f"gate-mmr-{gate}",
-            lambda: [tuple(r) for r in diversity.mmr_select(cand, k=5, lam=0.6).collect()],
-        )
-    assert jobs[5] >= jobs[6] + 4, jobs
-    assert got[6] == got[5]
-    assert got[6][0][1] == 1
 
 
 def test_brute_force_topk_gate(spark, monkeypatch):

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pytest
 
+from econdatapipeline_spark.operators import preference
 from econdatapipeline_spark.operators.preference import bradley_terry
 
 SCHEMA = "winner string, loser string"
@@ -47,3 +48,23 @@ def test_bt_never_winner_goes_to_zero_and_validation(spark):
     assert out["A"]["theta"] > 0
     with pytest.raises(ValueError):
         bradley_terry(df, rounds=0)
+
+
+def test_bt_auto_selects_distributed_path_past_threshold(spark, monkeypatch):
+    """A preference graph well past DRIVER_ITEMS_GATE (31 items against
+    10) takes the relational rounds (the output joins theta back to
+    the items); with the gate at the item count the driver loop runs
+    (no join); both give identical rows."""
+    from tests.test_gates import _plan
+
+    rows = [(f"d{i}", f"d{i+1}") for i in range(30)]
+    df = spark.createDataFrame(rows, SCHEMA)
+    out = {}
+    for gate in (10, 31):
+        monkeypatch.setattr(preference, "DRIVER_ITEMS_GATE", gate)
+        out[gate] = bradley_terry(df, rounds=3)
+    assert "Join" in _plan(out[10])
+    assert "Join" not in _plan(out[31])
+    dist = {r["item"]: tuple(r) for r in out[10].collect()}
+    assert len(dist) == 31
+    assert dist == {r["item"]: tuple(r) for r in out[31].collect()}

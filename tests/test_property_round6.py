@@ -186,6 +186,38 @@ def test_hhi_matches_python_and_orders_by_concentration(spark):
     assert got2["hhi"] > got["hhi"]
 
 
+def test_bradley_terry_paths_agree(spark, monkeypatch):
+    """Twin paths, forced through DRIVER_ITEMS_GATE on 7 items, one of
+    which never wins: at 7 the driver loop runs, at 6 the relational
+    rounds (the output joins theta back to the items); every row is
+    IDENTICAL."""
+    from econdatapipeline_spark.operators import preference
+    from tests.test_gates import _plan
+
+    rng = random.Random(13)
+    items = [f"p{i}" for i in range(6)]
+    strength = {it: rng.uniform(0.5, 3.0) for it in items}
+    rows = [("p0", "z")] * 3
+    for _ in range(300):
+        a, b = rng.sample(items, 2)
+        pa = strength[a] / (strength[a] + strength[b])
+        rows.append((a, b) if rng.random() < pa else (b, a))
+    df = spark.createDataFrame(rows, "winner string, loser string")
+    out = {}
+    for gate in (7, 6):
+        monkeypatch.setattr(preference, "DRIVER_ITEMS_GATE", gate)
+        out[gate] = preference.bradley_terry(df, rounds=5)
+    assert "Join" not in _plan(out[7])
+    assert "Join" in _plan(out[6])
+    driver = {r["item"]: tuple(r) for r in out[7].collect()}
+    assert driver == {r["item"]: tuple(r) for r in out[6].collect()}
+    assert driver["z"][1:] == (0, 3, 0.0)  # never won: theta 0
+    # fitted order tracks true strength for the extremes
+    best = max(items, key=lambda i: strength[i])
+    worst = min(items, key=lambda i: strength[i])
+    assert driver[best][3] > driver[worst][3]
+
+
 def test_pca_power_matches_numpy_eigh(spark):
     """Top component from numpy's exact eigendecomposition on random
     low-rank-ish data: |cos(angle)| near 1, eigenvalue close."""
