@@ -8098,6 +8098,68 @@ def _queries_in_declaration_order() -> dict[str, Callable[[SparkSession, str], D
     }
 
 
+def _newton_chain_sql(
+    frag: dict,
+    subj: str,
+    g: str,
+    b: str,
+    f: str,
+    se_steps=None,
+    final_terms=None,
+    init_pad: int = 16,
+) -> tuple[str, str]:
+    """The CTE chain of a bounded 6-round Newton fit over ``subj``,
+    replaying a ``*_fragments`` dict (glm.poisson_fragments and kin,
+    survival.weibull_aft_fragments) step for step -> (text, name of
+    the last CTE).
+
+    ``{b}0`` holds the init params; round r aggregates ``{g}{r}`` over
+    ``subj`` CROSS JOIN ``{b}{r-1}``, evaluates one ``_step_levels``
+    batch of the solve per CTE (``{g}{r}s{i}``) and renames the
+    updates into ``{b}{r}``; ``{f}0`` is the final aggregate
+    (``final_terms``, default the fragments') and ``{f}s{i}`` the
+    standard-error levels (``se_steps``, default the fragments').
+    ``init_pad`` indents the init CTE's FROM line.
+    """
+    from econdatapipeline_spark.operators.timeseries import _step_levels
+
+    def levels(steps, prefix, last):
+        for i, batch in enumerate(_step_levels(steps)):
+            nxt = f"{prefix}{i}"
+            cols = ", ".join(f"{e} AS {nm}" for nm, e in batch.items())
+            parts.append(
+                f",\n        {nxt} AS (SELECT *, {cols} FROM {last})"
+            )
+            last = nxt
+        return last
+
+    def terms(pairs):
+        return ",\n                 ".join(f"{e} AS {nm}" for nm, e in pairs)
+
+    parts = [
+        f"{b}0 AS (SELECT {terms(frag['init_terms'])}"
+        f"\n{' ' * init_pad}FROM {subj})"
+    ]
+    aggs = terms(frag["agg_terms"])
+    sel = ", ".join(f"n{nm} AS {nm}" for nm in frag["pnames"])
+    for r in range(1, 7):
+        parts.append(
+            f",\n        {g}{r} AS (SELECT {aggs}"
+            f"\n          FROM {subj} CROSS JOIN {b}{r - 1})"
+        )
+        last = levels(frag["solve_steps"](r), f"{g}{r}s", f"{g}{r}")
+        parts.append(f",\n        {b}{r} AS (SELECT {sel} FROM {last})")
+    parts.append(
+        f",\n        {f}0 AS (SELECT"
+        f" {terms(final_terms or frag['final_terms'])}"
+        f"\n          FROM {subj} CROSS JOIN {b}6)"
+    )
+    if se_steps is None:
+        se_steps = frag["se_steps"]()
+    last = levels(se_steps, f"{f}s", f"{f}0")
+    return "".join(parts), last
+
+
 def oracle_sql() -> dict[str, str]:
     stop_en = "['the','a','of','and','to','in','is','that','it','for']"
     langs = {
@@ -16187,6 +16249,7 @@ def oracle_sql() -> dict[str, str]:
     # fixed-order Gauss step sequence the operator evaluates
     # (glm.poisson_fragments) — the ipw_ate_multi discipline.
     from econdatapipeline_spark.operators.glm import (
+        _pearson_term as _pearson,
         negbin_fragments as _nbf,
         poisson_fragments as _poisf,
     )
@@ -16196,49 +16259,7 @@ def oracle_sql() -> dict[str, str]:
 
     def _poisson_glm_sql():
         frag = _poisf(2)
-        inits = ",\n                 ".join(
-            f"{e} AS {nm}" for nm, e in frag["init_terms"]
-        )
-        aggs = ",\n                 ".join(
-            f"{e} AS {nm}" for nm, e in frag["agg_terms"]
-        )
-        parts = []
-        for r in range(1, 7):
-            parts.append(
-                f",\n        pg{r} AS (SELECT {aggs}"
-                f"\n          FROM psubj CROSS JOIN pb{r - 1})"
-            )
-            last = f"pg{r}"
-            for i, batch in enumerate(_plvl(frag["solve_steps"](r))):
-                nxt = f"pg{r}s{i}"
-                cols = ", ".join(
-                    f"{e} AS {nm}" for nm, e in batch.items()
-                )
-                parts.append(
-                    f",\n        {nxt} AS (SELECT *, {cols}"
-                    f" FROM {last})"
-                )
-                last = nxt
-            sel = ", ".join(f"nb{j} AS b{j}" for j in range(3))
-            parts.append(
-                f",\n        pb{r} AS (SELECT {sel} FROM {last})"
-            )
-        fins = ",\n                 ".join(
-            f"{e} AS {nm}" for nm, e in frag["final_terms"]
-        )
-        parts.append(
-            f",\n        pf0 AS (SELECT {fins}"
-            "\n          FROM psubj CROSS JOIN pb6)"
-        )
-        last = "pf0"
-        for i, batch in enumerate(_plvl(frag["se_steps"]())):
-            nxt = f"pfs{i}"
-            cols = ", ".join(f"{e} AS {nm}" for nm, e in batch.items())
-            parts.append(
-                f",\n        {nxt} AS (SELECT *, {cols}"
-                f" FROM {last})"
-            )
-            last = nxt
+        chain, last = _newton_chain_sql(frag, "psubj", "pg", "pb", "pf")
         labels = ["intercept", "x_acctbal", "x_building"]
         selects = []
         for lbl, o in zip(labels, frag["param_outputs"]()):
@@ -16260,8 +16281,7 @@ def oracle_sql() -> dict[str, str]:
                       THEN 1.0 ELSE 0.0 END AS DECIMAL(18,6)) AS x2
           FROM customer LEFT JOIN counts ON c_custkey = o_custkey
           WHERE c_acctbal IS NOT NULL),
-        pb0 AS (SELECT {inits}
-                FROM psubj){"".join(parts)}
+        {chain}
         {sel_txt}
         """
 
@@ -16270,49 +16290,7 @@ def oracle_sql() -> dict[str, str]:
     # NB2 GLM: the identical chain with negbin_fragments(2, 0.5).
     def _negbin_glm_sql():
         frag = _nbf(2, 0.5)
-        inits = ",\n                 ".join(
-            f"{e} AS {nm}" for nm, e in frag["init_terms"]
-        )
-        aggs = ",\n                 ".join(
-            f"{e} AS {nm}" for nm, e in frag["agg_terms"]
-        )
-        parts = []
-        for r in range(1, 7):
-            parts.append(
-                f",\n        nbg{r} AS (SELECT {aggs}"
-                f"\n          FROM nbsubj CROSS JOIN nbb{r - 1})"
-            )
-            last = f"nbg{r}"
-            for i, batch in enumerate(_plvl(frag["solve_steps"](r))):
-                nxt = f"nbg{r}s{i}"
-                cols = ", ".join(
-                    f"{e} AS {nm}" for nm, e in batch.items()
-                )
-                parts.append(
-                    f",\n        {nxt} AS (SELECT *, {cols}"
-                    f" FROM {last})"
-                )
-                last = nxt
-            sel = ", ".join(f"nb{j} AS b{j}" for j in range(3))
-            parts.append(
-                f",\n        nbb{r} AS (SELECT {sel} FROM {last})"
-            )
-        fins = ",\n                 ".join(
-            f"{e} AS {nm}" for nm, e in frag["final_terms"]
-        )
-        parts.append(
-            f",\n        nbf0 AS (SELECT {fins}"
-            "\n          FROM nbsubj CROSS JOIN nbb6)"
-        )
-        last = "nbf0"
-        for i, batch in enumerate(_plvl(frag["se_steps"]())):
-            nxt = f"nbfs{i}"
-            cols = ", ".join(f"{e} AS {nm}" for nm, e in batch.items())
-            parts.append(
-                f",\n        {nxt} AS (SELECT *, {cols}"
-                f" FROM {last})"
-            )
-            last = nxt
+        chain, last = _newton_chain_sql(frag, "nbsubj", "nbg", "nbb", "nbf")
         labels = ["intercept", "x_acctbal", "x_building"]
         selects = []
         for lbl, o in zip(labels, frag["param_outputs"]()):
@@ -16334,8 +16312,7 @@ def oracle_sql() -> dict[str, str]:
                       THEN 1.0 ELSE 0.0 END AS DECIMAL(18,6)) AS x2
           FROM customer LEFT JOIN counts ON c_custkey = o_custkey
           WHERE c_acctbal IS NOT NULL),
-        nbb0 AS (SELECT {inits}
-                FROM nbsubj){"".join(parts)}
+        {chain}
         {sel_txt}
         """
 
@@ -16345,63 +16322,12 @@ def oracle_sql() -> dict[str, str]:
     # SEs scaled by sqrt(phi) in the operator's expression order.
     def _quasipoisson_sql():
         frag = _poisf(2)
-        m = 3
-        inits = ",\n                 ".join(
-            f"{e} AS {nm}" for nm, e in frag["init_terms"]
+        m = frag["m"]
+        chain, last = _newton_chain_sql(
+            frag, "qsubj", "qg", "qb", "qf",
+            final_terms=[*frag["final_terms"], _pearson(frag["mu"])],
         )
-        aggs = ",\n                 ".join(
-            f"{e} AS {nm}" for nm, e in frag["agg_terms"]
-        )
-        parts = []
-        for r in range(1, 7):
-            parts.append(
-                f",\n        qg{r} AS (SELECT {aggs}"
-                f"\n          FROM qsubj CROSS JOIN qb{r - 1})"
-            )
-            last = f"qg{r}"
-            for i, batch in enumerate(_plvl(frag["solve_steps"](r))):
-                nxt = f"qg{r}s{i}"
-                cols = ", ".join(
-                    f"{e} AS {nm}" for nm, e in batch.items()
-                )
-                parts.append(
-                    f",\n        {nxt} AS (SELECT *, {cols}"
-                    f" FROM {last})"
-                )
-                last = nxt
-            sel = ", ".join(f"nb{j} AS b{j}" for j in range(3))
-            parts.append(
-                f",\n        qb{r} AS (SELECT {sel} FROM {last})"
-            )
-        eta = "b0"
-        for j in range(1, m):
-            eta += f" + b{j} * CAST(x{j} AS DOUBLE)"
-        mu = f"CAST(CAST(exp({eta}) AS DECIMAL(18,9)) AS DOUBLE)"
-        pearson = (
-            f"CAST(SUM(CASE WHEN {mu} > 0.0 THEN"
-            f" CAST(((CAST(y AS DOUBLE) - {mu})"
-            f" * (CAST(y AS DOUBLE) - {mu})) / {mu}"
-            " AS DECIMAL(28,12)) END) AS DOUBLE)"
-        )
-        fins = ",\n                 ".join(
-            [f"{e} AS {nm}" for nm, e in frag["final_terms"]]
-            + [f"{pearson} AS pearson"]
-        )
-        parts.append(
-            f",\n        qf0 AS (SELECT {fins}"
-            "\n          FROM qsubj CROSS JOIN qb6)"
-        )
-        last = "qf0"
-        for i, batch in enumerate(_plvl(frag["se_steps"]())):
-            nxt = f"qfs{i}"
-            cols = ", ".join(f"{e} AS {nm}" for nm, e in batch.items())
-            parts.append(
-                f",\n        {nxt} AS (SELECT *, {cols}"
-                f" FROM {last})"
-            )
-            last = nxt
-        parts.append(
-            f""",
+        chain += f""",
         qph AS (SELECT *,
           CASE WHEN n > {m} AND (CASE WHEN CAST(n AS DOUBLE)
                - {float(m)!r} = 0 THEN NULL ELSE pearson
@@ -16410,7 +16336,6 @@ def oracle_sql() -> dict[str, str]:
                 THEN NULL ELSE pearson
                 / (CAST(n AS DOUBLE) - {float(m)!r}) END)
           END AS phi FROM {last})"""
-        )
         last = "qph"
         labels = ["intercept", "x_acctbal", "x_building"]
         selects = []
@@ -16437,8 +16362,7 @@ def oracle_sql() -> dict[str, str]:
                       THEN 1.0 ELSE 0.0 END AS DECIMAL(18,6)) AS x2
           FROM customer LEFT JOIN counts ON c_custkey = o_custkey
           WHERE c_acctbal IS NOT NULL),
-        qb0 AS (SELECT {inits}
-                FROM qsubj){"".join(parts)}
+        {chain}
         {sel_txt}
         """
 
@@ -16453,49 +16377,7 @@ def oracle_sql() -> dict[str, str]:
 
     def _logistic_glm_sql():
         frag = _logif(2)
-        inits = ",\n                 ".join(
-            f"{e} AS {nm}" for nm, e in frag["init_terms"]
-        )
-        aggs = ",\n                 ".join(
-            f"{e} AS {nm}" for nm, e in frag["agg_terms"]
-        )
-        parts = []
-        for r in range(1, 7):
-            parts.append(
-                f",\n        lg{r} AS (SELECT {aggs}"
-                f"\n          FROM lsubj CROSS JOIN lb{r - 1})"
-            )
-            last = f"lg{r}"
-            for i, batch in enumerate(_plvl(frag["solve_steps"](r))):
-                nxt = f"lg{r}s{i}"
-                cols = ", ".join(
-                    f"{e} AS {nm}" for nm, e in batch.items()
-                )
-                parts.append(
-                    f",\n        {nxt} AS (SELECT *, {cols}"
-                    f" FROM {last})"
-                )
-                last = nxt
-            sel = ", ".join(f"nb{j} AS b{j}" for j in range(3))
-            parts.append(
-                f",\n        lb{r} AS (SELECT {sel} FROM {last})"
-            )
-        fins = ",\n                 ".join(
-            f"{e} AS {nm}" for nm, e in frag["final_terms"]
-        )
-        parts.append(
-            f",\n        lf0 AS (SELECT {fins}"
-            "\n          FROM lsubj CROSS JOIN lb6)"
-        )
-        last = "lf0"
-        for i, batch in enumerate(_plvl(frag["se_steps"]())):
-            nxt = f"lfs{i}"
-            cols = ", ".join(f"{e} AS {nm}" for nm, e in batch.items())
-            parts.append(
-                f",\n        {nxt} AS (SELECT *, {cols}"
-                f" FROM {last})"
-            )
-            last = nxt
+        chain, last = _newton_chain_sql(frag, "lsubj", "lg", "lb", "lf")
         okdev = (
             "n_sat = 0 AND ysum > 0 AND ysum < n"
             " AND devhalf IS NOT NULL"
@@ -16505,7 +16387,7 @@ def oracle_sql() -> dict[str, str]:
             f"CAST(n AS DOUBLE) * ({pb} * ln({pb})"
             f" + (1.0 - {pb}) * ln(1.0 - {pb}))"
         )
-        parts.append(
+        chain += (
             f",\n        lout AS (SELECT *,"
             f"\n          CASE WHEN {okdev} THEN"
             " round(2.0 * devhalf, 6) END AS deviance,"
@@ -16535,8 +16417,7 @@ def oracle_sql() -> dict[str, str]:
           FROM orders JOIN customer ON o_custkey = c_custkey
           WHERE c_acctbal IS NOT NULL AND o_orderdate IS NOT NULL
             AND o_totalprice IS NOT NULL),
-        lb0 AS (SELECT {inits}
-                FROM lsubj){"".join(parts)}
+        {chain}
         {sel_txt}
         """
 
@@ -19902,50 +19783,10 @@ def oracle_sql() -> dict[str, str]:
 
     def _weibull_aft_sql():
         frag = _waftf(2)
-        inits = ",\n                 ".join(
-            f"{e} AS {nm}" for nm, e in frag["init_terms"]
+        chain, last = _newton_chain_sql(
+            frag, "wasubj", "wg", "wab", "waf",
+            se_steps=frag["se_steps"]()[0], init_pad=17,
         )
-        aggs = ",\n                 ".join(
-            f"{e} AS {nm}" for nm, e in frag["agg_terms"]
-        )
-        parts = []
-        for r in range(1, 7):
-            parts.append(
-                f",\n        wg{r} AS (SELECT {aggs}"
-                f"\n          FROM wasubj CROSS JOIN wab{r - 1})"
-            )
-            last = f"wg{r}"
-            for i, batch in enumerate(_wlvl(frag["solve_steps"](r))):
-                nxt = f"wg{r}s{i}"
-                cols = ", ".join(
-                    f"{e} AS {nm}" for nm, e in batch.items()
-                )
-                parts.append(
-                    f",\n        {nxt} AS (SELECT *, {cols}"
-                    f" FROM {last})"
-                )
-                last = nxt
-            sel = ", ".join(f"n{nm} AS {nm}" for nm in frag["pnames"])
-            parts.append(
-                f",\n        wab{r} AS (SELECT {sel} FROM {last})"
-            )
-        fins = ",\n                 ".join(
-            f"{e} AS {nm}" for nm, e in frag["final_terms"]
-        )
-        parts.append(
-            f",\n        waf0 AS (SELECT {fins}"
-            "\n          FROM wasubj CROSS JOIN wab6)"
-        )
-        last = "waf0"
-        se_steps, _ = frag["se_steps"]()
-        for i, batch in enumerate(_wlvl(se_steps)):
-            nxt = f"wafs{i}"
-            cols = ", ".join(f"{e} AS {nm}" for nm, e in batch.items())
-            parts.append(
-                f",\n        {nxt} AS (SELECT *, {cols}"
-                f" FROM {last})"
-            )
-            last = nxt
         labels = ["intercept", "x_building", "x_acctbal", "ln_sigma"]
         selects = "\n        UNION ALL\n        ".join(
             f"SELECT '{lbl}' AS param, n, d AS n_events,"
@@ -19978,8 +19819,7 @@ def oracle_sql() -> dict[str, str]:
             FROM ranked CROSS JOIN h WHERE rk = 1)
           JOIN customer ON o_custkey = c_custkey
           WHERE dur > 0),
-        wab0 AS (SELECT {inits}
-                 FROM wasubj){"".join(parts)}
+        {chain}
         {selects}
         """
 

@@ -1,22 +1,35 @@
 """Generalized linear models over relational aggregates.
 
 The regression layer the reference's documentation promises for its
-indicator tables (/root/reference/documentation/
-economic_indicators.md:122-126) beyond what the engine already
-covers: logistic propensity (evaluation.ipw_ate_multi), Cox
-(survival.cox_ph_multi), Weibull AFT (survival.weibull_aft). This
-module adds the COUNT-response member — Poisson regression with log
-link — for rate modeling (orders per customer, events per session,
-defects per batch).
+indicator tables (economic_indicators.md:122-126): Poisson,
+quasi-Poisson and NB2 regression for counts, logistic regression for
+binary outcomes, plus the VIF / partial-correlation diagnostics.
 
-Architecture is the ipw_fragments discipline (evaluation.py:989): a
-``*_fragments`` function is the single source of truth for every
-expression BOTH the Spark operator and the DuckDB oracle execute, so
-operation order is shared by construction; the Newton solve is the
-generated fixed-order no-pivot Gaussian elimination of
-timeseries._gauss_steps. The Poisson log-likelihood with log link is
-globally concave in beta, so undamped Newton converges from the
-ln(mean y) intercept seed.
+Every fit is one bounded Newton/IRLS backbone, written once:
+
+- ``_newton_fragments`` prints the SQL text of a p-covariate GLM. It
+  is the single source of every expression BOTH the Spark operator and
+  the DuckDB oracle (``__spark_entry__._newton_chain_sql``) evaluate,
+  so operation order is shared by construction (the ipw_fragments
+  discipline, evaluation.py:989). The solve is the generated
+  fixed-order no-pivot Gaussian elimination of timeseries._gauss_steps.
+- ``_newton_rounds`` runs init -> rounds x (aggregate -> solve ->
+  1-row checkpoint); survival.weibull_aft runs its rounds through it.
+- ``_glm_fit`` adds the subject build, the final aggregate and the
+  standard-error chain.
+
+A family is only the strings that differ:
+
+    family     mu                 residual             weight        b0 seed
+    poisson    exp(eta)           y - mu               mu            ln(ybar)
+    negbin(a)  exp(eta)           (y - mu)/(1 + a mu)  mu/(1 + a mu) ln(ybar)
+    logistic   1/(1 + exp(-eta))  y - mu               mu (1 - mu)   logit(ybar)
+
+plus its deviance terms and the name of exp(coef) (rate_ratio for the
+log link, odds_ratio for logit). quasipoisson_glm runs Poisson's fragments
+with one extra Pearson term in the final aggregate. mu quantizes to
+decimal(18,9) (the one libm exp channel); every per-row term is
+quantized to decimal(28,12) before its order-free sum.
 """
 
 from __future__ import annotations
@@ -25,69 +38,75 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from ..sources.tables import fan_out as _fan_out_capped
 
+_YD = "CAST(y AS DOUBLE)"
 
-def poisson_fragments(p: int) -> dict:
-    """Shared Spark/DuckDB SQL fragments for the p-covariate Poisson
-    GLM. Expects a subject relation with columns y (bigint >= 0) and
-    x1..xp (decimal(18,6)), and a 1-row params relation b0..bp
-    (doubles). Model: y ~ Poisson(mu), ln mu = b0 + sum b_j x_j.
+# ln(ybar): the log-link intercept seed (poisson, negbin)
+_LN_YBAR = (
+    "CASE WHEN COUNT(*) > 0 AND SUM(y) > 0 THEN"
+    " CAST(CAST(ln(CAST(SUM(y) AS DOUBLE)"
+    " / CAST(COUNT(*) AS DOUBLE)) AS DECIMAL(18,9))"
+    " AS DOUBLE) END"
+)
 
-    Returns init_terms / agg_terms / solve_steps(r) / final_terms /
-    se_steps() / outputs — see evaluation.ipw_fragments. The fitted
-    mean quantizes to decimal(18,9) (the one libm exp channel), so
-    every iterate must keep eta <= 20 (mu <= ~4.9e8; beyond it the
-    ANSI decimal cast raises loudly). NULL propagation: no rows or a
-    singular X'WX Hessian NULLs every estimate (never-fabricate).
+
+def _s28(term: str, name: str) -> tuple[str, str]:
+    """A per-row double quantized to decimal(28,12) before its
+    order-free sum — the summation channel of every Newton aggregate."""
+    return (name, f"CAST(SUM(CAST({term} AS DECIMAL(28,12))) AS DOUBLE)")
+
+
+def _xj(j: int) -> str:
+    return "1.0" if j == 0 else f"CAST(x{j} AS DOUBLE)"
+
+
+def _newton_fragments(
+    p: int, inv_link: str, family, b0_seed: str, ratio: str
+) -> dict:
+    """Shared Spark/DuckDB SQL fragments for a p-covariate GLM.
+
+    Expects a subject relation with columns y and x1..xp
+    (decimal(18,6)), and a 1-row params relation b0..bp (doubles).
+    ``inv_link`` is the inverse link over ``{eta}``; ``family(mu)``
+    returns (score residual, Hessian weight, extra final terms);
+    ``b0_seed`` is the intercept's init aggregate; ``ratio`` names the
+    exp(coef) output.
+
+    Returns m, mu, pnames and init_terms / agg_terms / solve_steps(r) /
+    final_terms / se_steps() / param_outputs() — see
+    evaluation.ipw_fragments. NULL propagation: no rows or a singular
+    X'WX Hessian NULLs every estimate (never-fabricate).
     """
     from .timeseries import _gauss_steps  # noqa: PLC0415
 
     if p < 1 or p > 7:
         raise ValueError(f"p must be in 1..7, got {p}")
     m = p + 1
-    eta = "b0"
-    for j in range(1, m):
-        eta += f" + b{j} * CAST(x{j} AS DOUBLE)"
-    mu = f"CAST(CAST(exp({eta}) AS DECIMAL(18,9)) AS DOUBLE)"
-    yd = "CAST(y AS DOUBLE)"
+    eta = "b0" + "".join(
+        f" + b{j} * CAST(x{j} AS DOUBLE)" for j in range(1, m)
+    )
+    mu = f"CAST(CAST({inv_link.format(eta=eta)} AS DECIMAL(18,9)) AS DOUBLE)"
+    resid, weight, final_extra = family(mu)
 
-    def s28(term: str, name: str):
-        return (
-            name,
-            f"CAST(SUM(CAST({term} AS DECIMAL(28,12))) AS DOUBLE)",
-        )
-
-    def xj(j: int) -> str:
-        return "1.0" if j == 0 else f"CAST(x{j} AS DOUBLE)"
-
-    agg_terms = []
-    for j in range(m):
-        agg_terms.append(s28(f"{xj(j)} * ({yd} - {mu})", f"g{j}"))
-    for j in range(m):
-        for k in range(j, m):
-            agg_terms.append(
-                s28(f"({xj(j)} * {xj(k)}) * {mu}", f"h{j}_{k}")
-            )
-    for j in range(m):
-        agg_terms.append((f"b{j}", f"MIN(b{j})"))
-
-    init_terms = [
-        (
-            "b0",
-            "CASE WHEN COUNT(*) > 0 AND SUM(y) > 0 THEN"
-            " CAST(CAST(ln(CAST(SUM(y) AS DOUBLE)"
-            " / CAST(COUNT(*) AS DOUBLE)) AS DECIMAL(18,9))"
-            " AS DOUBLE) END",
-        )
+    agg_terms = [_s28(f"{_xj(j)} * {resid}", f"g{j}") for j in range(m)]
+    agg_terms += [
+        _s28(f"({_xj(j)} * {_xj(k)}) * {weight}", f"h{j}_{k}")
+        for j in range(m)
+        for k in range(j, m)
     ]
-    for j in range(1, m):
-        init_terms.append((f"b{j}", "CAST(0.0 AS DOUBLE)"))
+    agg_terms += [(f"b{j}", f"MIN(b{j})") for j in range(m)]
+    init_terms = [("b0", b0_seed)] + [
+        (f"b{j}", "CAST(0.0 AS DOUBLE)") for j in range(1, m)
+    ]
+    final_terms = agg_terms + [
+        ("n", "CAST(COUNT(*) AS BIGINT)"),
+        ("ysum", "CAST(COALESCE(SUM(y), 0) AS BIGINT)"),
+        *final_extra,
+    ]
 
     def _a_names():
         return {
             (j, k): f"h{j}_{k}" for j in range(m) for k in range(j, m)
         }
-
-    pnames = [f"b{j}" for j in range(m)]
 
     def solve_steps(round_idx: int):
         # one shared prefix: every round's projection is textually
@@ -106,16 +125,6 @@ def poisson_fragments(p: int) -> dict:
             )
         return steps
 
-    dev_term = (
-        f"CASE WHEN y > 0 THEN {yd} * ln({yd} / {mu})"
-        f" - ({yd} - {mu}) ELSE {mu} END"
-    )
-    final_terms = list(agg_terms) + [
-        ("n", "CAST(COUNT(*) AS BIGINT)"),
-        ("ysum", "CAST(COALESCE(SUM(y), 0) AS BIGINT)"),
-        s28(dev_term, "devhalf"),
-    ]
-
     def se_steps():
         steps = []
         for j in range(m):
@@ -133,28 +142,255 @@ def poisson_fragments(p: int) -> dict:
         return steps
 
     def param_outputs():
-        outs = []
-        for j in range(m):
-            outs.append(
-                {
-                    "coef": f"round(b{j}, 6)",
-                    "se": f"round(sqrt(var{j}), 6)",
-                    "z": f"round(b{j} / sqrt(var{j}), 6)",
-                    "rate_ratio": f"round(exp(b{j}), 6)",
-                }
-            )
-        return outs
+        return [
+            {
+                "coef": f"round(b{j}, 6)",
+                "se": f"round(sqrt(var{j}), 6)",
+                "z": f"round(b{j} / sqrt(var{j}), 6)",
+                ratio: f"round(exp(b{j}), 6)",
+            }
+            for j in range(m)
+        ]
 
     return {
         "m": m,
+        "mu": mu,
         "init_terms": init_terms,
         "agg_terms": agg_terms,
         "solve_steps": solve_steps,
         "final_terms": final_terms,
         "se_steps": se_steps,
         "param_outputs": param_outputs,
-        "pnames": pnames,
+        "pnames": [f"b{j}" for j in range(m)],
     }
+
+
+def poisson_fragments(p: int) -> dict:
+    """Fragments for the p-covariate Poisson GLM (_newton_fragments):
+    y (bigint >= 0) ~ Poisson(mu), ln mu = b0 + sum b_j x_j. The log
+    likelihood is globally concave, so undamped Newton converges from
+    the ln(mean y) seed. Every iterate must keep eta <= 20
+    (mu <= ~4.9e8; beyond it the ANSI decimal cast raises loudly).
+    """
+
+    def family(mu: str):
+        dev = (
+            f"CASE WHEN y > 0 THEN {_YD} * ln({_YD} / {mu})"
+            f" - ({_YD} - {mu}) ELSE {mu} END"
+        )
+        return f"({_YD} - {mu})", mu, [_s28(dev, "devhalf")]
+
+    return _newton_fragments(p, "exp({eta})", family, _LN_YBAR, "rate_ratio")
+
+
+def logistic_fragments(p: int) -> dict:
+    """Fragments for the p-covariate binomial GLM with logit link
+    (_newton_fragments): y (int 0/1) ~ Bernoulli(mu),
+    logit mu = b0 + sum b_j x_j, seeded at logit(ybar).
+
+    |eta| beyond ~21 saturates mu to exactly 0/1 — those subjects stop
+    contributing to the score and Hessian (w = mu(1-mu) = 0) and any
+    saturation NULLs the deviance/McFadden outputs via the n_sat
+    counter (never-fabricate on a degenerate likelihood; coefficients
+    still emit where the Hessian stays positive-definite).
+    """
+
+    def family(mu: str):
+        dev = (
+            f"CASE WHEN y = 1 THEN 0.0 - ln({mu})"
+            f" ELSE 0.0 - ln(1.0 - {mu}) END"
+        )
+        return f"({_YD} - {mu})", f"{mu} * (1.0 - {mu})", [
+            (
+                "devhalf",
+                f"CAST(SUM(CASE WHEN {mu} > 0.0 AND {mu} < 1.0 THEN"
+                f" CAST({dev} AS DECIMAL(28,12)) END) AS DOUBLE)",
+            ),
+            (
+                "n_sat",
+                f"CAST(COALESCE(SUM(CASE WHEN {mu} <= 0.0 OR {mu} >= 1.0"
+                " THEN 1 ELSE 0 END), 0) AS BIGINT)",
+            ),
+        ]
+
+    logit_ybar = (
+        "CASE WHEN SUM(y) > 0 AND SUM(y) < COUNT(*) THEN"
+        " CAST(CAST(ln((CAST(SUM(y) AS DOUBLE)"
+        " / CAST(COUNT(*) AS DOUBLE))"
+        " / (1.0 - CAST(SUM(y) AS DOUBLE)"
+        " / CAST(COUNT(*) AS DOUBLE))) AS DECIMAL(18,9))"
+        " AS DOUBLE) END"
+    )
+    return _newton_fragments(
+        p, "1.0 / (1.0 + exp(-({eta})))", family, logit_ybar, "odds_ratio"
+    )
+
+
+def negbin_fragments(p: int, alpha: float) -> dict:
+    """Fragments for the p-covariate NB2 negative-binomial GLM with
+    KNOWN dispersion ``alpha`` (_newton_fragments): y ~ NB2(mu, alpha)
+    with Var = mu + alpha*mu^2, ln mu = b0 + sum b_j x_j. Fisher
+    scoring: score x_j (y - mu)/(1 + alpha*mu), information
+    x_j x_k mu/(1 + alpha*mu) — alpha = 0 IS Poisson, so the Poisson
+    chain falls out as the reduction test. The alpha literal is
+    injected verbatim into both engines' text — keep it binary-exact
+    (0.5, 0.25, 1.0) for hash-certified contracts.
+
+    NB2 deviance (no lgamma needed): 2*sum of
+      y>0: y ln(y/mu) - (y + 1/alpha) ln((1+alpha y)/(1+alpha mu))
+      y=0: (1/alpha) ln(1+alpha mu)
+    """
+    if alpha <= 0:
+        raise ValueError(f"alpha must be > 0, got {alpha}")
+    a = repr(float(alpha))
+
+    def family(mu: str):
+        den = f"(1.0 + {a} * {mu})"
+        dev = (
+            f"CASE WHEN y > 0 THEN {_YD} * ln({_YD} / {mu})"
+            f" - ({_YD} + 1.0 / {a})"
+            f" * ln((1.0 + {a} * {_YD}) / (1.0 + {a} * {mu}))"
+            f" ELSE (1.0 / {a}) * ln(1.0 + {a} * {mu}) END"
+        )
+        return (
+            f"(({_YD} - {mu}) / {den})",
+            f"({mu} / {den})",
+            [_s28(dev, "devhalf")],
+        )
+
+    return _newton_fragments(p, "exp({eta})", family, _LN_YBAR, "rate_ratio")
+
+
+def _pearson_term(mu: str) -> tuple[str, str]:
+    """quasipoisson_glm's Pearson sum of (y - mu)^2 / mu."""
+    return (
+        "pearson",
+        f"CAST(SUM(CASE WHEN {mu} > 0.0 THEN"
+        f" CAST((({_YD} - {mu})"
+        f" * ({_YD} - {mu})) / {mu}"
+        " AS DECIMAL(28,12)) END) AS DOUBLE)",
+    )
+
+
+def _fit_p(covariate_cols: list[str], rounds: int) -> int:
+    """The GLM fits' shared argument checks -> the covariate count."""
+    if rounds < 1:
+        raise ValueError(f"rounds must be >= 1, got {rounds}")
+    if not covariate_cols:
+        raise ValueError("covariate_cols must name at least one column")
+    return len(covariate_cols)
+
+
+def _newton_rounds(subj: DataFrame, frag: dict, rounds: int) -> DataFrame:
+    """The bounded Newton loop over a checkpointed subject relation ->
+    the final 1-row params relation.
+
+    Init aggregate, then each of the ``rounds`` is ONE hash aggregate
+    of ``frag["agg_terms"]`` over ``subj`` cross-joined with the
+    broadcast 1-row params, then the solve chain as ONE
+    liveness-pruned spark.sql (timeseries._apply_steps_one_sql: a
+    single parse + analysis, nested SELECTs carrying only still-live
+    columns, the fragment text verbatim). Every round's solve text is
+    identical, so codegen compiles it once; no barriers, since the
+    chain is consumed once. Each round's params are checkpointed
+    eagerly: without it round r's plan nests r broadcast subtrees and
+    analysis/codegen cost grows superlinearly in rounds (measured ~9 s
+    fixed overhead at 8 rounds vs ~3 s checkpointed); the data never
+    touches the driver.
+    """
+    from .timeseries import _apply_steps_one_sql  # noqa: PLC0415
+
+    pnames = frag["pnames"]
+    b_cur = subj.agg(
+        *[F.expr(e).alias(nm) for nm, e in frag["init_terms"]]
+    )
+    for r in range(1, rounds + 1):
+        g = subj.crossJoin(F.broadcast(b_cur)).agg(
+            *[F.expr(e).alias(nm) for nm, e in frag["agg_terms"]]
+        )
+        g = _apply_steps_one_sql(
+            g,
+            frag["solve_steps"](r),
+            keep=[f"n{nm}" for nm in pnames],
+            barrier_every=None,
+        )
+        b_cur = g.select(
+            *[F.col(f"n{nm}").alias(nm) for nm in pnames]
+        ).localCheckpoint(eager=True)
+    return b_cur
+
+
+def _glm_fit(
+    df: DataFrame,
+    keep,
+    y,
+    covariate_cols: list[str],
+    frag: dict,
+    rounds: int,
+    extra_final=(),
+) -> DataFrame:
+    """Subject build + Newton rounds + final aggregate (frag's
+    final_terms, then ``extra_final``) + standard-error chain -> the
+    1-row fit relation the public GLM functions select from. ``keep``
+    filters the response; NULL covariates are dropped here."""
+    from .timeseries import _apply_steps_one_sql  # noqa: PLC0415
+
+    for c in covariate_cols:
+        keep = keep & F.col(c).isNotNull()
+    # fan_out BEFORE the checkpoint: the subject relation is
+    # scanned rounds+2 times and inherits the source's partitioning —
+    # a single-file bench input would make every IRLS round a
+    # single-task aggregate (measured 1.9s/round over 150k rows on
+    # one core). Row-CAPPED (fan_out, ~16): an uncapped
+    # defaultParallelism width was over-parallelism on the KB..MB
+    # working set (driver scaling: 8 cores beat 32 on ipw/pca). The
+    # per-round decimal sums are EXACT, so the row order change
+    # cannot move a value (hashes re-certified).
+    subj = df.filter(keep).select(
+        y.alias("y"),
+        *[
+            F.col(c).cast("decimal(18,6)").alias(f"x{j}")
+            for j, c in enumerate(covariate_cols, 1)
+        ],
+    ).transform(_fan_out_capped).localCheckpoint(eager=True)
+    b_cur = _newton_rounds(subj, frag, rounds)
+    fin = subj.crossJoin(F.broadcast(b_cur)).agg(
+        *[
+            F.expr(e).alias(nm)
+            for nm, e in [*frag["final_terms"], *extra_final]
+        ]
+    )
+    return _apply_steps_one_sql(
+        fin, frag["se_steps"](), keep=None, barrier_every=None
+    )
+
+
+def _param_rows(
+    fin: DataFrame, covariate_cols: list[str], params: list, scalars: dict
+) -> DataFrame:
+    """One output row per parameter ('intercept', then each
+    covariate): param, n, each ``params`` column (SQL text per
+    parameter), then each fit-wide ``scalars`` column."""
+    labels = ["intercept", *covariate_cols]
+    rows = F.array(
+        *[
+            F.struct(
+                F.lit(lbl).alias("param"),
+                *[F.expr(e).alias(k) for k, e in o.items()],
+            )
+            for lbl, o in zip(labels, params)
+        ]
+    )
+    return fin.select(
+        "n",
+        *[c.alias(k) for k, c in scalars.items()],
+        F.explode(rows).alias("r"),
+    ).select(
+        F.col("r.param").alias("param"),
+        "n",
+        *[F.col(f"r.{k}").alias(k) for k in params[0]],
+        *scalars,
+    )
 
 
 def poisson_glm(
@@ -173,248 +409,34 @@ def poisson_glm(
     Negative responses raise at plan time (ANSI guard in the filter);
     NULL rows are excluded.
 
-    Architecture: the ipw_ate_multi/weibull_aft backbone — each of
+    Architecture: the module's Newton backbone (_glm_fit) — each of
     the bounded ``rounds`` is ONE hash aggregate over the
     checkpointed subject table (score X'(y−mu) + Hessian X'WX upper
-    triangle, every term decimal(28,12)-quantized before its
-    order-free sum) cross-joined with the previous eagerly
-    checkpointed 1-row params relation, solved by the generated
-    fixed-order Gaussian elimination the SQL oracle chains verbatim
-    (poisson_fragments); SEs from unit-vector solves of the final
-    Hessian. The log-link likelihood is globally concave, so Newton
-    needs no damping; the intercept seeds at ln(mean y). Iterates
-    must keep eta <= 20 (the decimal(18,9) mu domain — loud ANSI
-    failure, never silent corruption).
+    triangle) cross-joined with the previous 1-row params relation,
+    solved by the generated fixed-order Gaussian elimination the SQL
+    oracle chains verbatim (poisson_fragments); SEs from unit-vector
+    solves of the final Hessian. Iterates must keep eta <= 20 (the
+    decimal(18,9) mu domain — loud ANSI failure, never silent
+    corruption).
 
     Scale: subject table scanned rounds+2 times, each a map-side
     combinable aggregate; no window, no join, no driver loop.
     """
-    from .timeseries import _apply_steps_one_sql  # noqa: PLC0415
-
-    if rounds < 1:
-        raise ValueError(f"rounds must be >= 1, got {rounds}")
-    if not covariate_cols:
-        raise ValueError("covariate_cols must name at least one column")
-    p = len(covariate_cols)
-    frag = poisson_fragments(p)
+    frag = poisson_fragments(_fit_p(covariate_cols, rounds))
     keep = (
         F.col(response_col).isNotNull()
         & (F.col(response_col).cast("long") >= 0)
     )
-    for c in covariate_cols:
-        keep = keep & F.col(c).isNotNull()
-    # fan_out BEFORE the checkpoint: the subject relation is
-    # scanned rounds+2 times and inherits the source's partitioning —
-    # a single-file bench input would make every IRLS round a
-    # single-task aggregate (measured 1.9s/round over 150k rows on
-    # one core). Row-CAPPED (fan_out, ~16): an uncapped
-    # defaultParallelism width was over-parallelism on the KB..MB
-    # working set (driver scaling: 8 cores beat 32 on ipw/pca). The
-    # per-round decimal sums are EXACT, so the row order change
-    # cannot move a value (hashes re-certified).
-    subj = df.filter(keep).select(
-        F.col(response_col).cast("long").alias("y"),
-        *[
-            F.col(c).cast("decimal(18,6)").alias(f"x{j}")
-            for j, c in enumerate(covariate_cols, 1)
-        ],
-    ).transform(_fan_out_capped).localCheckpoint(eager=True)
-    b_cur = subj.agg(
-        *[F.expr(e).alias(nm) for nm, e in frag["init_terms"]]
+    fin = _glm_fit(
+        df, keep, F.col(response_col).cast("long"), covariate_cols,
+        frag, rounds,
     )
-    for r in range(1, rounds + 1):
-        g = subj.crossJoin(F.broadcast(b_cur)).agg(
-            *[F.expr(e).alias(nm) for nm, e in frag["agg_terms"]]
-        )
-        g = _apply_steps_one_sql(
-            g,
-            frag["solve_steps"](r),
-            keep={f"n{nm}" for nm in frag["pnames"]},
-            barrier_every=None,
-        )
-        b_cur = g.select(
-            *[F.col(f"n{nm}").alias(nm) for nm in frag["pnames"]]
-        ).localCheckpoint(eager=True)
-    fin = subj.crossJoin(F.broadcast(b_cur)).agg(
-        *[F.expr(e).alias(nm) for nm, e in frag["final_terms"]]
+    return _param_rows(
+        fin,
+        covariate_cols,
+        frag["param_outputs"](),
+        {"deviance": F.round(F.lit(2.0) * F.col("devhalf"), 6)},
     )
-    fin = _apply_steps_one_sql(
-        fin, frag["se_steps"](), keep=None, barrier_every=None
-    )
-    labels = ["intercept", *covariate_cols]
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(lbl).alias("param"),
-                F.expr(o["coef"]).alias("coef"),
-                F.expr(o["se"]).alias("se"),
-                F.expr(o["z"]).alias("z"),
-                F.expr(o["rate_ratio"]).alias("rate_ratio"),
-            )
-            for lbl, o in zip(labels, frag["param_outputs"]())
-        ]
-    )
-    return fin.select(
-        "n",
-        F.round(F.lit(2.0) * F.col("devhalf"), 6).alias("deviance"),
-        F.explode(rows).alias("r"),
-    ).select(
-        F.col("r.param").alias("param"),
-        "n",
-        F.col("r.coef").alias("coef"),
-        F.col("r.se").alias("se"),
-        F.col("r.z").alias("z"),
-        F.col("r.rate_ratio").alias("rate_ratio"),
-        "deviance",
-    )
-
-
-def logistic_fragments(p: int) -> dict:
-    """Shared Spark/DuckDB SQL fragments for the p-covariate binomial
-    GLM (logistic regression with logit link). Expects a subject
-    relation with columns y (int 0/1) and x1..xp (decimal(18,6)), and
-    a 1-row params relation b0..bp (doubles). Model:
-    y ~ Bernoulli(mu), logit mu = b0 + sum b_j x_j.
-
-    Same contract as poisson_fragments: init_terms / agg_terms /
-    solve_steps(r) / final_terms / se_steps() / param_outputs. The
-    fitted probability quantizes to decimal(18,9) (the one libm exp
-    channel, the ipw_fragments text); |eta| beyond ~21 saturates mu
-    to exactly 0/1 — those subjects stop contributing to the score
-    and Hessian (w = mu(1-mu) = 0) and any saturation NULLs the
-    deviance/McFadden outputs via the n_sat counter (never-fabricate
-    on a degenerate likelihood; coefficients still emit where the
-    Hessian stays positive-definite).
-    """
-    from .timeseries import _gauss_steps  # noqa: PLC0415
-
-    if p < 1 or p > 7:
-        raise ValueError(f"p must be in 1..7, got {p}")
-    m = p + 1
-    eta = "b0"
-    for j in range(1, m):
-        eta += f" + b{j} * CAST(x{j} AS DOUBLE)"
-    mu = (
-        f"CAST(CAST(1.0 / (1.0 + exp(-({eta})))"
-        " AS DECIMAL(18,9)) AS DOUBLE)"
-    )
-    w = f"{mu} * (1.0 - {mu})"
-    yd = "CAST(y AS DOUBLE)"
-
-    def s28(term: str, name: str):
-        return (
-            name,
-            f"CAST(SUM(CAST({term} AS DECIMAL(28,12))) AS DOUBLE)",
-        )
-
-    def xj(j: int) -> str:
-        return "1.0" if j == 0 else f"CAST(x{j} AS DOUBLE)"
-
-    agg_terms = []
-    for j in range(m):
-        agg_terms.append(s28(f"{xj(j)} * ({yd} - {mu})", f"g{j}"))
-    for j in range(m):
-        for k in range(j, m):
-            agg_terms.append(
-                s28(f"({xj(j)} * {xj(k)}) * {w}", f"h{j}_{k}")
-            )
-    for j in range(m):
-        agg_terms.append((f"b{j}", f"MIN(b{j})"))
-
-    init_terms = [
-        (
-            "b0",
-            "CASE WHEN SUM(y) > 0 AND SUM(y) < COUNT(*) THEN"
-            " CAST(CAST(ln((CAST(SUM(y) AS DOUBLE)"
-            " / CAST(COUNT(*) AS DOUBLE))"
-            " / (1.0 - CAST(SUM(y) AS DOUBLE)"
-            " / CAST(COUNT(*) AS DOUBLE))) AS DECIMAL(18,9))"
-            " AS DOUBLE) END",
-        )
-    ]
-    for j in range(1, m):
-        init_terms.append((f"b{j}", "CAST(0.0 AS DOUBLE)"))
-
-    def _a_names():
-        return {
-            (j, k): f"h{j}_{k}" for j in range(m) for k in range(j, m)
-        }
-
-    pnames = [f"b{j}" for j in range(m)]
-
-    def solve_steps(round_idx: int):
-        del round_idx
-        b_names = [f"g{j}" for j in range(m)]
-        steps, deltas, diag = _gauss_steps(m, _a_names(), b_names, "p")
-        ok = " AND ".join(f"{d} > 0" for d in dict.fromkeys(diag))
-        for j in range(m):
-            steps.append(
-                (
-                    f"nb{j}",
-                    f"CASE WHEN {ok} THEN CAST(CAST(b{j} + {deltas[j]}"
-                    " AS DECIMAL(18,9)) AS DOUBLE) ELSE NULL END",
-                )
-            )
-        return steps
-
-    dev_term = (
-        f"CASE WHEN y = 1 THEN 0.0 - ln({mu})"
-        f" ELSE 0.0 - ln(1.0 - {mu}) END"
-    )
-    final_terms = list(agg_terms) + [
-        ("n", "CAST(COUNT(*) AS BIGINT)"),
-        ("ysum", "CAST(COALESCE(SUM(y), 0) AS BIGINT)"),
-        (
-            "devhalf",
-            f"CAST(SUM(CASE WHEN {mu} > 0.0 AND {mu} < 1.0 THEN"
-            f" CAST({dev_term} AS DECIMAL(28,12)) END) AS DOUBLE)",
-        ),
-        (
-            "n_sat",
-            f"CAST(COALESCE(SUM(CASE WHEN {mu} <= 0.0 OR {mu} >= 1.0"
-            " THEN 1 ELSE 0 END), 0) AS BIGINT)",
-        ),
-    ]
-
-    def se_steps():
-        steps = []
-        for j in range(m):
-            rhs = ["1.0" if i == j else "0.0" for i in range(m)]
-            s, betas, diag = _gauss_steps(m, _a_names(), rhs, f"v{j}")
-            ok = " AND ".join(f"{d} > 0" for d in dict.fromkeys(diag))
-            steps.extend(s)
-            steps.append(
-                (
-                    f"var{j}",
-                    f"CASE WHEN {ok} AND {betas[j]} > 0"
-                    f" THEN {betas[j]} END",
-                )
-            )
-        return steps
-
-    def param_outputs():
-        outs = []
-        for j in range(m):
-            outs.append(
-                {
-                    "coef": f"round(b{j}, 6)",
-                    "se": f"round(sqrt(var{j}), 6)",
-                    "z": f"round(b{j} / sqrt(var{j}), 6)",
-                    "odds_ratio": f"round(exp(b{j}), 6)",
-                }
-            )
-        return outs
-
-    return {
-        "m": m,
-        "init_terms": init_terms,
-        "agg_terms": agg_terms,
-        "solve_steps": solve_steps,
-        "final_terms": final_terms,
-        "se_steps": se_steps,
-        "param_outputs": param_outputs,
-        "pnames": pnames,
-    }
 
 
 def logistic_glm(
@@ -428,75 +450,25 @@ def logistic_glm(
     mcfadden_r2); params are 'intercept' then each covariate;
     deviance and McFadden pseudo-R2 repeat per row.
 
-    Completes the GLM family the reference's documentation promises
-    (economic_indicators.md:122-126): Poisson for counts
-    (glm.poisson_glm), logistic for binary outcomes — the
-    classification workhorse behind quality filters and churn/flag
-    models. exp(coef_j) is the ODDS RATIO per unit x_j.
+    Logistic for binary outcomes — the classification workhorse
+    behind quality filters and churn/flag models. exp(coef_j) is the
+    ODDS RATIO per unit x_j.
 
     The propensity step inside ipw_ate_multi/aipw_ate is this same
     fit; here it is exposed standalone WITH inference (SEs from
     unit-vector solves of the final Hessian), deviance, and
     McFadden's R2 = 1 - ll/ll0 against the base-rate-only model.
 
-    Architecture: the poisson_glm backbone verbatim — bounded
-    ``rounds``, each ONE decimal(28,12)-quantized score/Hessian
-    aggregate over the checkpointed subject table, the generated
-    fixed-order no-pivot Gauss solve (logit likelihood is globally
-    concave), logit(ybar) intercept seed. Saturated fitted
-    probabilities (|eta| > ~21 under decimal(18,9)) NULL the
-    deviance/McFadden outputs via n_sat. Subject table scanned
-    rounds+2 times, each map-side combinable; no window, no join, no
-    driver loop.
+    Architecture: the poisson_glm backbone (_glm_fit) with
+    logistic_fragments (the logit likelihood is globally concave).
+    Saturated fitted probabilities (|eta| > ~21 under decimal(18,9))
+    NULL the deviance/McFadden outputs via n_sat.
     """
-    from .timeseries import _apply_steps_one_sql  # noqa: PLC0415
-
-    if rounds < 1:
-        raise ValueError(f"rounds must be >= 1, got {rounds}")
-    if not covariate_cols:
-        raise ValueError("covariate_cols must name at least one column")
-    p = len(covariate_cols)
-    frag = logistic_fragments(p)
+    frag = logistic_fragments(_fit_p(covariate_cols, rounds))
     keep = F.col(response_col).isNotNull()
-    for c in covariate_cols:
-        keep = keep & F.col(c).isNotNull()
-    # fan_out BEFORE the checkpoint: the subject relation is
-    # scanned rounds+2 times and inherits the source's partitioning —
-    # a single-file bench input would make every IRLS round a
-    # single-task aggregate (measured 1.9s/round over 150k rows on
-    # one core). Row-CAPPED (fan_out, ~16): an uncapped
-    # defaultParallelism width was over-parallelism on the KB..MB
-    # working set (driver scaling: 8 cores beat 32 on ipw/pca). The
-    # per-round decimal sums are EXACT, so the row order change
-    # cannot move a value (hashes re-certified).
-    subj = df.filter(keep).select(
-        F.col(response_col).cast("int").alias("y"),
-        *[
-            F.col(c).cast("decimal(18,6)").alias(f"x{j}")
-            for j, c in enumerate(covariate_cols, 1)
-        ],
-    ).transform(_fan_out_capped).localCheckpoint(eager=True)
-    b_cur = subj.agg(
-        *[F.expr(e).alias(nm) for nm, e in frag["init_terms"]]
-    )
-    for r in range(1, rounds + 1):
-        g = subj.crossJoin(F.broadcast(b_cur)).agg(
-            *[F.expr(e).alias(nm) for nm, e in frag["agg_terms"]]
-        )
-        g = _apply_steps_one_sql(
-            g,
-            frag["solve_steps"](r),
-            keep={f"n{nm}" for nm in frag["pnames"]},
-            barrier_every=None,
-        )
-        b_cur = g.select(
-            *[F.col(f"n{nm}").alias(nm) for nm in frag["pnames"]]
-        ).localCheckpoint(eager=True)
-    fin = subj.crossJoin(F.broadcast(b_cur)).agg(
-        *[F.expr(e).alias(nm) for nm, e in frag["final_terms"]]
-    )
-    fin = _apply_steps_one_sql(
-        fin, frag["se_steps"](), keep=None, barrier_every=None
+    fin = _glm_fit(
+        df, keep, F.col(response_col).cast("int"), covariate_cols,
+        frag, rounds,
     )
     # null-model log-likelihood from (n, ysum): fixed-order doubles.
     nd = F.col("n").cast("double")
@@ -510,38 +482,19 @@ def logistic_glm(
         & (F.col("ysum") < F.col("n"))
         & F.col("devhalf").isNotNull()
     )
-    labels = ["intercept", *covariate_cols]
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(lbl).alias("param"),
-                F.expr(o["coef"]).alias("coef"),
-                F.expr(o["se"]).alias("se"),
-                F.expr(o["z"]).alias("z"),
-                F.expr(o["odds_ratio"]).alias("odds_ratio"),
-            )
-            for lbl, o in zip(labels, frag["param_outputs"]())
-        ]
-    )
-    return fin.select(
-        "n",
-        F.when(okdev, F.round(F.lit(2.0) * F.col("devhalf"), 6)).alias(
-            "deviance"
-        ),
-        F.when(
-            okdev,
-            F.round(1.0 - (F.lit(0.0) - F.col("devhalf")) / ll0, 6),
-        ).alias("mcfadden_r2"),
-        F.explode(rows).alias("r"),
-    ).select(
-        F.col("r.param").alias("param"),
-        "n",
-        F.col("r.coef").alias("coef"),
-        F.col("r.se").alias("se"),
-        F.col("r.z").alias("z"),
-        F.col("r.odds_ratio").alias("odds_ratio"),
-        "deviance",
-        "mcfadden_r2",
+    return _param_rows(
+        fin,
+        covariate_cols,
+        frag["param_outputs"](),
+        {
+            "deviance": F.when(
+                okdev, F.round(F.lit(2.0) * F.col("devhalf"), 6)
+            ),
+            "mcfadden_r2": F.when(
+                okdev,
+                F.round(1.0 - (F.lit(0.0) - F.col("devhalf")) / ll0, 6),
+            ),
+        },
     )
 
 
@@ -558,9 +511,6 @@ def vif_fragments(p: int) -> dict:
     if p < 2 or p > 8:
         raise ValueError(f"p must be in 2..8, got {p}")
 
-    def xj(j: int) -> str:
-        return f"CAST(x{j} AS DOUBLE)"
-
     agg_terms = [("n", "CAST(COUNT(*) AS BIGINT)")]
     for j in range(1, p + 1):
         agg_terms.append(
@@ -574,7 +524,7 @@ def vif_fragments(p: int) -> dict:
             agg_terms.append(
                 (
                     f"s{j}_{k}",
-                    f"CAST(SUM(CAST({xj(j)} * {xj(k)}"
+                    f"CAST(SUM(CAST({_xj(j)} * {_xj(k)}"
                     " AS DECIMAL(28,12))) AS DOUBLE)",
                 )
             )
@@ -599,7 +549,7 @@ def vif_fragments(p: int) -> dict:
                 )
             )
 
-    def solve_steps():
+    def inverse_steps():
         a_names = {}
         for j in range(p):
             for k in range(j, p):
@@ -635,7 +585,7 @@ def vif_fragments(p: int) -> dict:
     return {
         "agg_terms": agg_terms,
         "corr_steps": corr_steps,
-        "solve_steps": solve_steps,
+        "solve_steps": inverse_steps,
         "outputs": outputs,
     }
 
@@ -822,253 +772,42 @@ def quasipoisson_glm(
     Architecture: poisson_fragments verbatim (identical Newton
     rounds, so coef/rate_ratio/deviance match poisson_glm exactly —
     twin-tested) plus ONE extra decimal(28,12)-quantized Pearson
-    term in the final aggregate; the SE scaling is O(1) fixed-order
-    doubles. Same NULL gates, plus NULL se/z/dispersion when
-    n <= m (no residual dof).
+    term in the final aggregate, over the fragments' own mu; the SE
+    scaling is O(1) fixed-order doubles. Same NULL gates, plus NULL
+    se/z/dispersion when n <= m (no residual dof).
     """
-    from .timeseries import _apply_steps_one_sql  # noqa: PLC0415
-
-    if rounds < 1:
-        raise ValueError(f"rounds must be >= 1, got {rounds}")
-    if not covariate_cols:
-        raise ValueError("covariate_cols must name at least one column")
-    p = len(covariate_cols)
-    frag = poisson_fragments(p)
+    frag = poisson_fragments(_fit_p(covariate_cols, rounds))
     m = frag["m"]
     keep = (
         F.col(response_col).isNotNull()
         & (F.col(response_col).cast("long") >= 0)
     )
-    for c in covariate_cols:
-        keep = keep & F.col(c).isNotNull()
-    # fan_out BEFORE the checkpoint: the subject relation is
-    # scanned rounds+2 times and inherits the source's partitioning —
-    # a single-file bench input would make every IRLS round a
-    # single-task aggregate (measured 1.9s/round over 150k rows on
-    # one core). Row-CAPPED (fan_out, ~16): an uncapped
-    # defaultParallelism width was over-parallelism on the KB..MB
-    # working set (driver scaling: 8 cores beat 32 on ipw/pca). The
-    # per-round decimal sums are EXACT, so the row order change
-    # cannot move a value (hashes re-certified).
-    subj = df.filter(keep).select(
-        F.col(response_col).cast("long").alias("y"),
-        *[
-            F.col(c).cast("decimal(18,6)").alias(f"x{j}")
-            for j, c in enumerate(covariate_cols, 1)
-        ],
-    ).transform(_fan_out_capped).localCheckpoint(eager=True)
-    b_cur = subj.agg(
-        *[F.expr(e).alias(nm) for nm, e in frag["init_terms"]]
-    )
-    for r in range(1, rounds + 1):
-        g = subj.crossJoin(F.broadcast(b_cur)).agg(
-            *[F.expr(e).alias(nm) for nm, e in frag["agg_terms"]]
-        )
-        g = _apply_steps_one_sql(
-            g,
-            frag["solve_steps"](r),
-            keep={f"n{nm}" for nm in frag["pnames"]},
-            barrier_every=None,
-        )
-        b_cur = g.select(
-            *[F.col(f"n{nm}").alias(nm) for nm in frag["pnames"]]
-        ).localCheckpoint(eager=True)
-    # mu text for the Pearson term — poisson_fragments' exp channel
-    eta = "b0"
-    for j in range(1, m):
-        eta += f" + b{j} * CAST(x{j} AS DOUBLE)"
-    mu = f"CAST(CAST(exp({eta}) AS DECIMAL(18,9)) AS DOUBLE)"
-    pearson = (
-        f"CAST(SUM(CASE WHEN {mu} > 0.0 THEN"
-        f" CAST(((CAST(y AS DOUBLE) - {mu})"
-        f" * (CAST(y AS DOUBLE) - {mu})) / {mu}"
-        " AS DECIMAL(28,12)) END) AS DOUBLE)"
-    )
-    fin = subj.crossJoin(F.broadcast(b_cur)).agg(
-        *[F.expr(e).alias(nm) for nm, e in frag["final_terms"]],
-        F.expr(pearson).alias("pearson"),
-    )
-    fin = _apply_steps_one_sql(
-        fin, frag["se_steps"](), keep=None, barrier_every=None
+    fin = _glm_fit(
+        df, keep, F.col(response_col).cast("long"), covariate_cols,
+        frag, rounds, [_pearson_term(frag["mu"])],
     )
     nd = F.col("n").cast("double")
     phi = F.try_divide(F.col("pearson"), nd - float(m))
     fin = fin.withColumn(
         "phi", F.when((F.col("n") > m) & (phi > 0), phi)
     )
-    labels = ["intercept", *covariate_cols]
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(lbl).alias("param"),
-                F.expr(o["coef"]).alias("coef"),
-                F.expr(
-                    f"round(sqrt(var{j}) * sqrt(phi), 6)"
-                ).alias("se"),
-                F.expr(
-                    f"round(b{j} / (sqrt(var{j}) * sqrt(phi)), 6)"
-                ).alias("z"),
-                F.expr(o["rate_ratio"]).alias("rate_ratio"),
-            )
-            for j, (lbl, o) in enumerate(
-                zip(labels, frag["param_outputs"]())
-            )
-        ]
+    return _param_rows(
+        fin,
+        covariate_cols,
+        [
+            {
+                "coef": o["coef"],
+                "se": f"round(sqrt(var{j}) * sqrt(phi), 6)",
+                "z": f"round(b{j} / (sqrt(var{j}) * sqrt(phi)), 6)",
+                "rate_ratio": o["rate_ratio"],
+            }
+            for j, o in enumerate(frag["param_outputs"]())
+        ],
+        {
+            "deviance": F.round(F.lit(2.0) * F.col("devhalf"), 6),
+            "dispersion": F.round(F.col("phi"), 6),
+        },
     )
-    return fin.select(
-        "n",
-        F.round(F.lit(2.0) * F.col("devhalf"), 6).alias("deviance"),
-        F.round(F.col("phi"), 6).alias("dispersion"),
-        F.explode(rows).alias("r"),
-    ).select(
-        F.col("r.param").alias("param"),
-        "n",
-        F.col("r.coef").alias("coef"),
-        F.col("r.se").alias("se"),
-        F.col("r.z").alias("z"),
-        F.col("r.rate_ratio").alias("rate_ratio"),
-        "deviance",
-        "dispersion",
-    )
-
-
-def negbin_fragments(p: int, alpha: float) -> dict:
-    """Shared Spark/DuckDB SQL fragments for the p-covariate NB2
-    negative-binomial GLM with KNOWN dispersion ``alpha``. Same
-    contract as poisson_fragments; model y ~ NB2(mu, alpha) with
-    Var = mu + alpha*mu^2, ln mu = b0 + sum b_j x_j. Fisher scoring:
-    score x_j (y - mu)/(1 + alpha*mu), information
-    x_j x_k mu/(1 + alpha*mu) — alpha = 0 IS Poisson, so the Poisson
-    chain falls out as the reduction test. The alpha literal is
-    injected verbatim into both engines' text — keep it binary-exact
-    (0.5, 0.25, 1.0) for hash-certified contracts.
-
-    NB2 deviance (no lgamma needed): 2*sum of
-      y>0: y ln(y/mu) - (y + 1/alpha) ln((1+alpha y)/(1+alpha mu))
-      y=0: (1/alpha) ln(1+alpha mu)
-    """
-    from .timeseries import _gauss_steps  # noqa: PLC0415
-
-    if p < 1 or p > 7:
-        raise ValueError(f"p must be in 1..7, got {p}")
-    if alpha <= 0:
-        raise ValueError(f"alpha must be > 0, got {alpha}")
-    a = repr(float(alpha))
-    m = p + 1
-    eta = "b0"
-    for j in range(1, m):
-        eta += f" + b{j} * CAST(x{j} AS DOUBLE)"
-    mu = f"CAST(CAST(exp({eta}) AS DECIMAL(18,9)) AS DOUBLE)"
-    den = f"(1.0 + {a} * {mu})"
-    yd = "CAST(y AS DOUBLE)"
-
-    def s28(term: str, name: str):
-        return (
-            name,
-            f"CAST(SUM(CAST({term} AS DECIMAL(28,12))) AS DOUBLE)",
-        )
-
-    def xj(j: int) -> str:
-        return "1.0" if j == 0 else f"CAST(x{j} AS DOUBLE)"
-
-    agg_terms = []
-    for j in range(m):
-        agg_terms.append(
-            s28(f"{xj(j)} * (({yd} - {mu}) / {den})", f"g{j}")
-        )
-    for j in range(m):
-        for k in range(j, m):
-            agg_terms.append(
-                s28(f"({xj(j)} * {xj(k)}) * ({mu} / {den})", f"h{j}_{k}")
-            )
-    for j in range(m):
-        agg_terms.append((f"b{j}", f"MIN(b{j})"))
-
-    init_terms = [
-        (
-            "b0",
-            "CASE WHEN COUNT(*) > 0 AND SUM(y) > 0 THEN"
-            " CAST(CAST(ln(CAST(SUM(y) AS DOUBLE)"
-            " / CAST(COUNT(*) AS DOUBLE)) AS DECIMAL(18,9))"
-            " AS DOUBLE) END",
-        )
-    ]
-    for j in range(1, m):
-        init_terms.append((f"b{j}", "CAST(0.0 AS DOUBLE)"))
-
-    def _a_names():
-        return {
-            (j, k): f"h{j}_{k}" for j in range(m) for k in range(j, m)
-        }
-
-    pnames = [f"b{j}" for j in range(m)]
-
-    def solve_steps(round_idx: int):
-        del round_idx
-        b_names = [f"g{j}" for j in range(m)]
-        steps, deltas, diag = _gauss_steps(m, _a_names(), b_names, "p")
-        ok = " AND ".join(f"{d} > 0" for d in dict.fromkeys(diag))
-        for j in range(m):
-            steps.append(
-                (
-                    f"nb{j}",
-                    f"CASE WHEN {ok} THEN CAST(CAST(b{j} + {deltas[j]}"
-                    " AS DECIMAL(18,9)) AS DOUBLE) ELSE NULL END",
-                )
-            )
-        return steps
-
-    dev_term = (
-        f"CASE WHEN y > 0 THEN {yd} * ln({yd} / {mu})"
-        f" - ({yd} + 1.0 / {a})"
-        f" * ln((1.0 + {a} * {yd}) / (1.0 + {a} * {mu}))"
-        f" ELSE (1.0 / {a}) * ln(1.0 + {a} * {mu}) END"
-    )
-    final_terms = list(agg_terms) + [
-        ("n", "CAST(COUNT(*) AS BIGINT)"),
-        ("ysum", "CAST(COALESCE(SUM(y), 0) AS BIGINT)"),
-        s28(dev_term, "devhalf"),
-    ]
-
-    def se_steps():
-        steps = []
-        for j in range(m):
-            rhs = ["1.0" if i == j else "0.0" for i in range(m)]
-            s, betas, diag = _gauss_steps(m, _a_names(), rhs, f"v{j}")
-            ok = " AND ".join(f"{d} > 0" for d in dict.fromkeys(diag))
-            steps.extend(s)
-            steps.append(
-                (
-                    f"var{j}",
-                    f"CASE WHEN {ok} AND {betas[j]} > 0"
-                    f" THEN {betas[j]} END",
-                )
-            )
-        return steps
-
-    def param_outputs():
-        outs = []
-        for j in range(m):
-            outs.append(
-                {
-                    "coef": f"round(b{j}, 6)",
-                    "se": f"round(sqrt(var{j}), 6)",
-                    "z": f"round(b{j} / sqrt(var{j}), 6)",
-                    "rate_ratio": f"round(exp(b{j}), 6)",
-                }
-            )
-        return outs
-
-    return {
-        "m": m,
-        "init_terms": init_terms,
-        "agg_terms": agg_terms,
-        "solve_steps": solve_steps,
-        "final_terms": final_terms,
-        "se_steps": se_steps,
-        "param_outputs": param_outputs,
-        "pnames": pnames,
-    }
 
 
 def negbin_glm(
@@ -1091,87 +830,22 @@ def negbin_glm(
     phi: alpha ~ (phi - 1)/mean(mu) as a method-of-moments seed);
     alpha -> 0 recovers Poisson exactly (tested).
 
-    Plumbing is poisson_glm's verbatim: Fisher scoring where every
-    round is ONE decimal-quantized aggregate over the checkpointed
-    subject table crossJoined with the 1-row params relation;
+    Plumbing is poisson_glm's (_glm_fit) with Fisher scoring;
     negbin_fragments shares the step text with the oracle. Keep
     alpha binary-exact for hash-certified use.
     """
-    from .timeseries import _apply_steps_one_sql  # noqa: PLC0415
-
-    if rounds < 1:
-        raise ValueError(f"rounds must be >= 1, got {rounds}")
-    if not covariate_cols:
-        raise ValueError("covariate_cols must name at least one column")
-    p = len(covariate_cols)
-    frag = negbin_fragments(p, alpha)
+    frag = negbin_fragments(_fit_p(covariate_cols, rounds), alpha)
     keep = (
         F.col(response_col).isNotNull()
         & (F.col(response_col).cast("long") >= 0)
     )
-    for c in covariate_cols:
-        keep = keep & F.col(c).isNotNull()
-    # fan_out BEFORE the checkpoint: the subject relation is
-    # scanned rounds+2 times and inherits the source's partitioning —
-    # a single-file bench input would make every IRLS round a
-    # single-task aggregate (measured 1.9s/round over 150k rows on
-    # one core). Row-CAPPED (fan_out, ~16): an uncapped
-    # defaultParallelism width was over-parallelism on the KB..MB
-    # working set (driver scaling: 8 cores beat 32 on ipw/pca). The
-    # per-round decimal sums are EXACT, so the row order change
-    # cannot move a value (hashes re-certified).
-    subj = df.filter(keep).select(
-        F.col(response_col).cast("long").alias("y"),
-        *[
-            F.col(c).cast("decimal(18,6)").alias(f"x{j}")
-            for j, c in enumerate(covariate_cols, 1)
-        ],
-    ).transform(_fan_out_capped).localCheckpoint(eager=True)
-    b_cur = subj.agg(
-        *[F.expr(e).alias(nm) for nm, e in frag["init_terms"]]
+    fin = _glm_fit(
+        df, keep, F.col(response_col).cast("long"), covariate_cols,
+        frag, rounds,
     )
-    for r in range(1, rounds + 1):
-        g = subj.crossJoin(F.broadcast(b_cur)).agg(
-            *[F.expr(e).alias(nm) for nm, e in frag["agg_terms"]]
-        )
-        g = _apply_steps_one_sql(
-            g,
-            frag["solve_steps"](r),
-            keep={f"n{nm}" for nm in frag["pnames"]},
-            barrier_every=None,
-        )
-        b_cur = g.select(
-            *[F.col(f"n{nm}").alias(nm) for nm in frag["pnames"]]
-        ).localCheckpoint(eager=True)
-    fin = subj.crossJoin(F.broadcast(b_cur)).agg(
-        *[F.expr(e).alias(nm) for nm, e in frag["final_terms"]]
-    )
-    fin = _apply_steps_one_sql(
-        fin, frag["se_steps"](), keep=None, barrier_every=None
-    )
-    labels = ["intercept", *covariate_cols]
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(lbl).alias("param"),
-                F.expr(o["coef"]).alias("coef"),
-                F.expr(o["se"]).alias("se"),
-                F.expr(o["z"]).alias("z"),
-                F.expr(o["rate_ratio"]).alias("rate_ratio"),
-            )
-            for lbl, o in zip(labels, frag["param_outputs"]())
-        ]
-    )
-    return fin.select(
-        "n",
-        F.round(F.lit(2.0) * F.col("devhalf"), 6).alias("deviance"),
-        F.explode(rows).alias("r"),
-    ).select(
-        F.col("r.param").alias("param"),
-        "n",
-        F.col("r.coef").alias("coef"),
-        F.col("r.se").alias("se"),
-        F.col("r.z").alias("z"),
-        F.col("r.rate_ratio").alias("rate_ratio"),
-        "deviance",
+    return _param_rows(
+        fin,
+        covariate_cols,
+        frag["param_outputs"](),
+        {"deviance": F.round(F.lit(2.0) * F.col("devhalf"), 6)},
     )

@@ -25,11 +25,34 @@ an extra partition key in both the aggregate and the windows.
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import stats
+from .glm import _newton_rounds, _s28, _xj
 from .stats import ordered_cumsum
+
+
+def _r6(v):
+    """Half-up to 6 places (the contract's output rounding); None
+    passes through."""
+    if v is None:
+        return None
+    return float(
+        Decimal(repr(v)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
+    )
+
+
+def _d18_9(v: float) -> float:
+    """Half-up to scale 9 — the driver-side twin of the plans'
+    CAST(... AS DECIMAL(18,9)) channel."""
+    return float(
+        Decimal(repr(v)).quantize(
+            Decimal("0.000000001"), rounding=ROUND_HALF_UP
+        )
+    )
 
 
 def _risk_cumsums(per_t, tot_col, stage2):
@@ -351,7 +374,6 @@ def log_rank_k(
     Singular V returns NULL chi2 (never-fabricate).
     """
     import math  # noqa: PLC0415 — doc symmetry with cox_ph
-    from decimal import ROUND_HALF_UP, Decimal  # noqa: PLC0415
 
     k = len(groups)
     if k < 2 or k > 5:
@@ -513,15 +535,6 @@ def log_rank_k(
             for zi, si in zip(z, sols[0]):
                 acc = acc + zi * si
             chi2 = acc
-    def r6(v):
-        if v is None:
-            return None
-        return float(
-            Decimal(repr(v)).quantize(
-                Decimal("0.000001"), rounding=ROUND_HALF_UP
-            )
-        )
-
     rows = []
     for i, gv in enumerate(groups, 1):
         ev = float(row[f"e{i}"]) if row[f"e{i}"] is not None else 0.0
@@ -530,8 +543,8 @@ def log_rank_k(
                 str(gv),
                 int(row[f"tot_n{i}"] or 0),
                 int(row[f"tot_d{i}"] or 0),
-                r6(ev),
-                r6(chi2),
+                _r6(ev),
+                _r6(chi2),
                 k - 1,
             )
         )
@@ -578,7 +591,6 @@ def cox_ph(
     never-fabricate rule).
     """
     import math  # noqa: PLC0415
-    from decimal import ROUND_HALF_UP, Decimal  # noqa: PLC0415
 
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
@@ -626,11 +638,6 @@ def cox_ph(
         F.sum("d").cast("long").alias("n_events"),
     ).first()
 
-    q9 = Decimal("0.000000001")
-
-    def d18_9(v: float) -> Decimal:
-        return Decimal(repr(v)).quantize(q9, rounding=ROUND_HALF_UP)
-
     def ui_at(eb: float):
         r0 = F.col("r0").cast("double")
         r1 = F.col("r1").cast("double")
@@ -652,14 +659,14 @@ def cox_ph(
     info = 0.0
     degenerate = False
     for _ in range(rounds):
-        eb = float(d18_9(math.exp(beta)))
+        eb = _d18_9(math.exp(beta))
         u, info = ui_at(eb)
         if info <= 0:
             degenerate = True
             break
-        beta = float(d18_9(beta + u / info))
+        beta = _d18_9(beta + u / info)
     if not degenerate:
-        eb = float(d18_9(math.exp(beta)))
+        eb = _d18_9(math.exp(beta))
         _, info = ui_at(eb)
         degenerate = info <= 0
     if degenerate:
@@ -667,20 +674,13 @@ def cox_ph(
     else:
         se = 1.0 / math.sqrt(info)
 
-        def r6(v: float) -> float:
-            return float(
-                Decimal(repr(v)).quantize(
-                    Decimal("0.000001"), rounding=ROUND_HALF_UP
-                )
-            )
-
         row = (
             totals["n"],
             totals["n_events"],
-            r6(beta),
-            r6(math.exp(beta)),
-            r6(se),
-            r6(beta / se),
+            _r6(beta),
+            _r6(math.exp(beta)),
+            _r6(se),
+            _r6(beta / se),
         )
     return spark.createDataFrame(
         [row],
@@ -738,7 +738,6 @@ def cox_ph_multi(
     rule).
     """
     import math  # noqa: PLC0415
-    from decimal import ROUND_HALF_UP, Decimal  # noqa: PLC0415
 
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
@@ -796,11 +795,6 @@ def cox_ph_multi(
     # distributed fallback passes it as ordered_cumsum's n_rows, which
     # skips the per-call eager checkpoint + count.
     n_times = subj.select("t").distinct().count()
-
-    q9 = Decimal("0.000000001")
-
-    def d18_9(v: float) -> Decimal:
-        return Decimal(repr(v)).quantize(q9, rounding=ROUND_HALF_UP)
 
     jk_pairs = [(j, k) for j in range(1, p + 1) for k in range(j, p + 1)]
     cols = ["aw"] + [f"awx{j}" for j in range(1, p + 1)] + [
@@ -992,26 +986,19 @@ def cox_ph_multi(
     degenerate = False
     var_diag = None
     for _ in range(rounds):
-        u, imat = ui_at([float(d18_9(b)) for b in betas])
+        u, imat = ui_at([_d18_9(b) for b in betas])
         delta, _ = solve(imat, u)
         if delta is None:
             degenerate = True
             break
-        betas = [float(d18_9(b + dl)) for b, dl in zip(betas, delta)]
+        betas = [_d18_9(b + dl) for b, dl in zip(betas, delta)]
     if not degenerate:
-        _, imat = ui_at([float(d18_9(b)) for b in betas])
+        _, imat = ui_at([_d18_9(b) for b in betas])
         _, var_diag = solve(imat, [0.0] * p)
         degenerate = var_diag is None or any(
             v <= 0 for v in var_diag
         )
     rows = []
-
-    def r6(v: float) -> float:
-        return float(
-            Decimal(repr(v)).quantize(
-                Decimal("0.000001"), rounding=ROUND_HALF_UP
-            )
-        )
 
     for j, c in enumerate(covariate_cols):
         if degenerate:
@@ -1025,10 +1012,10 @@ def cox_ph_multi(
                     c,
                     totals["n"],
                     totals["n_events"],
-                    r6(betas[j]),
-                    r6(math.exp(betas[j])),
-                    r6(se),
-                    r6(betas[j] / se),
+                    _r6(betas[j]),
+                    _r6(math.exp(betas[j])),
+                    _r6(se),
+                    _r6(betas[j] / se),
                 )
             )
     return spark.createDataFrame(
@@ -1208,7 +1195,6 @@ def weibull_fit(
     no events or a degenerate denominator (never-fabricate).
     """
     import math  # noqa: PLC0415
-    from decimal import ROUND_HALF_UP, Decimal  # noqa: PLC0415
 
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
@@ -1230,18 +1216,6 @@ def weibull_fit(
     ).first()
     n, d = base["n"], base["d"]
     slne = float(base["slne"]) if base["slne"] is not None else 0.0
-
-    q9 = Decimal("0.000000001")
-
-    def d18_9(v: float) -> float:
-        return float(Decimal(repr(v)).quantize(q9, rounding=ROUND_HALF_UP))
-
-    def r6(v: float) -> float:
-        return float(
-            Decimal(repr(v)).quantize(
-                Decimal("0.000001"), rounding=ROUND_HALF_UP
-            )
-        )
 
     if not d or d <= 0:
         return spark.createDataFrame(
@@ -1267,7 +1241,7 @@ def weibull_fit(
     k = 1.0
     degenerate = False
     for _ in range(rounds):
-        stk, stkl = sums_at(d18_9(k))
+        stk, stkl = sums_at(_d18_9(k))
         if stk <= 0:
             degenerate = True
             break
@@ -1282,14 +1256,14 @@ def weibull_fit(
         # one more aggregate AT the final k: lambda's sum must be
         # evaluated at the shape estimate the fit settled on, not the
         # previous round's literal
-        kf = d18_9(k)
+        kf = _d18_9(k)
         stk_f, _ = sums_at(kf)
         if stk_f <= 0:
             rows = [(n, d, None, None, None)]
         else:
             lam = math.exp(math.log(stk_f / float(d)) / kf)
             med = lam * math.exp(math.log(math.log(2.0)) / kf)
-            rows = [(n, d, r6(kf), r6(lam), r6(med))]
+            rows = [(n, d, _r6(kf), _r6(lam), _r6(med))]
     return spark.createDataFrame(
         rows,
         "n long, n_events long, shape_k double, scale_lambda double,"
@@ -1460,30 +1434,21 @@ def weibull_aft_fragments(p: int) -> dict:
     ed = "CAST(e AS DOUBLE)"
     ln = "CAST(lnt AS DOUBLE)"
 
-    def s28(term: str, name: str):
-        return (
-            name,
-            f"CAST(SUM(CAST({term} AS DECIMAL(28,12))) AS DOUBLE)",
-        )
-
-    def xj(j: int) -> str:
-        return "1.0" if j == 0 else f"CAST(x{j} AS DOUBLE)"
-
     agg_terms = []
     for j in range(p + 1):
-        agg_terms.append(s28(f"{xj(j)} * ({ez} - {ed})", f"u{j}"))
-    agg_terms.append(s28(f"{ed} / pa + ({ed} - {ez}) * {ln}", "ua"))
+        agg_terms.append(_s28(f"{_xj(j)} * ({ez} - {ed})", f"u{j}"))
+    agg_terms.append(_s28(f"{ed} / pa + ({ed} - {ez}) * {ln}", "ua"))
     for j in range(p + 1):
         for k in range(j, p + 1):
             agg_terms.append(
-                s28(f"({xj(j)} * {xj(k)}) * {ez}", f"i{j}_{k}")
+                _s28(f"({_xj(j)} * {_xj(k)}) * {ez}", f"i{j}_{k}")
             )
     for j in range(p + 1):
         agg_terms.append(
-            s28(f"-(({xj(j)} * {ln}) * {ez})", f"i{j}_a")
+            _s28(f"-(({_xj(j)} * {ln}) * {ez})", f"i{j}_a")
         )
     agg_terms.append(
-        s28(f"{ed} / (pa * pa) + ({ln} * {ln}) * {ez}", "ia_a")
+        _s28(f"{ed} / (pa * pa) + ({ln} * {ln}) * {ez}", "ia_a")
     )
     for j in range(p + 1):
         agg_terms.append((f"g{j}", f"MIN(g{j})"))
@@ -1696,36 +1661,7 @@ def weibull_aft(
             for j, c in enumerate(covariate_cols, 1)
         ],
     ).localCheckpoint(eager=True)
-    b_cur = subj.agg(
-        *[F.expr(e).alias(nm) for nm, e in frag["init_terms"]]
-    )
-    for r in range(1, rounds + 1):
-        g = subj.crossJoin(F.broadcast(b_cur)).agg(
-            *[F.expr(e).alias(nm) for nm, e in frag["agg_terms"]]
-        )
-        # ONE liveness-pruned spark.sql per round instead of per-level
-        # withColumns (the var_fit/glm discipline —
-        # timeseries._apply_steps_one_sql): a single parse + analysis
-        # of the whole Gauss chain, nested SELECTs carrying only
-        # still-live columns. The emitted arithmetic is the fragment
-        # text verbatim, so round iterates and hashes are unchanged.
-        # The per-round text stays identical across rounds, preserving
-        # the codegen cache hit. No barriers: the chain is consumed
-        # once (no fan-out duplication to stop).
-        g = _apply_steps_one_sql(
-            g,
-            frag["solve_steps"](r),
-            keep=[f"n{nm}" for nm in frag["pnames"]],
-            barrier_every=None,
-        )
-        # eager 1-ROW checkpoint per round: without it round r's plan
-        # nests r broadcast subtrees and analysis/codegen cost grows
-        # superlinearly in rounds (measured ~9 s fixed overhead at 8
-        # rounds vs ~3 s checkpointed); the data never touches the
-        # driver (cox_ph_multi round-trips a Row per round instead)
-        b_cur = g.select(
-            *[F.col(f"n{nm}").alias(nm) for nm in frag["pnames"]]
-        ).localCheckpoint(eager=True)
+    b_cur = _newton_rounds(subj, frag, rounds)
     fin = subj.crossJoin(F.broadcast(b_cur)).agg(
         *[F.expr(e).alias(nm) for nm, e in frag["final_terms"]]
     )
@@ -1819,7 +1755,6 @@ def grays_test(
     oracle COULD chain; twin-tested). Singular V returns NULL chi2
     (never-fabricate).
     """
-    from decimal import ROUND_HALF_UP, Decimal  # noqa: PLC0415
 
     if cause is None:
         raise ValueError("cause must name the target cause value")
@@ -2025,15 +1960,6 @@ def grays_test(
         F.sum("d1").cast("long").alias("observed"),
     )
 
-    def r6(v):
-        if v is None:
-            return None
-        return float(
-            Decimal(repr(v)).quantize(
-                Decimal("0.000001"), rounding=ROUND_HALF_UP
-            )
-        )
-
     tot_by = {r["g"]: r for r in totals.collect()}
     rows = []
     for i, gv in enumerate(groups, 1):
@@ -2044,8 +1970,8 @@ def grays_test(
                 str(gv),
                 int(tr["n"]) if tr else 0,
                 int(tr["observed"]) if tr else 0,
-                r6(ev),
-                r6(chi2),
+                _r6(ev),
+                _r6(chi2),
                 k - 1,
             )
         )
@@ -2212,7 +2138,6 @@ def rmst_diff(
     has an undefined variance term (d_i = n_i inside tau with the
     curve dead — never-fabricate); groups must both be present.
     """
-    from decimal import ROUND_HALF_UP, Decimal  # noqa: PLC0415
 
     if tau <= 0:
         raise ValueError(f"tau must be > 0, got {tau}")
@@ -2327,12 +2252,6 @@ def rmst_diff(
         .collect()
     )
     n_by = {r["g"]: int(r["n"]) for r in base if int(r["n"] or 0) > 0}
-    q9 = Decimal("0.000000001")
-
-    def d18_9(v: float) -> float:
-        return float(
-            Decimal(repr(v)).quantize(q9, rounding=ROUND_HALF_UP)
-        )
 
     if "a" not in n_by or "b" not in n_by:
         raise ValueError("both groups must be present in the input")
@@ -2342,7 +2261,7 @@ def rmst_diff(
             continue  # scaffold-only group (no real subjects)
         stau = float(r["s_tau"]) if r["s_tau"] is not None else 1.0
         drops = float(r["drops"]) if r["drops"] is not None else 0.0
-        info[r["g"]] = {"s_tau": d18_9(stau), "rmst": float(tau) * stau + drops}
+        info[r["g"]] = {"s_tau": _d18_9(stau), "rmst": float(tau) * stau + drops}
     for g in ("a", "b"):
         if g not in info:
             # group exists but has no observation inside tau: the
@@ -2383,15 +2302,6 @@ def rmst_diff(
         for r in vrow
     }
 
-    def r6(v):
-        if v is None:
-            return None
-        return float(
-            Decimal(repr(v)).quantize(
-                Decimal("0.000001"), rounding=ROUND_HALF_UP
-            )
-        )
-
     import math  # noqa: PLC0415
 
     ra, rb = info["a"]["rmst"], info["b"]["rmst"]
@@ -2411,13 +2321,13 @@ def rmst_diff(
                 float(tau),
                 n_by.get("a", 0),
                 n_by.get("b", 0),
-                r6(ra),
-                r6(rb),
-                r6(diff),
-                r6(se),
-                r6(zs),
-                r6(lo),
-                r6(hi),
+                _r6(ra),
+                _r6(rb),
+                _r6(diff),
+                _r6(se),
+                _r6(zs),
+                _r6(lo),
+                _r6(hi),
             )
         ],
         "tau double, n_treat long, n_ctrl long, rmst_treat double,"
@@ -2602,7 +2512,6 @@ def cox_ph_check(
     (single-group input, non-positive information).
     """
     import math  # noqa: PLC0415
-    from decimal import ROUND_HALF_UP, Decimal  # noqa: PLC0415
 
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
@@ -2635,10 +2544,6 @@ def cox_ph_check(
         F.sum(F.col("c0") + F.col("c1")).cast("long").alias("n"),
         F.sum("d").cast("long").alias("n_events"),
     ).first()
-    q9 = Decimal("0.000000001")
-
-    def d18_9(v: float) -> Decimal:
-        return Decimal(repr(v)).quantize(q9, rounding=ROUND_HALF_UP)
 
     def ui_at(eb: float):
         r0 = F.col("r0").cast("double")
@@ -2660,19 +2565,19 @@ def cox_ph_check(
     beta = 0.0
     degenerate = False
     for _ in range(rounds):
-        eb = float(d18_9(math.exp(beta)))
+        eb = _d18_9(math.exp(beta))
         u, info = ui_at(eb)
         if info <= 0:
             degenerate = True
             break
-        beta = float(d18_9(beta + u / info))
+        beta = _d18_9(beta + u / info)
     if degenerate:
         return spark.createDataFrame(
             [(totals["n"], totals["n_events"], None, None, None)],
             "n long, n_events long, beta double, chi2_ph double,"
             " reject_5pct boolean",
         )
-    eb = float(d18_9(math.exp(beta)))
+    eb = _d18_9(math.exp(beta))
     r0 = F.col("r0").cast("double")
     r1 = F.col("r1").cast("double")
     d = F.col("d").cast("double")
@@ -2703,18 +2608,11 @@ def cox_ph_check(
         )
         chi2 = (num * num) / den if den > 0 else None
 
-    def r6(v2: float) -> float:
-        return float(
-            Decimal(repr(v2)).quantize(
-                Decimal("0.000001"), rounding=ROUND_HALF_UP
-            )
-        )
-
     out = (
         totals["n"],
         totals["n_events"],
-        r6(beta),
-        r6(chi2) if chi2 is not None else None,
+        _r6(beta),
+        _r6(chi2),
         (chi2 > 3.841459) if chi2 is not None else None,
     )
     return spark.createDataFrame(

@@ -14,6 +14,12 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
 
+# The directory holding the econdatapipeline_spark package. Python UDFs
+# are pickled by module reference, so their workers must import the
+# package even when the driver found it through a script's own
+# sys.path insert rather than its working directory.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "econdatapipeline_spark",
@@ -58,6 +64,7 @@ def get_spark(
             str(int(os.environ.get("SPARK_GRAFT_ADVISORY_MB", "1")) * 1024 * 1024),
         )
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

@@ -892,95 +892,6 @@ def test_km_ci_curve_matches_kaplan_meier(spark):
 
 
 # ---------------------------------------------------------------------------
-# poisson_glm
-# ---------------------------------------------------------------------------
-
-def _poisson_numpy(y, X, rounds=6):
-    """Unquantized numpy replay: init b0 = ln(mean y), Newton on the
-    concave log-link likelihood; returns (beta, se, deviance)."""
-    y = np.asarray(y, dtype=float)
-    Xd = np.column_stack(
-        [np.ones(len(y))] + [np.asarray(c, dtype=float) for c in X]
-    )
-    b = np.zeros(Xd.shape[1])
-    b[0] = math.log(y.mean())
-    for _ in range(rounds):
-        mu = np.exp(Xd @ b)
-        b = b + np.linalg.solve((Xd * mu[:, None]).T @ Xd, Xd.T @ (y - mu))
-    mu = np.exp(Xd @ b)
-    cov = np.linalg.inv((Xd * mu[:, None]).T @ Xd)
-    dev = 2.0 * sum(
-        yy * math.log(yy / mm) - (yy - mm) if yy > 0 else mm
-        for yy, mm in zip(y, mu)
-    )
-    return b, np.sqrt(np.diag(cov)), dev
-
-
-def test_poisson_glm_matches_numpy_reference(spark):
-    """Coefs, delta-free SEs, z, rate ratios, and deviance agree with
-    the unquantized numpy IRLS to under the 6-dp grain, and the fit
-    recovers the generating parameters."""
-    from econdatapipeline_spark.operators.glm import poisson_glm
-
-    rng = np.random.RandomState(4)
-    n = 1500
-    x1 = np.round(rng.normal(0, 1, n), 3)
-    x2 = (np.arange(n) % 2).astype(float)
-    y = rng.poisson(np.exp(0.8 + 0.5 * x1 - 0.3 * x2))
-    df = spark.createDataFrame(
-        [(int(a), float(b), float(c)) for a, b, c in zip(y, x1, x2)],
-        "y int, x1 double, x2 double",
-    )
-    rows = {
-        r["param"]: r
-        for r in poisson_glm(df, "y", ["x1", "x2"]).collect()
-    }
-    beta, se, dev = _poisson_numpy(y, [x1, x2])
-    for j, lbl in enumerate(["intercept", "x1", "x2"]):
-        r = rows[lbl]
-        assert r["n"] == n
-        assert r["coef"] == pytest.approx(beta[j], abs=2e-5)
-        assert r["se"] == pytest.approx(se[j], abs=2e-5)
-        assert r["rate_ratio"] == pytest.approx(
-            math.exp(beta[j]), abs=2e-4
-        )
-        assert r["deviance"] == pytest.approx(dev, abs=1e-3)
-    assert rows["x1"]["coef"] == pytest.approx(0.5, abs=0.06)
-    assert rows["x2"]["coef"] == pytest.approx(-0.3, abs=0.08)
-
-
-def test_poisson_glm_gates_and_validation(spark):
-    """Constant covariate -> singular Hessian -> NULL estimates;
-    all-zero response -> NULL (ln(mean) undefined); negative
-    responses are excluded by the >= 0 filter; bad args raise."""
-    from econdatapipeline_spark.operators.glm import poisson_glm
-
-    const = spark.createDataFrame(
-        [(i % 3, 2.5) for i in range(40)], "y int, x1 double"
-    )
-    for r in poisson_glm(const, "y", ["x1"]).collect():
-        assert r["coef"] is None and r["se"] is None
-
-    zeros = spark.createDataFrame(
-        [(0, float(i % 5)) for i in range(30)], "y int, x1 double"
-    )
-    for r in poisson_glm(zeros, "y", ["x1"]).collect():
-        assert r["coef"] is None
-
-    mixed = spark.createDataFrame(
-        [(-3, 1.0)] + [(i % 4, float(i % 7)) for i in range(50)],
-        "y int, x1 double",
-    )
-    out = poisson_glm(mixed, "y", ["x1"]).collect()
-    assert all(r["n"] == 50 for r in out)  # the negative row dropped
-
-    with pytest.raises(ValueError):
-        poisson_glm(const, "y", [])
-    with pytest.raises(ValueError):
-        poisson_glm(const, "y", ["x1"], rounds=0)
-
-
-# ---------------------------------------------------------------------------
 # msprt_monitor (always-valid sequential testing)
 # ---------------------------------------------------------------------------
 

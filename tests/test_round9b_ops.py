@@ -1075,49 +1075,6 @@ def test_hurst_short_series_nulls(spark):
     assert row["hurst"] is None
 
 
-# ---------------------------------------------------------------------------
-# quasipoisson_glm
-# ---------------------------------------------------------------------------
-
-def test_quasipoisson_scales_inference_not_estimates(spark):
-    from econdatapipeline_spark.operators.glm import (
-        poisson_glm,
-        quasipoisson_glm,
-    )
-
-    rng = np.random.RandomState(37)
-    n = 800
-    x1 = np.round(rng.uniform(0, 2, n), 3)
-    lam = np.exp(0.3 + 0.8 * x1)
-    # negative-binomial draws: overdispersed counts (Var > mean)
-    y = rng.negative_binomial(2, 2 / (2 + lam))
-    df = spark.createDataFrame(
-        [(int(a), float(b)) for a, b in zip(y, x1)],
-        "y int, x1 double",
-    )
-    pois = {r["param"]: r for r in poisson_glm(df, "y", ["x1"]).collect()}
-    quasi = {
-        r["param"]: r for r in quasipoisson_glm(df, "y", ["x1"]).collect()
-    }
-    # identical point estimates and deviance (same Newton rounds)
-    for prm in ("intercept", "x1"):
-        assert quasi[prm]["coef"] == pois[prm]["coef"]
-        assert quasi[prm]["rate_ratio"] == pois[prm]["rate_ratio"]
-        assert quasi[prm]["deviance"] == pois[prm]["deviance"]
-    # overdispersion detected, SEs widened by sqrt(phi)
-    phi = quasi["x1"]["dispersion"]
-    assert phi > 1.3
-    assert quasi["x1"]["se"] == pytest.approx(
-        pois["x1"]["se"] * np.sqrt(phi), rel=1e-3
-    )
-    assert abs(quasi["x1"]["z"]) < abs(pois["x1"]["z"])
-    # Pearson dispersion against numpy on the fitted means
-    b0, b1 = pois["intercept"]["coef"], pois["x1"]["coef"]
-    mu = np.exp(b0 + b1 * x1)
-    phi_ref = np.sum((y - mu) ** 2 / mu) / (n - 2)
-    assert phi == pytest.approx(phi_ref, rel=5e-3)
-
-
 def test_event_study_missing_base_yields_null_coefs(spark):
     from econdatapipeline_spark.operators.evaluation import event_study
 

@@ -1390,81 +1390,6 @@ def test_qini_good_score_bulges_random_flatlines(spark):
 
 
 # ---------------------------------------------------------------------------
-# negbin_glm
-# ---------------------------------------------------------------------------
-
-def _negbin_numpy(y, X, alpha, rounds=6):
-    """Float replay of the Fisher-scoring schedule."""
-    y = np.asarray(y, dtype=float)
-    Xd = np.column_stack([np.ones(len(y))] + [np.asarray(c) for c in X])
-    b = np.zeros(Xd.shape[1])
-    b[0] = np.log(y.mean())
-    for _ in range(rounds):
-        mu = np.exp(Xd @ b)
-        den = 1.0 + alpha * mu
-        g = Xd.T @ ((y - mu) / den)
-        W = mu / den
-        H = (Xd * W[:, None]).T @ Xd
-        b = b + np.linalg.solve(H, g)
-    mu = np.exp(Xd @ b)
-    H = (Xd * (mu / (1.0 + alpha * mu))[:, None]).T @ Xd
-    se = np.sqrt(np.diag(np.linalg.inv(H)))
-    return b, se
-
-
-def test_negbin_recovers_overdispersed_counts(spark):
-    from econdatapipeline_spark.operators.glm import negbin_glm
-
-    rng = np.random.RandomState(15)
-    n = 4000
-    x1 = np.round(rng.uniform(0, 2, n), 3)
-    x2 = (rng.uniform(size=n) < 0.4).astype(float)
-    mu = np.exp(0.5 + 0.8 * x1 - 0.5 * x2)
-    alpha = 0.5
-    # NB2 via gamma-poisson mixture
-    lam = mu * rng.gamma(1 / alpha, alpha, n)
-    y = rng.poisson(lam)
-    df = spark.createDataFrame(
-        [(int(a), float(b), float(c)) for a, b, c in zip(y, x1, x2)],
-        "y long, x1 double, x2 double",
-    )
-    rows = {r["param"]: r for r in negbin_glm(df, "y", ["x1", "x2"], alpha=0.5).collect()}
-    b_ref, se_ref = _negbin_numpy(y, [x1, x2], 0.5)
-    assert rows["intercept"]["coef"] == pytest.approx(b_ref[0], abs=2e-4)
-    assert rows["x1"]["coef"] == pytest.approx(b_ref[1], abs=2e-4)
-    assert rows["x2"]["coef"] == pytest.approx(b_ref[2], abs=2e-4)
-    assert rows["x1"]["se"] == pytest.approx(se_ref[1], abs=2e-4)
-    # parameter recovery
-    assert abs(rows["x1"]["coef"] - 0.8) < 0.1
-    assert abs(rows["x2"]["coef"] + 0.5) < 0.1
-    # NB SEs exceed the Poisson SEs the clumped data would understate
-    from econdatapipeline_spark.operators.glm import poisson_glm
-
-    prow = {r["param"]: r for r in poisson_glm(df, "y", ["x1", "x2"]).collect()}
-    assert rows["x1"]["se"] > prow["x1"]["se"] * 1.15
-
-
-def test_negbin_small_alpha_matches_poisson(spark):
-    from econdatapipeline_spark.operators.glm import negbin_glm, poisson_glm
-
-    rng = np.random.RandomState(33)
-    n = 1500
-    x = np.round(rng.uniform(0, 1.5, n), 3)
-    y = rng.poisson(np.exp(0.3 + 0.6 * x))
-    df = spark.createDataFrame(
-        [(int(a), float(b)) for a, b in zip(y, x)], "y long, x double"
-    )
-    nb = {r["param"]: r for r in negbin_glm(df, "y", ["x"], alpha=0.0009765625).collect()}
-    po = {r["param"]: r for r in poisson_glm(df, "y", ["x"]).collect()}
-    # alpha = 2^-10: the NB chain collapses onto Poisson
-    assert nb["x"]["coef"] == pytest.approx(po["x"]["coef"], abs=1e-3)
-    assert nb["x"]["se"] == pytest.approx(po["x"]["se"], rel=2e-3)
-
-    with pytest.raises(ValueError):
-        negbin_glm(df, "y", ["x"], alpha=0.0)
-
-
-# ---------------------------------------------------------------------------
 # adstock_transform
 # ---------------------------------------------------------------------------
 
