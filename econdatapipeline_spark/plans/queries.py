@@ -77,15 +77,15 @@ def stack_datasets(wh: Warehouse, names: list[str]) -> DataFrame:
     concat, main_azure.py:267-269). At 100 TB this IS the warehouse
     layout: one table partitioned by dataset.
     """
-    parts = [
-        wh.read(n).select(
-            F.lit(n).alias("dataset"),
+    def part(name: str) -> DataFrame:
+        df = wh.read(name)
+        return df.select(
+            F.lit(name).alias("dataset"),
             F.col("date"),
-            F.col(wh.read(n).columns[1]).cast("double").alias("value"),
+            F.col(df.columns[1]).cast("double").alias("value"),
         )
-        for n in names
-    ]
-    return reduce(lambda a, b: a.unionByName(b), parts)
+
+    return reduce(lambda a, b: a.unionByName(b), map(part, names))
 
 
 def export_wide(wh: Warehouse, names: list[str]) -> DataFrame:

@@ -10,15 +10,23 @@ with a directory of Parquet tables:
 Design notes for scale: dataset tables are rewritten atomically per
 merge (datasets are independent, as in the reference where each is its
 own Azure table); the revision log is append-only so the audit path
-never does read-modify-write; reads go through ``spark.read.parquet``
+never does read-modify-write; reads go through Spark's parquet source
 so Catalyst pushes predicates into row-group stats (the Spark analog of
 the reference's server-side OData filters, azure_connector.py:244-266).
 At 100 TB a dataset table would additionally be partitioned by year —
 ``write_dataset`` accepts ``partition_cols`` for that.
+
+Every read hands Spark a schema, so building a read frame launches no
+Spark job. Tables with a fixed schema (revision log, watermarks) pass
+it from the registry. Dataset tables and snapshots pass the schema
+Spark stored in the footer of the file its own inference would open
+(``_footer_schema``); where Spark would infer some other way, the read
+is a plain ``spark.read.parquet``.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import threading
@@ -30,6 +38,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from econdatapipeline_spark.registry import (
     METADATA_SCHEMA,
@@ -40,6 +49,49 @@ from econdatapipeline_spark.registry import (
 
 _EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 _MICROSECOND = timedelta(microseconds=1)
+# the footer key under which Spark's parquet writer stores the exact
+# StructType it wrote (ParquetReadSupport.SPARK_METADATA_KEY)
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+_SUMMARY_FILES = ("_metadata", "_common_metadata")
+
+
+def _listed(name: str) -> bool:
+    """Whether Spark's file index lists a file or directory of this
+    name (InMemoryFileIndex.shouldFilterOutPathName)."""
+    if name.startswith(_SUMMARY_FILES):
+        return True
+    return not (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The data schema Spark's parquet inference returns for the table
+    at ``path``, read on the driver with pyarrow, or None where Spark
+    would find it some other way (see ``Warehouse.read``).
+
+    Without summary files or mergeSchema, Spark opens the first listed
+    data file by sorted path (ParquetUtils.splitFiles) and returns the
+    schema stored under its key in that footer unchanged
+    (readSchemaFromFooter).
+    """
+    files = []
+    for dirpath, dirnames, filenames in os.walk(path):
+        dirnames[:] = [d for d in dirnames if _listed(d)]
+        for name in filenames:
+            if name in _SUMMARY_FILES:
+                return None
+            if _listed(name):
+                files.append(os.path.join(dirpath, name))
+    if not files:
+        return None
+    try:
+        raw = (pq.read_schema(min(files)).metadata or {}).get(_SPARK_SCHEMA_KEY)
+        return StructType.fromJson(json.loads(raw)) if raw else None
+    except (OSError, ValueError, KeyError, TypeError):
+        return None
 
 
 class Warehouse:
@@ -99,11 +151,31 @@ class Warehouse:
         at 100 TB pay that only on tables that actually evolve (the
         revision log when a new audit column lands), and compact after
         an evolution so the steady state is single-schema again.
+
+        Without it the schema is the one Spark's inference would pick:
+        the Spark schema stored in the footer of the table's first data
+        file, read on the driver (``_footer_schema``). Spark gets it
+        through ``spark.read.schema``, so building the frame launches
+        no job; inferring it would cost one job per read. A table whose
+        schema Spark would find some other way (``merge_schema``, the
+        session's ``spark.sql.parquet.mergeSchema``, summary files, a
+        first file not written by Spark, a missing or empty table) is
+        read with plain ``spark.read.parquet``: same schema, same
+        errors as before.
         """
+        return self._read_parquet(self.path(table), merge_schema)
+
+    def _read_parquet(self, path: str, merge_schema: bool = False) -> DataFrame:
+        """``spark.read.parquet(path)`` with the schema Spark would infer
+        handed over up front when the footer gives it (see ``read``)."""
         r = self.spark.read
         if merge_schema:
-            r = r.option("mergeSchema", "true")
-        return r.parquet(self.path(table))
+            return r.option("mergeSchema", "true").parquet(path)
+        if self.spark.conf.get("spark.sql.parquet.mergeSchema").lower() != "true":
+            schema = _footer_schema(path)
+            if schema is not None:
+                r = r.schema(schema)
+        return r.parquet(path)
 
     def read_or_empty(self, table: str, schema) -> DataFrame:
         """Read a table with the caller's schema, or an empty frame of it.
@@ -244,13 +316,14 @@ class Warehouse:
         """Time travel: the table exactly as it was before the overwrite
         that created snapshot ``version``. Pair with
         ``operators.diff.snapshot_diff`` for storage-level CDC between
-        any two versions."""
+        any two versions. A snapshot is a renamed table directory, so
+        it reads with the footer schema as ``read`` does: no job."""
         p = os.path.join(self._history_dir(table), f"v{version}")
         if not os.path.isdir(p):
             raise FileNotFoundError(
                 f"no snapshot v{version} for {table!r}; have {self.list_snapshots(table)}"
             )
-        return self.spark.read.parquet(p)
+        return self._read_parquet(p)
 
     def delete_rows(self, table: str, predicate) -> int:
         """Targeted hard delete (right-to-be-forgotten): rewrite the
@@ -658,14 +731,19 @@ class Warehouse:
         return None
 
     def watermarks(self) -> DataFrame:
-        """Full registry view (dataset, last_run) via partition discovery."""
+        """Full registry view (dataset, last_run) via partition discovery.
+
+        Read with the registry's schema, so no inference job runs and
+        ``dataset`` is the directory name as written (``007`` stays a
+        string); INT96 partitions Spark wrote earlier read as
+        timestamps like the pyarrow-written ones."""
         p = self.path(METADATA_TABLE)
         if not os.path.isdir(p) or not any(
             e.startswith("dataset=") for e in os.listdir(p)
         ):
             return self._empty(METADATA_SCHEMA)
-        return self.spark.read.parquet(p).select(
-            F.col("dataset").cast("string"), "last_run"
+        return self.spark.read.schema(METADATA_SCHEMA).parquet(p).select(
+            *METADATA_SCHEMA.fieldNames()
         )
 
     def should_update(self, dataset: str, update_frequency_hours: float = 24.0,

@@ -11,9 +11,14 @@ import datetime as dt
 import os
 import random
 from collections import Counter
+from decimal import Decimal
+from functools import partial
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F  # noqa: F401
+from pyspark.sql import types as T
 
 from econdatapipeline_spark.operators.merge import DEFAULT_TOLERANCE, smart_update
 from econdatapipeline_spark.sources.warehouse import Warehouse
@@ -426,6 +431,141 @@ def test_known_schema_reads_launch_no_inference_job(spark, tmp_path):
     # the watermark is read with pyarrow: no Spark job at all
     last, n_jobs = _jobs_in(spark, "get-last-run", lambda: wh.get_last_run("ds"))
     assert last == RUN_TS and n_jobs == 0
+    # the registry view reads with the registry's schema: no inference
+    # job, and a numeric-looking dataset name stays as written (type
+    # inference of an all-numeric registry read "007" back as "7")
+    wh.update_last_run("007", RUN_TS)
+    marks, n_jobs = _jobs_in(spark, "watermarks", wh.watermarks)
+    assert n_jobs == 0
+    assert sorted(map(tuple, marks.collect())) == [("007", RUN_TS), ("ds", RUN_TS)]
+    numeric = Warehouse(spark, str(tmp_path / "numeric"))
+    numeric.update_last_run("007", RUN_TS)
+    assert [tuple(r) for r in numeric.watermarks().collect()] == [("007", RUN_TS)]
+
+
+# -- reads with the schema from the table's footer -------------------------
+
+def _appended(spark, wh, extra_first):
+    """Table ``t``: two Spark-written files of two schemas, renamed so
+    the one with the ``extra`` column sorts first or last by path."""
+    wh.write_dataset(_df(spark, [(dt.date(2025, 1, 1), 1.0)]).coalesce(1), "t")
+    wh.append(_df(spark, [(dt.date(2025, 2, 1), 2.0, 3.0)], ("value", "extra")).coalesce(1), "t")
+    p = wh.path("t")
+    for f in [f for f in os.listdir(p) if f.endswith(".parquet")]:
+        wide = "extra" in pq.read_schema(os.path.join(p, f)).names
+        os.rename(os.path.join(p, f), os.path.join(p, f"part-{int(wide != extra_first)}.parquet"))
+    return p
+
+
+def _plain(spark, wh):
+    wh.write_dataset(_df(spark, [(dt.date(2025, m, 1), float(m)) for m in (1, 2, 3)]), "t")
+    return wh.path("t")
+
+
+def _partitioned(spark, wh):
+    df = spark.createDataFrame([(dt.date(2025, m, 1), float(m), m % 3 * 5) for m in range(1, 7)],
+                               "date date, value double, k int")
+    wh.write_dataset(df, "t", partition_cols=["k"])  # k=0, k=10, k=5
+    return wh.path("t")
+
+
+def _typed(spark, wh):
+    schema = T.StructType([
+        T.StructField("d", T.DecimalType(28, 12), False),
+        T.StructField("ts", T.TimestampType(), False),
+        T.StructField("s", T.StringType(), True),
+    ])
+    rows = [(Decimal("1234.000000000001"), dt.datetime(2025, 1, 1, 8, 30), None),
+            (Decimal("-0.5"), dt.datetime(2025, 2, 1), "b")]
+    wh.write_dataset(spark.createDataFrame(rows, schema), "t")
+    return wh.path("t")
+
+
+def _snapshot(spark, wh):
+    wh.write_dataset(_df(spark, [(dt.date(2025, 1, 1), 1.0)]), "t")
+    wh.write_dataset(_df(spark, [(dt.date(2025, 1, 1), 2.0)]), "t")
+    return os.path.join(wh._history_dir("t"), "v1")
+
+
+FOOTER_TABLES = {
+    "plain": _plain,
+    "partitioned": _partitioned,
+    "typed": _typed,
+    "appended-extra-first": partial(_appended, extra_first=True),
+    "appended-extra-last": partial(_appended, extra_first=False),
+    "snapshot": _snapshot,
+}
+
+
+@pytest.mark.parametrize("kind", list(FOOTER_TABLES))
+def test_footer_schema_reads_launch_no_job(spark, tmp_path, kind):
+    """Warehouse reads hand Spark the schema its inference would pick,
+    so building them launches no job; schema and rows equal
+    ``spark.read.parquet``'s, whose inference opens the first data
+    file by sorted path."""
+    wh = Warehouse(spark, str(tmp_path), history_depth=1)
+    path = FOOTER_TABLES[kind](spark, wh)
+    read = (lambda: wh.read_snapshot("t", 1)) if kind == "snapshot" else (lambda: wh.read("t"))
+    df, n_jobs = _jobs_in(spark, f"footer-read-{kind}", read)
+    assert n_jobs == 0
+    ref = spark.read.parquet(path)
+    assert df.schema == ref.schema
+    assert Counter(map(tuple, df.collect())) == Counter(map(tuple, ref.collect()))
+    if kind.startswith("appended"):
+        assert ("extra" in df.columns) == kind.endswith("first")
+
+
+@pytest.mark.parametrize("layout", ["pyarrow", "summary"])
+def test_non_spark_schemas_read_as_inferred(spark, tmp_path, layout):
+    """A first file without Spark's schema key (pyarrow-written), or a
+    ``_common_metadata`` summary, leaves the schema to Spark's
+    inference: the read equals ``spark.read.parquet``'s."""
+    wh = Warehouse(spark, str(tmp_path))
+    p = wh.path("t")
+    if layout == "pyarrow":
+        os.makedirs(p)
+        pq.write_table(pa.table({"date": [dt.date(2025, 1, 1)], "value": [1.0],
+                                 "n": pa.array([7], pa.int16())}), os.path.join(p, "part-0.parquet"))
+    else:
+        _plain(spark, wh)
+        pq.write_metadata(pa.schema([("date", pa.date32())]), os.path.join(p, "_common_metadata"))
+    df, ref = wh.read("t"), spark.read.parquet(p)
+    assert df.schema == ref.schema
+    assert df.columns == (["date", "value", "n"] if layout == "pyarrow" else ["date"])
+    assert Counter(map(tuple, df.collect())) == Counter(map(tuple, ref.collect()))
+
+
+def test_missing_and_empty_tables_raise_as_before(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    wh = Warehouse(spark, str(tmp_path))
+    wh.initialize(["empty"])
+    for table, condition in (("missing", "PATH_NOT_FOUND"), ("empty", "UNABLE_TO_INFER_SCHEMA")):
+        for read in (lambda: wh.read(table), lambda: spark.read.parquet(wh.path(table))):
+            with pytest.raises(AnalysisException) as err:
+                read()
+            assert err.value.getCondition() == condition
+
+
+@pytest.mark.parametrize("extra_first", [True, False])
+def test_merge_schema_reads_union_every_file(spark, tmp_path, extra_first):
+    """``merge_schema=True``, or the session's parquet mergeSchema,
+    reads the union of both files' columns, wherever the extra one
+    sorts."""
+    wh = Warehouse(spark, str(tmp_path))
+    p = _appended(spark, wh, extra_first)
+    ref = spark.read.option("mergeSchema", "true").parquet(p)
+    assert wh.read("t", merge_schema=True).schema == ref.schema
+    key = "spark.sql.parquet.mergeSchema"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        df = wh.read("t")
+    finally:
+        spark.conf.set(key, old)
+    assert df.schema == ref.schema and "extra" in df.columns
+    assert Counter(map(tuple, df.collect())) == {(dt.date(2025, 1, 1), 1.0, None): 1,
+                                                 (dt.date(2025, 2, 1), 2.0, 3.0): 1}
 
 
 def test_refresh_job_budget(spark, tmp_path):

@@ -74,6 +74,26 @@ def test_resample_and_stats(spark, wh):
     assert stats["unemploymentrate"]["max_value"] == 50.0
 
 
+def test_building_reads_launches_no_job(spark, wh):
+    """Building (not collecting) each read-surface query launches no
+    Spark job: the warehouse hands every read its schema, and the
+    cross-dataset ops read each table once."""
+    from test_merge import _jobs_in
+
+    names = ["autosales", "unemploymentrate"]
+    builds = {
+        "read_dataset": lambda: Q.read_dataset(wh, "autosales", date_from=dt.date(2025, 3, 1)),
+        "latest_values": lambda: Q.latest_values(wh, "autosales", n=2),
+        "point_lookup": lambda: wh.point_lookup("autosales", dt.date(2025, 3, 1)),
+        "get_revision_history": lambda: Q.get_revision_history(wh, dataset="autosales", limit=5),
+        "export_wide": lambda: Q.export_wide(wh, names),
+        "dataset_stats": lambda: Q.dataset_stats(wh, names),
+        "resample_last": lambda: Q.resample_last(wh, names, freq="quarter"),
+    }
+    jobs = {op: _jobs_in(spark, f"build-{op}", build)[1] for op, build in builds.items()}
+    assert jobs == dict.fromkeys(builds, 0)
+
+
 def test_revision_history_plan_is_topk(spark, wh):
     plan = Q.get_revision_history(wh, dataset="autosales", limit=5)._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
