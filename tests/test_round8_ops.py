@@ -423,57 +423,65 @@ def test_log_rank_k_two_sample_equals_log_rank(spark):
 
 
 def test_log_rank_k_three_sample_matches_python_reference(spark):
-    """k=3 chi2 equals a pure-python full-covariance Mantel-Haenszel
-    replay (the lifelines multivariate_logrank_test formula)."""
+    """k=3 and k=4 chi2 equal a pure-python full-covariance
+    Mantel-Haenszel replay (the lifelines multivariate_logrank_test
+    formula): k=3 runs the explicit Cramer form, k=4 the fixed-order
+    Gaussian elimination."""
     from econdatapipeline_spark.operators.survival import log_rank_k
 
-    rows = _surv_rows(k=3)
-    df = spark.createDataFrame(rows, "grp string, duration long, event int")
-    out = log_rank_k(df, "grp", ["g0", "g1", "g2"]).collect()
-
-    # python reference
     import numpy as np
 
-    groups = ["g0", "g1", "g2"]
-    data = [(groups.index(g), d, e) for g, d, e in rows]
-    times = sorted({d for _, d, e in data if e == 1})
-    z = np.zeros(2)
-    vm = np.zeros((2, 2))
-    exp = np.zeros(3)
-    for t in times:
-        at_risk = [r for r in data if r[1] >= t]
-        dead = [r for r in data if r[1] == t and r[2] == 1]
-        n_t = len(at_risk)
-        d_t = len(dead)
-        if d_t == 0:
-            continue
-        ng = np.array(
-            [sum(1 for r in at_risk if r[0] == g) for g in range(3)],
-            dtype=float,
+    for k in (3, 4):
+        rows = _surv_rows(k=k)
+        df = spark.createDataFrame(
+            rows, "grp string, duration long, event int"
         )
-        dg = np.array(
-            [sum(1 for r in dead if r[0] == g) for g in range(3)],
-            dtype=float,
-        )
-        p = ng / n_t
-        exp += d_t * p
-        z += dg[:2] - d_t * p[:2]
-        c = d_t * (n_t - d_t) / (n_t - 1) if n_t > 1 else 0.0
-        for i in range(2):
-            for j in range(2):
-                delta = 1.0 if i == j else 0.0
-                vm[i][j] += c * (delta * p[i] - p[i] * p[j])
-    chi2_ref = float(z @ np.linalg.solve(vm, z))
-    assert out[0]["chi2"] == pytest.approx(chi2_ref, abs=2e-5)
-    by = {r["grp"]: r for r in out}
-    for g in range(3):
-        assert by[f"g{g}"]["expected"] == pytest.approx(
-            exp[g], abs=2e-5
-        )
-        assert by[f"g{g}"]["observed"] == sum(
-            1 for gg, d, e in rows if gg == f"g{g}" and e == 1
-        )
-    assert out[0]["dof"] == 2
+        groups = [f"g{g}" for g in range(k)]
+        out = log_rank_k(df, "grp", groups).collect()
+
+        # python reference
+        data = [(groups.index(g), d, e) for g, d, e in rows]
+        times = sorted({d for _, d, e in data if e == 1})
+        z = np.zeros(k - 1)
+        vm = np.zeros((k - 1, k - 1))
+        exp = np.zeros(k)
+        for t in times:
+            at_risk = [r for r in data if r[1] >= t]
+            dead = [r for r in data if r[1] == t and r[2] == 1]
+            n_t = len(at_risk)
+            d_t = len(dead)
+            if d_t == 0:
+                continue
+            ng = np.array(
+                [sum(1 for r in at_risk if r[0] == g) for g in range(k)],
+                dtype=float,
+            )
+            dg = np.array(
+                [sum(1 for r in dead if r[0] == g) for g in range(k)],
+                dtype=float,
+            )
+            p = ng / n_t
+            exp += d_t * p
+            z += dg[: k - 1] - d_t * p[: k - 1]
+            c = d_t * (n_t - d_t) / (n_t - 1) if n_t > 1 else 0.0
+            for i in range(k - 1):
+                for j in range(k - 1):
+                    delta = 1.0 if i == j else 0.0
+                    vm[i][j] += c * (delta * p[i] - p[i] * p[j])
+        chi2_ref = float(z @ np.linalg.solve(vm, z))
+        assert out[0]["chi2"] == pytest.approx(chi2_ref, abs=2e-5), k
+        by = {r["grp"]: r for r in out}
+        for g in range(k):
+            assert by[f"g{g}"]["expected"] == pytest.approx(
+                exp[g], abs=2e-5
+            )
+            assert by[f"g{g}"]["observed"] == sum(
+                1 for gg, d, e in rows if gg == f"g{g}" and e == 1
+            )
+            assert by[f"g{g}"]["n"] == sum(
+                1 for gg, _, _ in rows if gg == f"g{g}"
+            )
+        assert out[0]["dof"] == k - 1
     with pytest.raises(ValueError):
         log_rank_k(df, "grp", ["g0"])
     with pytest.raises(ValueError):

@@ -934,6 +934,19 @@ def test_cox_ph_check_degenerate(spark):
     assert row["chi2_ph"] is None and row["beta"] is None
 
 
+def test_cox_ph_check_rejects_nonbinary_covariate(spark):
+    """A covariate outside {0, 1} raises as in cox_ph instead of
+    fitting a made-up binary contrast."""
+    from econdatapipeline_spark.operators.survival import cox_ph_check
+
+    df = spark.createDataFrame(
+        [(5, 1, 0), (7, 1, 1), (9, 0, 2), (11, 1, 0)],
+        "duration int, event int, x int",
+    )
+    with pytest.raises(Exception, match="binary"):
+        cox_ph_check(df, "duration", "event", "x").collect()
+
+
 # ---------------------------------------------------------------------------
 # levene_test / cochran_armitage / partial_corr
 # ---------------------------------------------------------------------------

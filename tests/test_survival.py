@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import pytest
+
 from econdatapipeline_spark.operators.survival import (
+    fleming_harrington,
     kaplan_meier,
     log_rank,
     median_survival,
@@ -95,6 +98,17 @@ def test_log_rank_censoring_shrinks_risk_sets(spark):
     assert out["observed_a"] == 1
     assert abs(out["expected_a"] - 1.0) < 1e-6
     assert out["chi2"] == 0.0
+
+
+def test_two_group_tests_reject_equal_group_labels(spark):
+    # comparing a group with itself has no contrast: log_rank used to
+    # return chi2 = 0 (n_b = 0) and fleming_harrington NULL; both now
+    # raise as rmst_diff does
+    rows = [("A", 1, 1), ("A", 2, 1), ("B", 2, 1), ("B", 3, 1)]
+    df = spark.createDataFrame(rows, G_SCHEMA)
+    for test in (log_rank, fleming_harrington):
+        with pytest.raises(ValueError, match="groups must differ"):
+            test(df, "grp", "A", "A")
 
 
 def test_nelson_aalen_textbook(spark):
